@@ -40,6 +40,24 @@ final case class CnicsInputs(
     observationsFilter: String,
     standardDiagnoses: Seq[String])
 
+/** What one [[CnicsPipeline.sync]] reconciles against, and how it
+  * writes (see `sync` for each case's store read). */
+sealed trait Scope
+object Scope {
+  sealed trait Write
+  /** Each type's actions go to its own `applyActions` call. */
+  case object PerType extends Write
+  /** Every type's actions go to one `applyActionsMixed` call. */
+  case object OneJob extends Write
+
+  /** The site's whole cohort. */
+  final case class Full(write: Write = PerType) extends Scope
+  /** A dirty set of site-patient ids: a one-column frame. */
+  final case class Keys(keys: DataFrame) extends Scope
+  /** Manifest-diffed: per-type manifests at `<root>/<Type>/manifest`. */
+  final case class Manifest(root: String) extends Scope
+}
+
 /** @param debugDir when set, every reconcile dumps its full action
   *   frame — (key, id, merge_action, json) per resource — to
   *   `<debugDir>/<resourceType>` parquet before the sink applies it.
@@ -160,45 +178,24 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
         col("Race"), col("Hispanic"), col("Sex"))).as("json"))
   }
 
-  /** Generic reconcile+write for one resource type. Child types pass
-    * the cohort's subject ids so the store side is the distributed
-    * per-subject snapshot (A7) — never a full-store driver pager — and
-    * so store∖source deletes are scoped to this cohort's subjects
-    * (resources owned by other sites/cohorts are untouchable). */
+  /** Reconcile + write of one resource type: classify `source0`
+    * against the store `snapshot` with a full-outer merge on `key`,
+    * hand the actions to `write`, and return its counts plus the E5
+    * dup-key values (error-channel-sized; [[manifestPass]] must keep
+    * those keys OUT of its manifest or the error would be masked
+    * forever). With a `keyScope` the source is semi-joined to it too,
+    * so keys outside the scope are neither writable nor deletable;
+    * semi joins keep the scope frame un-duplicated, and Catalyst
+    * broadcasts it when dimension-sized. */
   private def reconcile(resourceType: String, source0: DataFrame,
-      subjects: Option[DataFrame] = None,
-      identifierSystem: Option[String] = None,
-      keyScope: Option[DataFrame] = None): Map[String, Long] =
-    reconcileDetail(resourceType, source0, subjects, identifierSystem, keyScope)._1
-
-  /** [[reconcile]] plus the E5 dup-key values (error-channel-sized;
-    * the incremental pass must keep those keys OUT of its manifest or
-    * the error would be masked forever — see incrementalPass). */
-  private def reconcileDetail(resourceType: String, source0: DataFrame,
-      subjects: Option[DataFrame] = None,
-      identifierSystem: Option[String] = None,
-      keyScope: Option[DataFrame] = None,
-      applySink: Option[DataFrame => Map[String, Long]] = None): (Map[String, Long], Seq[String]) = {
-    // Incremental mode: both sides of the merge are key-scoped to the
-    // dirty set, so unchanged keys are invisible to the classify —
-    // neither writable nor deletable. Semi joins keep the scope frame
-    // un-duplicated; Catalyst broadcasts it when dimension-sized.
+      keyScope: Option[DataFrame], snapshot: => DataFrame,
+      write: (String, DataFrame) => Map[String, Long]): (Map[String, Long], Seq[String]) = {
     val source = keyScope
       .map(ks => source0.join(ks, Seq("key"), "left_semi"))
       .getOrElse(source0)
     // persisted: the dup-key scan below and the merge both read it, and
-    // for HTTP stores recomputing means re-fetching the whole snapshot.
-    // With a keyScope (and no subject scope) the store read itself is
-    // key-targeted — snapshotForKeys costs O(dirty) on an HTTP wire
-    // instead of a full scoped page walk.
-    val snapAll = (subjects match {
-      case Some(subj) =>
-        val snap = store.snapshotForSubjects(spark, resourceType, subj)
-        keyScope.map(ks => snap.join(ks, Seq("key"), "left_semi")).getOrElse(snap)
-      case None => keyScope
-        .map(ks => store.snapshotForKeys(spark, resourceType, ks, identifierSystem))
-        .getOrElse(store.snapshot(spark, resourceType, identifierSystem))
-    }).filter(col("key").isNotNull)
+    // for HTTP stores recomputing means re-fetching the whole snapshot
+    val snapAll = snapshot.filter(col("key").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // E5 — multiple store resources sharing one business key: the
@@ -208,9 +205,9 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       val dupKeys = snapAll.groupBy("key").agg(count(lit(1)).as("__n"))
         .filter(col("__n") > 1).select("key")
       // error-channel-sized by construction (only keys the store holds
-      // twice); collected once so the incremental manifest can exclude
-      // them and callers can count them without a second job. CAPPED:
-      // a misconfigured store that duplicates a large fraction of its
+      // twice); collected once so the manifest can exclude them and
+      // callers can count them without a second job. CAPPED: a
+      // misconfigured store that duplicates a large fraction of its
       // keys would otherwise turn this into an unbounded driver
       // collect feeding a huge isin() literal tree — past the cap the
       // run fails loudly (the store needs repair, not a bigger merge).
@@ -241,11 +238,7 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
             .write.mode("overwrite").parquet(s"$dir/$resourceType")
           pinned
       }
-      // applySink (runTransactional's deferral hook): the WRITE is
-      // handed elsewhere; reads/classify above ran normally
-      val counts = applySink
-        .getOrElse((df: DataFrame) => store.applyActions(resourceType, df))
-        .apply(actions.select("key", "id", "json", "merge_action"))
+      val counts = write(resourceType, actions.select("key", "id", "json", "merge_action"))
       (if (nDup > 0) counts + ("error" -> nDup) else counts, dupKeyValues)
     } finally { snapAll.unpersist(); () }
   }
@@ -267,78 +260,110 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
   def sitePatientIdSystem: String =
     s"https://cnics.cirg.washington.edu/site-patient-id/$siteLower"
 
-  def runPatients(limit: Int = Int.MaxValue): Map[String, Long] =
-    reconcile("Patient", patientResources(limit),
-      identifierSystem = Some(sitePatientIdSystem))
+  /** A child type's site-scoped record-id identifier system
+    * (`.../{diagnosis,medication,lab}/site-record-id/<site>`). */
+  private def recordIdSystem(kind: String): String =
+    s"https://cnics.cirg.washington.edu/$kind/site-record-id/$siteLower"
 
-  /** Targeted Patient sync for an explicit dirty-key set — the
-    * CDC-driven sibling of [[runPatientsIncremental]] (which derives
-    * its own dirty set by hashing the full assembly). Here the CALLER
-    * knows which site-patient ids changed (a Debezium-style CDC feed,
-    * or [[graft.streaming.CnicsStreams.patientSync]] micro-batches),
-    * so the ASSEMBLY itself is scoped: the patient table semi-joins
-    * the keys before the demographic/session/crosswalk/PRO fan-out,
-    * and a 10-key delta assembles 10 patients — not the site. Wire
-    * cost and assembly cost are both O(batch). A scoped key whose
-    * cohort row vanished still DELETEs (the key-scoped reconcile sees
-    * it store-side only). `keys`: one column of site-patient ids. */
-  def runPatientsForKeys(keys: DataFrame): Map[String, Long] = {
-    val ks = dirtyKeys(keys)
-    scopedTo(ks).reconcile("Patient", scopedTo(ks).patientResources(),
-      identifierSystem = Some(sitePatientIdSystem),
-      keyScope = Some(ks.select(col("site_pat_id").as("key"))))
-  }
-
-  /** Zero-filled audit accumulation shared by run/runForKeys/
-    * runIncremental (insert/update/delete always present; the E5
-    * error channel only when duplicates were routed out). */
-  private def addCounts(audit: Map[(String, String), Long], rt: String,
-      counts: Map[String, Long]): Map[(String, String), Long] = {
-    val base = Seq("insert", "update", "delete").foldLeft(audit) { (m, a) =>
-      m + ((rt, a) -> counts.getOrElse(a, 0L))
+  /** The sync entry point. Reconciles the requested `types`
+    * (resource-list names, [[CnicsPipeline.AllTypes]]) Patient first
+    * and returns the reference's zero-filled 12-counter audit (E1:
+    * {Patient, Condition, MedicationRequest, Observation} × {insert,
+    * update, delete}), plus a (type, `error`) counter when the store
+    * holds duplicated business keys (E5). `limit` caps the cohort.
+    *
+    * `scope` picks the store read and the write:
+    *  - [[Scope.Full]] — the site's cohort. Patient reads the
+    *    site-scoped snapshot; children read the distributed
+    *    per-subject snapshot of the cohort (A7), so store∖source
+    *    deletes stay within this cohort's subjects. `OneJob` runs the
+    *    same reads and classifies but defers every write into one
+    *    [[graft.sinks.FhirStore.applyActionsMixed]] call — on
+    *    [[graft.sinks.HttpFhirStore]] one job of mixed-type Bundles,
+    *    with no parent→child stage barrier. Legal because ids are
+    *    client-assigned; the end state equals `PerType`'s (pinned by
+    *    `cnics_http_tx_audit` against a strict-reference server).
+    *  - [[Scope.Keys]] — a caller-known dirty set of site-patient ids
+    *    (a CDC feed, [[graft.streaming.CnicsStreams.sync]]). The
+    *    inputs are semi-join-scoped first, so assembly and wire are
+    *    both O(batch). Patient reads `snapshotForKeys` and is
+    *    key-scoped: a key whose cohort row vanished still DELETEs.
+    *    Children read the scoped cohort's subject snapshot; children of
+    *    a departed patient go with the Patient DELETE's
+    *    `?_cascade=delete` (cnics_to_fhir.py:333).
+    *  - [[Scope.Manifest]] — every type through its own (key, hash)
+    *    manifest at `<root>/<Type>/manifest` ([[manifestPass]]). The
+    *    source is assembled in full, but only keys whose JSON changed
+    *    reach the merge, and the store read is the key-targeted
+    *    `snapshotForKeys` under the type's site-scoped identifier
+    *    system: a K-row delta costs O(K) reads and writes. A key that
+    *    left the source is remembered and deletes explicitly, which
+    *    converges to the same end state as the Patient cascade. This
+    *    replaces the reference's PUT-always steady state
+    *    (cnics_to_fhir.py:548-584); clean keys are never read, so run a
+    *    `Full` sync periodically as the integrity sweep. */
+  def sync(types: Set[String] = CnicsPipeline.AllTypes, scope: Scope = Scope.Full(),
+      limit: Int = Int.MaxValue): Map[(String, String), Long] = {
+    val (pipe, patientKeys) = scope match {
+      case Scope.Keys(keys) =>
+        val ks = keys.select(col(keys.columns.head).cast("string").as("site_pat_id"))
+          .distinct()
+        (scopedTo(ks), Some(ks.select(col("site_pat_id").as("key"))))
+      case _ => (this, None)
     }
-    counts.get("error").fold(base)(n => base + ((rt, "error") -> n))
-  }
-
-  /** The full targeted job for a dirty-key set — every resource type,
-    * not just Patient. Children ride the scoped pipeline's OWN
-    * subject-scoped reconcile ([[reconcile]] `subjects`): the child
-    * snapshot fetches only the scoped cohort's subjects, so child
-    * deletes are bounded to the dirty patients exactly like the full
-    * run bounds them to the cohort. Children of a patient that LEFT
-    * the cohort are not reachable through the child pass (no cohort
-    * row → no subject) — they are removed by the Patient DELETE's
-    * `?_cascade=delete` (reference parity, cnics_to_fhir.py:333). */
-  def runForKeys(keys: DataFrame,
-      resourceList: Set[String] =
-        Set("patients", "conditions", "medicationrequests", "observations"))
-      : Map[(String, String), Long] = {
-    val ks = dirtyKeys(keys)
-    val scoped = scopedTo(ks)
-    var audit = Map[(String, String), Long]()
-    def add(rt: String, counts: Map[String, Long]): Unit = {
-      audit = addCounts(audit, rt, counts)
+    lazy val ids = pipe.cohortIds(limit)
+    val table = Seq(
+      ("Patient", "patients", sitePatientIdSystem, () => pipe.patientResources(limit)),
+      ("Condition", "conditions", recordIdSystem("diagnosis"),
+        () => pipe.conditionResources(ids)),
+      ("MedicationRequest", "medicationrequests", recordIdSystem("medication"),
+        () => pipe.medicationResources(ids)),
+      ("Observation", "observations", recordIdSystem("lab"),
+        () => pipe.observationResources(ids)))
+    val deferred = scala.collection.mutable.ListBuffer.empty[(String, DataFrame)]
+    val write: (String, DataFrame) => Map[String, Long] = scope match {
+      // materialized NOW (eager checkpoint): reconcile unpersists its
+      // snapshot when it returns, and the deferred frame must survive that
+      case Scope.Full(Scope.OneJob) => (rt, df) => {
+        deferred += ((rt, df.localCheckpoint(true))); Map.empty
+      }
+      case _ => store.applyActions
     }
-    if (resourceList("patients"))
-      add("Patient", scoped.reconcile("Patient", scoped.patientResources(),
-        identifierSystem = Some(sitePatientIdSystem),
-        keyScope = Some(ks.select(col("site_pat_id").as("key")))))
-    if (resourceList("conditions")) add("Condition", scoped.runConditions())
-    if (resourceList("medicationrequests"))
-      add("MedicationRequest", scoped.runMedications())
-    if (resourceList("observations")) add("Observation", scoped.runObservations())
-    audit
+    val counts = table.filter(t => types(t._2)).map { case (rt, _, system, source) =>
+      def systemRead(keys: Option[DataFrame]): DataFrame =
+        keys.fold(store.snapshot(spark, rt, Some(system)))(
+          store.snapshotForKeys(spark, rt, _, Some(system)))
+      rt -> (scope match {
+        case Scope.Manifest(root) =>
+          manifestPass(s"$root/$rt", source()) { (cur, dirty) =>
+            reconcile(rt, cur, Some(dirty), systemRead(Some(dirty)), write)
+          }
+        case _ if rt == "Patient" =>
+          reconcile(rt, source(), patientKeys, systemRead(patientKeys), write)._1
+        case _ =>
+          reconcile(rt, source(), None,
+            store.snapshotForSubjects(spark, rt, cohortSubjects(ids)), write)._1
+      })
+    }
+    val written =
+      if (deferred.isEmpty) Map.empty[(String, String), Long]
+      else store.applyActionsMixed(deferred.map { case (rt, df) =>
+        df.select(lit(rt).as("resource_type"),
+          col("key"), col("id"), col("json"), col("merge_action"))
+      }.reduce(_.unionByName(_)))
+    counts.foldLeft(Map.empty[(String, String), Long]) { case (audit, (rt, c)) =>
+      val all = c ++ written.collect { case ((`rt`, a), n) => a -> n }
+      val filled = Seq("insert", "update", "delete")
+        .foldLeft(audit)((m, a) => m + ((rt, a) -> all.getOrElse(a, 0L)))
+      all.get("error").fold(filled)(n => filled + ((rt, "error") -> n))
+    }
   }
-
-  private def dirtyKeys(keys: DataFrame): DataFrame =
-    keys.select(col(keys.columns.head).cast("string").as("site_pat_id"))
-      .distinct()
 
   /** A pipeline whose INPUTS are semi-join-scoped to the dirty keys —
     * the patient table first, then every per-patient table by the
     * scoped PatientIds — so assembly cost is O(batch). The detail
     * tables (diagnosis/medication/lab) are left as-is: their child
-    * pipelines already start from the scoped cohort join
+    * sources already start from the scoped cohort join
     * ([[childSource]]), which prunes them to the scoped patients. */
   private def scopedTo(ks: DataFrame): CnicsPipeline = {
     val pat = in.patient.join(ks.withColumnRenamed("site_pat_id", "__k"),
@@ -354,91 +379,25 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       store, site, debugDir)
   }
 
-  /** Incremental Patient run (extension; see [[Merge.manifestDiff]]).
-    *
-    * The source is still assembled in full — one declarative scan, the
-    * cheap part — but only keys whose assembled JSON differs from the
-    * previous run's `(key, hash)` manifest reach the merge and the
-    * store wire: unchanged patients cost zero HTTP round-trips AND
-    * zero store-snapshot scope (the scoped HTTP snapshot fetches only
-    * the dirty keys' pages). A key that left the cohort is remembered
-    * by the manifest and still DELETEs. This deliberately diverges
-    * from the reference's PUT-always steady state (every run re-PUTs
-    * every patient, cnics_to_fhir.py:548-584) — at a 10⁸-patient site
-    * the steady-state delta is ~0, and re-PUTting the world every
-    * night IS the bottleneck.
-    *
-    * Crash contract: the manifest swings (tmp dir + atomic rename)
-    * only after the store apply returns, so a crash mid-apply leaves
-    * the previous manifest and the next run re-finds the same dirty
-    * keys; PUT-with-id upserts and DELETEs replay idempotently. */
-  def runPatientsIncremental(manifestDir: String,
-      limit: Int = Int.MaxValue): Map[String, Long] =
-    incrementalPass("Patient", patientResources(limit),
-      Some(sitePatientIdSystem), manifestDir)
-
-  /** The full incremental job: every resource type through its own
-    * (key, hash) manifest under `manifestDir/<Type>`. The child
-    * passes differ structurally from the full run: instead of the
-    * subject-scoped snapshot (O(cohort) reads) they use the
-    * KEY-TARGETED snapshot with their site-scoped identifier system
-    * (`.../{diagnosis,medication,lab}/site-record-id/<site>`), so a
-    * K-row delta costs O(K) store reads AND writes. A child row that
-    * vanished from the source — including because its patient left
-    * the cohort — is remembered by the manifest and deletes
-    * explicitly, which converges to the same end state as the Patient
-    * cascade (the two paths are idempotent against each other).
-    *
-    * Blind spot by design: clean keys are never read, so store-side
-    * corruption of an UNCHANGED key (another writer, a restored
-    * backup) stays invisible until that key next changes. Run the
-    * full job periodically as an integrity sweep — the incremental
-    * mode replaces the nightly re-PUT, not the audit. */
-  def runIncremental(manifestDir: String,
-      resourceList: Set[String] =
-        Set("patients", "conditions", "medicationrequests", "observations"),
-      limit: Int = Int.MaxValue): Map[(String, String), Long] = {
-    var audit = Map[(String, String), Long]()
-    def add(rt: String, counts: Map[String, Long]): Unit = {
-      audit = addCounts(audit, rt, counts)
-    }
-    lazy val ids = cohortIds(limit)
-    def childSystem(kind: String) =
-      s"https://cnics.cirg.washington.edu/$kind/site-record-id/$siteLower"
-    if (resourceList("patients"))
-      add("Patient", incrementalPass("Patient", patientResources(limit),
-        Some(sitePatientIdSystem), s"$manifestDir/Patient"))
-    if (resourceList("conditions"))
-      add("Condition", incrementalPass("Condition", conditionResources(ids),
-        Some(childSystem("diagnosis")), s"$manifestDir/Condition"))
-    if (resourceList("medicationrequests"))
-      add("MedicationRequest", incrementalPass("MedicationRequest",
-        medicationResources(ids), Some(childSystem("medication")),
-        s"$manifestDir/MedicationRequest"))
-    if (resourceList("observations"))
-      add("Observation", incrementalPass("Observation",
-        observationResources(ids), Some(childSystem("lab")),
-        s"$manifestDir/Observation"))
-    audit
-  }
-
-  /** One manifest-diffed reconcile: diff `cur` against the previous
-    * manifest, key-scope the merge and the store read to the dirty
-    * set, and swing the manifest (tmp write + bak swap) only after the
-    * store apply succeeds — a crash mid-apply leaves the previous
-    * manifest and the next run re-finds the same dirty keys
-    * (PUT/DELETE replay idempotently). */
-  private def incrementalPass(resourceType: String, cur0: DataFrame,
-      identifierSystem: Option[String], manifestDir: String): Map[String, Long] = {
+  /** One manifest-diffed reconcile (extension; see
+    * [[Merge.manifestDiff]]): diff `cur0` against the previous run's
+    * `(key, hash)` manifest under `dir`, reconcile the dirty keys, and
+    * swing the manifest (tmp write + bak swap) only after the store
+    * apply returns — a crash mid-apply leaves the previous manifest
+    * and the next run re-finds the same dirty keys (PUT-with-id
+    * upserts and DELETEs replay idempotently). */
+  private def manifestPass(dir: String, cur0: DataFrame)(
+      reconcileDirty: (DataFrame, DataFrame) => (Map[String, Long], Seq[String]))
+      : Map[String, Long] = {
     val cur = cur0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val live = s"$manifestDir/manifest"
+      val live = s"$dir/manifest"
       val fsys = new org.apache.hadoop.fs.Path(live)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       // heal a swap crashed between its two renames (live gone, bak
       // holds the previous manifest): restore bak rather than letting
       // an empty prev force a full re-sync
-      val bak = new org.apache.hadoop.fs.Path(s"$manifestDir/.manifest.bak")
+      val bak = new org.apache.hadoop.fs.Path(s"$dir/.manifest.bak")
       val livePath = new org.apache.hadoop.fs.Path(live)
       if (!fsys.exists(livePath) && fsys.exists(bak)) {
         fsys.rename(bak, livePath); ()
@@ -453,8 +412,7 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
             org.apache.spark.sql.types.StructField("__h",
               org.apache.spark.sql.types.LongType))))
       val (dirty, manifest0) = Merge.manifestDiff(cur, "key", "json", prev)
-      val (counts, dupKeys) = reconcileDetail(resourceType, cur,
-        identifierSystem = identifierSystem, keyScope = Some(dirty))
+      val (counts, dupKeys) = reconcileDirty(cur, dirty)
       // E5 dup keys were routed OUT of the merge unapplied: advancing
       // their manifest hash would mask the error forever (the key would
       // read clean next run while the store keeps the duplicate data).
@@ -464,7 +422,7 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       val manifest = if (dupKeys.isEmpty) manifest0
         else manifest0.filter(!col("key").isin(dupKeys: _*))
       // apply succeeded -> swing the manifest (write fully, then swap)
-      val tmp = new org.apache.hadoop.fs.Path(s"$manifestDir/.manifest.tmp")
+      val tmp = new org.apache.hadoop.fs.Path(s"$dir/.manifest.tmp")
       manifest.write.mode("overwrite").parquet(tmp.toString)
       if (fsys.exists(livePath) && !fsys.rename(livePath, bak))
         throw new IllegalStateException(s"manifest bak rename failed: $live")
@@ -474,6 +432,24 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       counts
     } finally { cur.unpersist(); () }
   }
+
+  /** The cohort-id frame every child type joins against, materialized
+    * (localCheckpoint) once per [[sync]], and only when a child type
+    * is requested: it feeds both the fan-out join and the subject
+    * scope, so the cut halves the cohort assembly work — and,
+    * critically for skew, it puts a REAL shuffle boundary under the
+    * fan-out join. Without it the cohort side arrives pre-partitioned
+    * by PatientId from its own upstream join, the whole right side
+    * fuses into the join stage, and AQE's OptimizeSkewedJoin (which
+    * requires BOTH join children to be ENSURE_REQUIREMENTS shuffle
+    * stages) can never split a hot patient's partition — the
+    * one-patient-many-labs skew would serialize on one task at scale
+    * (CnicsSkewSoak pins both the fused-plan refusal and the
+    * checkpointed plan's skew=true split). Cohort-sized storage, the
+    * N+1-removal frame — bounded and small next to the detail side;
+    * blocks are reclaimed by the ContextCleaner with the frame. */
+  private def cohortIds(limit: Int): DataFrame =
+    cohort(limit).select("PatientId", "site_pat_id").localCheckpoint(true)
 
   private def conditionResources(ids: DataFrame): DataFrame =
     childSource(in.diagnosis, "DiagnosisName", in.conditionsFilter, ids)
@@ -487,33 +463,6 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
           col("DiagnosisSource"), col("DiagnosisName"),
           col("DiagnosisName").isin(in.standardDiagnoses: _*))).as("json"))
 
-  /** The cohort-id frame every child pass joins against, materialized
-    * ONCE (localCheckpoint): it feeds both the fan-out join and the
-    * subject scope, so the cut halves the cohort assembly work — and,
-    * critically for skew, it puts a REAL shuffle boundary under the
-    * fan-out join. Without it the cohort side arrives pre-partitioned
-    * by PatientId from its own upstream join, the whole right side
-    * fuses into the join stage, and AQE's OptimizeSkewedJoin (which
-    * requires BOTH join children to be ENSURE_REQUIREMENTS shuffle
-    * stages) can never split a hot patient's partition — the
-    * one-patient-many-labs skew would serialize on one task at scale
-    * (CnicsSkewSoak pins both the fused-plan refusal and the
-    * checkpointed plan's skew=true split). Cohort-sized storage, the
-    * N+1-removal frame — bounded and small next to the detail side.
-    * Memoized per limit so a full run()'s three child passes share ONE
-    * materialization (inputs are immutable per pipeline instance);
-    * blocks are reclaimed by the ContextCleaner with the instance. */
-  private val cohortIdsCache =
-    scala.collection.concurrent.TrieMap.empty[Int, DataFrame]
-  private def cohortIds(limit: Int): DataFrame =
-    cohortIdsCache.getOrElseUpdate(limit,
-      cohort(limit).select("PatientId", "site_pat_id").localCheckpoint(true))
-
-  def runConditions(limit: Int = Int.MaxValue): Map[String, Long] = {
-    val ids = cohortIds(limit)
-    reconcile("Condition", conditionResources(ids), Some(cohortSubjects(ids)))
-  }
-
   private def medicationResources(ids: DataFrame): DataFrame =
     childSource(in.medication, "MedicationName", in.medicationsFilter, ids)
       .withColumn("key", col("MedicationId").cast("string"))
@@ -525,11 +474,6 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
           col("MedicationId").cast("string"), col("MedicationName"),
           col("StartDate"), col("EndDate"), col("EndType"))).as("json"))
 
-  def runMedications(limit: Int = Int.MaxValue): Map[String, Long] = {
-    val ids = cohortIds(limit)
-    reconcile("MedicationRequest", medicationResources(ids), Some(cohortSubjects(ids)))
-  }
-
   private def observationResources(ids: DataFrame): DataFrame =
     childSource(in.lab, "TestName", in.observationsFilter, ids)
       .withColumn("key", col("LabId")) // LabId is already a string (§1.4)
@@ -540,84 +484,16 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
           concat(lit(s"cnics-$siteLower-"), col("site_pat_id")),
           col("LabId"), col("TestName"), col("TestDate"),
           col("Result"), col("Units"), col("ReferenceLow"), col("ReferenceHigh"))).as("json"))
-
-  def runObservations(limit: Int = Int.MaxValue): Map[String, Long] = {
-    val ids = cohortIds(limit)
-    reconcile("Observation", observationResources(ids), Some(cohortSubjects(ids)))
-  }
-
-  /** Full job for one site: returns the reference's 12-counter audit
-    * (E1: {Patient, Condition, MedicationRequest, Observation} ×
-    * {inserted, updated, deleted}). */
-  def run(resourceList: Set[String] = Set("patients", "conditions", "medicationrequests", "observations"),
-      limit: Int = Int.MaxValue): Map[(String, String), Long] = {
-    var audit = Map[(String, String), Long]()
-    def add(rt: String, counts: Map[String, Long]): Unit = {
-      audit = addCounts(audit, rt, counts)
-    }
-    if (resourceList("patients")) add("Patient", runPatients(limit))
-    if (resourceList("conditions")) add("Condition", runConditions(limit))
-    if (resourceList("medicationrequests")) add("MedicationRequest", runMedications(limit))
-    if (resourceList("observations")) add("Observation", runObservations(limit))
-    audit
-  }
-
-  /** SINGLE-STAGE transactional job (r15 verdict #7 — SURVEY §3.2's
-    * flagged option, opt-in beside [[run]]): the four reconciles run
-    * their reads and classifies exactly as in [[run]], but every
-    * WRITE defers into one union frame that
-    * [[graft.sinks.FhirStore.applyActionsMixed]] applies in a single
-    * pass — on [[graft.sinks.HttpFhirStore]], one distributed job of
-    * mixed-type transaction Bundles co-partitioned on the subject with
-    * parent-first ordering, so the parent→child stage barrier the
-    * sequential [[run]] imposes is GONE from the job DAG. Legal
-    * because ids are client-assigned (children reference
-    * `Patient/<deterministic id>` — no store-returned id feeds a later
-    * stage). End state == [[run]]'s (oracle-pinned by
-    * `cnics_http_tx_audit` against a strict-referential-integrity
-    * fixture server). Audit shape is [[run]]'s 12-counter map. */
-  def runTransactional(limit: Int = Int.MaxValue): Map[(String, String), Long] = {
-    val ids = cohortIds(limit)
-    val deferred = scala.collection.mutable.ListBuffer.empty[(String, DataFrame)]
-    def defer(rt: String): DataFrame => Map[String, Long] = { df =>
-      // materialized NOW (eager checkpoint): the reconcile unpersists
-      // its snapshot when it returns, and the deferred frame must
-      // survive that
-      deferred += ((rt, df.localCheckpoint(true)))
-      Map.empty
-    }
-    var audit = Map[(String, String), Long]()
-    def errs(rt: String, counts: Map[String, Long]): Unit =
-      counts.get("error").foreach { n => audit += ((rt, "error") -> n) }
-    errs("Patient", reconcileDetail("Patient", patientResources(limit),
-      identifierSystem = Some(sitePatientIdSystem),
-      applySink = Some(defer("Patient")))._1)
-    errs("Condition", reconcileDetail("Condition", conditionResources(ids),
-      Some(cohortSubjects(ids)), applySink = Some(defer("Condition")))._1)
-    errs("MedicationRequest", reconcileDetail("MedicationRequest",
-      medicationResources(ids), Some(cohortSubjects(ids)),
-      applySink = Some(defer("MedicationRequest")))._1)
-    errs("Observation", reconcileDetail("Observation",
-      observationResources(ids), Some(cohortSubjects(ids)),
-      applySink = Some(defer("Observation")))._1)
-    val union = deferred.map { case (rt, df) =>
-      df.select(lit(rt).as("resource_type"),
-        col("key"), col("id"), col("json"), col("merge_action"))
-    }.reduce(_.unionByName(_))
-    val written = store.applyActionsMixed(union)
-    // zero-filled 12-counter audit (the run() shape), plus any errors
-    deferred.map(_._1).foreach { rt =>
-      Seq("insert", "update", "delete").foreach { a =>
-        audit += ((rt, a) -> written.getOrElse((rt, a), 0L))
-      }
-    }
-    audit
-  }
 }
 
 object CnicsPipeline {
+  /** Every resource list a [[CnicsPipeline.sync]] can reconcile — the
+    * reference's `resource_list` names (cnics_to_fhir.py:249-257). */
+  val AllTypes: Set[String] =
+    Set("patients", "conditions", "medicationrequests", "observations")
+
   /** E5 dup-key error-channel bound: above this the duplicate set is
-    * store corruption, not an error channel (see reconcileDetail). */
+    * store corruption, not an error channel (see reconcile). */
   val MaxDupKeys: Int = 10000
 
   /** A6 — the per-field last-wins crosswalk merge on SitePatientId

@@ -11,7 +11,7 @@ import graft.sinks.FhirStore
   * bug-compatible with the reference's `while 'Job_'+n in config` loop:
   * numbering stops at the FIRST missing index (a gap hides later jobs).
   *
-  * Each (job, site) yields one `CnicsPipeline.run` — per-site DataFrame
+  * Each (job, site) yields one `CnicsPipeline.sync` — per-site DataFrame
   * DAGs and their audit counters; sources and stores are injected per
   * (site, db) so deployments can point at per-site databases exactly
   * like the reference's secrets.ini wiring. */
@@ -19,9 +19,6 @@ object JobRunner {
 
   final case class JobResult(site: String, dbName: String,
       audit: Map[(String, String), Long])
-
-  val DefaultResources: Set[String] =
-    Set("patients", "conditions", "medicationrequests", "observations")
 
   /** Parse `[JobList]` with the reference's numbered-key semantics. */
   def jobs(jobConfigText: String): Seq[IniConfig.JobSpec] = {
@@ -35,24 +32,16 @@ object JobRunner {
       .toSeq
   }
 
+  /** Full PUT-always sync of every (job, site). */
   def run(spark: SparkSession, jobConfigText: String,
       inputsFor: (String, String) => CnicsInputs,
       storeFor: (String, String) => FhirStore,
       limit: Int = Int.MaxValue): Seq[JobResult] =
-    for {
-      job <- jobs(jobConfigText)
-      site <- job.sites
-    } yield {
-      val pipeline = new CnicsPipeline(spark, inputsFor(site, job.dbName),
-        storeFor(site, job.dbName), site)
-      val resources = if (job.resources.isEmpty) DefaultResources else job.resources
-      JobResult(site, job.dbName, pipeline.run(resources, limit))
-    }
+    syncAll(spark, jobConfigText, inputsFor, storeFor, limit)((_, _) => Scope.Full())
 
-  /** Incremental twin of [[run]]: each (job, site) syncs through
-    * [[CnicsPipeline.runIncremental]], so a nightly re-run whose
-    * sources barely changed touches the store for just the delta —
-    * per-type (key, hash) manifests live under
+  /** Manifest-diffed sync of every (job, site) ([[Scope.Manifest]]), so
+    * a nightly re-run whose sources barely changed touches the store
+    * for just the delta — per-type (key, hash) manifests live under
     * `manifestDirFor(site, dbName)`, one root per (site, db) exactly
     * like the stores and sources are wired. */
   def runIncremental(spark: SparkSession, jobConfigText: String,
@@ -60,14 +49,21 @@ object JobRunner {
       storeFor: (String, String) => FhirStore,
       manifestDirFor: (String, String) => String,
       limit: Int = Int.MaxValue): Seq[JobResult] =
+    syncAll(spark, jobConfigText, inputsFor, storeFor, limit)(
+      (site, db) => Scope.Manifest(manifestDirFor(site, db)))
+
+  private def syncAll(spark: SparkSession, jobConfigText: String,
+      inputsFor: (String, String) => CnicsInputs,
+      storeFor: (String, String) => FhirStore,
+      limit: Int)(scopeFor: (String, String) => Scope): Seq[JobResult] =
     for {
       job <- jobs(jobConfigText)
       site <- job.sites
     } yield {
       val pipeline = new CnicsPipeline(spark, inputsFor(site, job.dbName),
         storeFor(site, job.dbName), site)
-      val resources = if (job.resources.isEmpty) DefaultResources else job.resources
+      val types = if (job.resources.isEmpty) CnicsPipeline.AllTypes else job.resources
       JobResult(site, job.dbName,
-        pipeline.runIncremental(manifestDirFor(site, job.dbName), resources, limit))
+        pipeline.sync(types, scopeFor(site, job.dbName), limit))
     }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.model.CnicsFixtures
-import graft.pipeline.CnicsPipeline
+import graft.pipeline.{CnicsPipeline, Scope}
 import graft.sinks.InMemoryFhirStore
 
 /** Driver-visible end-to-end gate for the CNICS reference pipeline:
@@ -20,7 +20,7 @@ object CnicsQueries {
       (s, _) => {
         import s.implicits._
         val store = new InMemoryFhirStore
-        val audit = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw").run()
+        val audit = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw").sync()
         audit.toSeq.map { case ((rt, a), n) => (rt, a, n) }
           .toDF("resource_type", "action", "n")
       },
@@ -49,8 +49,8 @@ object CnicsQueries {
         import s.implicits._
         val base = QueryDef.tempStoreDir("graft_pqstore")
         val store = new graft.sinks.ParquetFhirStore(base)
-        val first = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw").run()
-        val second = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw").run()
+        val first = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw").sync()
+        val second = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw").sync()
         (first.toSeq.map { case ((rt, a), n) => (1L, rt, a, n) } ++
           second.toSeq.map { case ((rt, a), n) => (2L, rt, a, n) })
           .toDF("run", "resource_type", "action", "n")
@@ -91,7 +91,7 @@ object CnicsQueries {
         val results = graft.pipeline.JobRunner.run(s, cfg,
           (_, _) => CnicsFixtures.demo(s), (_, _) => store)
         val rerun = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw")
-          .run(Set("patients"))
+          .sync(Set("patients"))
         val rows =
           results.flatMap(r => r.audit.toSeq.map { case ((rt, a), n) =>
             (s"job:${r.site}", rt, a, n) }) ++
@@ -114,7 +114,7 @@ object CnicsQueries {
              |) t(phase, resource_type, action, n)""".stripMargin)),
 
     // ── Incremental sync (extension; Merge.manifestDiff +
-    //    CnicsPipeline.runPatientsIncremental): where the reference —
+    //    CnicsPipeline.sync with Scope.Manifest): where the reference —
     //    and this pipeline's own PUT-always mode — re-writes every
     //    patient every run, the incremental run diffs the assembled
     //    JSON against the previous run's (key, hash) manifest and
@@ -133,10 +133,10 @@ object CnicsQueries {
         val store = new InMemoryFhirStore
         val mdir = QueryDef.tempStoreDir("graft_incmanifest")
         val base = CnicsFixtures.demo(s)
-        val r1 = new CnicsPipeline(s, base, store, "uw")
-          .runPatientsIncremental(mdir)
-        val r2 = new CnicsPipeline(s, base, store, "uw")
-          .runPatientsIncremental(mdir)
+        def inc(in: graft.pipeline.CnicsInputs) =
+          new CnicsPipeline(s, in, store, "uw").sync(Set("patients"), Scope.Manifest(mdir))
+        val r1 = inc(base)
+        val r2 = inc(base)
         val changed = base.copy(
           patient = base.patient.filter(col("PatientId") =!= 2L),
           demographic = Seq(
@@ -144,16 +144,15 @@ object CnicsQueries {
             (11L, 1L, Some("Male"), Some("White"), Some("No")),
             (13L, 3L, Some("Male"), Some("Black"), Some("No"))
           ).toDF("DemographicId", "PatientId", "Sex", "Race", "Hispanic"))
-        val r3 = new CnicsPipeline(s, changed, store, "uw")
-          .runPatientsIncremental(mdir)
-        def rows(phase: String, m: Map[String, Long]) =
+        val r3 = inc(changed)
+        def rows(phase: String, m: Map[(String, String), Long]) =
           Seq("insert", "update", "delete")
-            .map(a => (phase, a, m.getOrElse(a, 0L)))
+            .map(a => (phase, a, m.getOrElse(("Patient", a), 0L)))
         val out = rows("inc1", r1) ++ rows("inc2", r2) ++ rows("inc3", r3) ++
           Seq(("store", "patient_count",
               store.data.keys.count(_._1 == "Patient").toLong),
             ("manifest", "rows",
-              s.read.parquet(s"$mdir/manifest").count()))
+              s.read.parquet(s"$mdir/Patient/manifest").count()))
         out.toDF("phase", "action", "n")
       },
       Some("""SELECT * FROM (VALUES
@@ -164,8 +163,8 @@ object CnicsQueries {
              | ('manifest', 'rows', 1)
              |) t(phase, action, n)""".stripMargin)),
 
-    // ── The streaming twin of the targeted sync (CnicsStreams
-    //    .patientSync + runPatientsForKeys): a MemoryStream of dirty
+    // ── The streaming twin of the targeted sync (CnicsStreams.sync
+    //    of patients, Scope.Keys per batch): a MemoryStream of dirty
     //    site-patient keys drives a standing micro-batch sync whose
     //    per-batch assembly AND store wire are O(batch). Batch 1
     //    streams uw-001 (insert); batch 2 streams both keys after
@@ -181,10 +180,11 @@ object CnicsQueries {
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val store = new InMemoryFhirStore
         var inputs = CnicsFixtures.demo(s)
-        val audits = new java.util.concurrent.ConcurrentHashMap[Long, Map[String, Long]]()
+        val audits =
+          new java.util.concurrent.ConcurrentHashMap[Long, Map[(String, String), Long]]()
         val mem = MemoryStream[String]
-        val q = graft.streaming.CnicsStreams.patientSync(
-          mem.toDF().toDF("site_pat_id"), inputs, store, "uw",
+        val q = graft.streaming.CnicsStreams.sync(
+          mem.toDF().toDF("site_pat_id"), inputs, store, "uw", Set("patients"),
           (id, a) => { audits.put(id, a); () })
         try {
           mem.addData("uw-001"); q.processAllAvailable()
@@ -202,7 +202,7 @@ object CnicsQueries {
         val rows = (0L to 2L).flatMap { id =>
           val a = audits.getOrDefault(id, Map.empty)
           Seq("insert", "update", "delete").map(act =>
-            (s"batch$id", act, a.getOrElse(act, 0L)))
+            (s"batch$id", act, a.getOrElse(("Patient", act), 0L)))
         } :+ (("store", "patient_count",
           store.data.keys.count(_._1 == "Patient").toLong))
         rows.toDF("phase", "action", "n")
@@ -214,7 +214,7 @@ object CnicsQueries {
              | ('store', 'patient_count', 1)
              |) t(phase, action, n)""".stripMargin)),
 
-    // ── The FULL incremental job (runIncremental): every resource
+    // ── The FULL incremental job (Scope.Manifest): every resource
     //    type through its own (key, hash) manifest. Phase 1 cold-syncs
     //    everything; phase 2 re-runs unchanged inputs — ZERO actions
     //    across all four types (the wire is completely idle in steady
@@ -234,9 +234,10 @@ object CnicsQueries {
         val store = new InMemoryFhirStore
         val mdir = QueryDef.tempStoreDir("graft_incfull")
         val base = CnicsFixtures.demo(s)
-        val pipe1 = new CnicsPipeline(s, base, store, "uw")
-        val r1 = pipe1.runIncremental(mdir)
-        val r2 = new CnicsPipeline(s, base, store, "uw").runIncremental(mdir)
+        def inc(in: graft.pipeline.CnicsInputs) =
+          new CnicsPipeline(s, in, store, "uw").sync(scope = Scope.Manifest(mdir))
+        val r1 = inc(base)
+        val r2 = inc(base)
         val changed = base.copy(
           patient = base.patient.filter(col("PatientId") =!= 2L),
           diagnosis = base.diagnosis
@@ -253,7 +254,7 @@ object CnicsQueries {
               None: Option[String], None: Option[String])
           ).toDF("PatientId", "LabId", "TestName", "Result", "Units",
             "TestDate", "ReferenceLow", "ReferenceHigh", "Historical"))
-        val r3 = new CnicsPipeline(s, changed, store, "uw").runIncremental(mdir)
+        val r3 = inc(changed)
         def rows(phase: String, m: Map[(String, String), Long]) =
           m.toSeq.sortBy { case ((rt, a), _) => (rt, a) }
             .map { case ((rt, a), n) => (phase, rt, a, n) }
@@ -376,8 +377,8 @@ object CnicsQueries {
              | ('final', 'sea', 'bytes_unchanged', 1)
              |) t(phase, resource_type, action, n)""".stripMargin)),
 
-    // ── The FULL-JOB streaming sync (CnicsStreams.sync +
-    //    runForKeys): every resource type per micro-batch — patients
+    // ── The FULL-JOB streaming sync (CnicsStreams.sync, Scope.Keys
+    //    per batch): every resource type per micro-batch — patients
     //    key-scoped, children through the scoped cohort's
     //    subject-scoped reconcile, and a departed patient's children
     //    removed by the Patient DELETE's cascade (HAPI parity, honored
@@ -456,7 +457,7 @@ object CnicsQueries {
         val in = graft.sources.CnicsDerbyFixture.inputs(s)
         val store = new InMemoryFhirStore
         val pipe = new CnicsPipeline(s, in, store, "uw")
-        val audit = pipe.run()
+        val audit = pipe.sync()
         def pushed(df: org.apache.spark.sql.DataFrame, token: String): Long = {
           val plan = df.queryExecution.executedPlan.toString
           if (plan.contains("PushedFilters:") && plan.contains(token)) 1L else 0L

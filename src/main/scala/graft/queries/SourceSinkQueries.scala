@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.model.CnicsFixtures
-import graft.pipeline.CnicsPipeline
+import graft.pipeline.{CnicsPipeline, Scope}
 import graft.sources.CnicsCsv
 
 /** Driver-visible rows for the source/sink operators that were
@@ -37,8 +37,8 @@ object SourceSinkQueries {
         try {
           val store = new graft.sinks.HttpFhirStore(
             s"http://localhost:$port", maxRetries = 3)
-          val first = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw").run()
-          val second = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw").run()
+          val first = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw").sync()
+          val second = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw").sync()
           val rows =
             first.toSeq.map { case ((rt, a), n) => ("run1", rt, a, n) } ++
             second.toSeq.map { case ((rt, a), n) => ("run2", rt, a, n) } :+
@@ -92,7 +92,7 @@ object SourceSinkQueries {
             catch { case _: IllegalStateException => 1L }
           val store = new graft.sinks.HttpFhirStore(base,
             auth = Some(authFor("s3cret")))
-          val audit = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw").run()
+          val audit = new CnicsPipeline(s, CnicsFixtures.demo(s), store, "uw").sync()
           val rows = audit.toSeq.map { case ((rt, a), n) => ("run", rt, a, n) } ++ Seq(
             ("auth", "token", "fetched", srv.tokenFetches.get().toLong),
             ("auth", "token", "rejected", srv.tokenRejects.get().toLong),
@@ -139,11 +139,13 @@ object SourceSinkQueries {
         val portC = srvC.start()
         try {
           val storeT = new graft.sinks.HttpFhirStore(s"http://localhost:$portT", maxRetries = 2)
-          val tx1 = new CnicsPipeline(s, CnicsFixtures.demo(s), storeT, "uw").runTransactional()
-          val tx2 = new CnicsPipeline(s, CnicsFixtures.demo(s), storeT, "uw").runTransactional()
+          def tx() = new CnicsPipeline(s, CnicsFixtures.demo(s), storeT, "uw")
+            .sync(scope = Scope.Full(Scope.OneJob))
+          val tx1 = tx()
+          val tx2 = tx()
           val pipelineRejects = srvT.refRejects.get().toLong
           val storeC = new graft.sinks.HttpFhirStore(s"http://localhost:$portC", maxRetries = 2)
-          new CnicsPipeline(s, CnicsFixtures.demo(s), storeC, "uw").run()
+          new CnicsPipeline(s, CnicsFixtures.demo(s), storeC, "uw").sync()
           val endStateEqual = if (srvT.data.equals(srvC.data)) 1L else 0L
           // negative probe: an orphan child PUT must 400 atomically
           val badBundle =

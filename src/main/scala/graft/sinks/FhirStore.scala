@@ -375,58 +375,24 @@ object ClientCredentialsAuth {
   *    401 would parse as an EMPTY store and make the reconcile
   *    classify every source row as insertable and every store row as
   *    a deletable orphan.
-  * Driver never touches row data.
+  * Every request goes through [[HttpFhirStore.send]], so no error
+  * reply ever reaches a page parser or a write count. Driver never
+  * touches row data.
   */
 class HttpFhirStore(baseUrl: String, maxRetries: Int = 5, bundleSize: Int = 100,
     pageSize: Int = 1000, idBatch: Int = 100,
     auth: Option[ClientCredentialsAuth] = None)
     extends FhirStore with Serializable {
 
-  import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+  import java.net.http.{HttpClient, HttpRequest}
   import java.net.URI
+  import HttpFhirStore.{keyed, pages, send, writeBundles}
 
   private def client(): HttpClient = HttpClient.newHttpClient()
 
   // fail-fast at job start (cnics_to_fhir.py:211-213): bad credentials
   // must abort before any pipeline work, not 401 mid-reconcile
   auth.foreach(_.token(client()))
-
-  /** Bounded-retry send. The request is supplied as a BUILDER thunk so
-    * each attempt can re-stamp the Authorization header — after a 401
-    * triggers the single bounded token refresh, the retried request
-    * must carry the NEW token, which an immutable prebuilt request
-    * cannot. 401/403 semantics: one refresh when auth is configured,
-    * then loud failure (never returned to a caller that would parse
-    * the error body as an empty page). */
-  private def send(c: HttpClient, mk: () => HttpRequest.Builder): HttpResponse[String] = {
-    var attempt = 0
-    var refreshed = false
-    var last: Throwable = null
-    while (attempt < maxRetries) {
-      val b = mk()
-      auth.foreach(a => b.header("Authorization", "Bearer " + a.token(c)))
-      try {
-        val r = c.send(b.build(), HttpResponse.BodyHandlers.ofString())
-        if (r.statusCode() == 401 && auth.isDefined && !refreshed) {
-          auth.get.refresh(c)
-          refreshed = true
-          last = new IllegalStateException(s"HTTP 401 (token refreshed once)")
-        } else if (r.statusCode() == 401 || r.statusCode() == 403)
-          throw new IllegalStateException(
-            s"unauthorized (HTTP ${r.statusCode()}) from $baseUrl — " +
-              (if (auth.isDefined) "token refresh did not help"
-               else "store requires auth but none is configured"))
-        else if (r.statusCode() < 500) return r
-        else last = new RuntimeException(s"HTTP ${r.statusCode()}")
-      } catch {
-        case e: IllegalStateException => throw e
-        case e: Throwable => last = e
-      }
-      attempt += 1
-      Thread.sleep(200L * attempt)
-    }
-    throw last
-  }
 
   /** Full-store snapshot, distributed: one driver `?_summary=count`
     * round-trip sizes the store, then page OFFSETS are partitioned
@@ -440,8 +406,6 @@ class HttpFhirStore(baseUrl: String, maxRetries: Int = 5, bundleSize: Int = 100,
     * which also reads a moving store without isolation. */
   def snapshot(spark: SparkSession, resourceType: String,
       identifierSystem: Option[String] = None): DataFrame = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val c = client()
     // FHIR token search `identifier=<system>|` — any identifier under
     // the system, any value (the reference's site scope, py:322). The
     // server applies the filter, so pages carry only in-scope rows.
@@ -449,9 +413,9 @@ class HttpFhirStore(baseUrl: String, maxRetries: Int = 5, bundleSize: Int = 100,
       java.net.URLEncoder.encode(s + "|", "UTF-8")).getOrElse("")
     val total: Long =
       try {
-        val r = send(c, () => HttpRequest.newBuilder(
+        val r = send(client(), auth, maxRetries, () => HttpRequest.newBuilder(
           URI.create(s"$baseUrl/$resourceType?_summary=count&_format=json$idq")).GET())
-        val t = mapper.readTree(r.body()).path("total")
+        val t = HttpFhirStore.mapper.readTree(r.body()).path("total")
         if (t.isNumber) t.asLong() else -1L
       } catch { case _: Throwable => -1L }
     if (total < 0L) return snapshotCursor(spark, resourceType, idq)
@@ -461,31 +425,22 @@ class HttpFhirStore(baseUrl: String, maxRetries: Int = 5, bundleSize: Int = 100,
 
     val ps = math.max(1, pageSize)
     val offsets = 0L.until(total, ps.toLong)
-    val url = baseUrl
+    val (url, bearer, retries) = (baseUrl, auth, maxRetries)
     import spark.implicits._
     spark.createDataset(offsets)
       .repartition(math.min(offsets.size, spark.sparkContext.defaultParallelism))
       .mapPartitions { offs =>
         val pc = HttpClient.newHttpClient()
-        val pm = new com.fasterxml.jackson.databind.ObjectMapper()
-        offs.flatMap { off =>
-          // _sort=_id: FHIR leaves search result order UNSPECIFIED
-          // without an explicit sort, and offset pages of an unordered
-          // search may drop or duplicate rows across pages even on a
-          // static store. Pinning the order is a requirement of this
-          // parallel pager; servers that cannot sort should take the
-          // sequential cursor fallback instead.
-          val r = send(pc, () => HttpRequest.newBuilder(URI.create(
-            s"$url/$resourceType?_count=$ps&_offset=$off&_sort=_id&_format=json$idq")).GET())
-          val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
-          pm.readTree(r.body()).path("entry").forEach { e =>
-            val res = e.path("resource")
-            val key = res.path("identifier").path(0).path("value").asText(null)
-            val id = res.path("id").asText(null)
-            if (key != null && id != null) out += ((key, id))
-          }
-          out
-        }
+        // _sort=_id: FHIR leaves search result order UNSPECIFIED
+        // without an explicit sort, and offset pages of an unordered
+        // search may drop or duplicate rows across pages even on a
+        // static store. Pinning the order is a requirement of this
+        // parallel pager; servers that cannot sort should take the
+        // sequential cursor fallback instead. Each offset is one page:
+        // its `link: next` is another partition's offset.
+        offs.flatMap(off => keyed(pc, bearer, retries,
+          s"$url/$resourceType?_count=$ps&_offset=$off&_sort=_id&_format=json$idq",
+          follow = false))
       }.toDF("key", "id")
   }
 
@@ -509,29 +464,17 @@ class HttpFhirStore(baseUrl: String, maxRetries: Int = 5, bundleSize: Int = 100,
     * driver-buffered one-shot search of `cnics_to_fhir.py:215-217`. */
   private def snapshotCursor(spark: SparkSession, resourceType: String,
       idq: String = ""): DataFrame = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val c = client()
     val ids = scala.collection.mutable.ArrayBuffer[String]()
     // the id walk carries the identifier-system scope; the `?_id=`
     // shard fetches below need no re-scoping (their ids came from it)
-    var url = s"$baseUrl/$resourceType?_elements=id&_count=${math.max(1, pageSize)}&_format=json$idq"
-    while (url != null) {
-      val r = send(c, () => HttpRequest.newBuilder(URI.create(url)).GET())
-      val root = mapper.readTree(r.body())
-      root.path("entry").forEach { e =>
-        val id = e.path("resource").path("id").asText(null)
-        if (id != null) ids += id
-      }
-      url = null
-      root.path("link").forEach { l =>
-        if (l.path("relation").asText() == "next") url = l.path("url").asText()
-      }
+    pages(client(), auth, maxRetries,
+        s"$baseUrl/$resourceType?_elements=id&_count=${math.max(1, pageSize)}&_format=json$idq") {
+      res => Option(res.path("id").asText(null)).foreach(ids += _)
     }
     if (ids.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], FhirStore.snapshotSchema)
-    val base = baseUrl
-    val rt = resourceType
+    val (url, bearer, retries) = (baseUrl, auth, maxRetries)
     val bsz = math.max(1, idBatch)
     val nParts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (ids.size + bsz - 1) / bsz))
@@ -540,30 +483,12 @@ class HttpFhirStore(baseUrl: String, maxRetries: Int = 5, bundleSize: Int = 100,
       .repartition(nParts)
       .mapPartitions { part =>
         val pc = HttpClient.newHttpClient()
-        val pm = new com.fasterxml.jackson.databind.ObjectMapper()
-        part.grouped(bsz).flatMap { g =>
-          val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
-          // a server may cap _count below the requested batch size (the
-          // FHIR spec lets it override the client's count), so each
-          // shard fetch follows link:next like every other pager here —
-          // otherwise entries past the first page vanish silently
-          var u = s"$base/$rt?_id=${g.mkString(",")}&_count=${g.size}&_format=json"
-          while (u != null) {
-            val r = send(pc, () => HttpRequest.newBuilder(URI.create(u)).GET())
-            val root = pm.readTree(r.body())
-            root.path("entry").forEach { e =>
-              val res = e.path("resource")
-              val key = res.path("identifier").path(0).path("value").asText(null)
-              val id = res.path("id").asText(null)
-              if (key != null && id != null) out += ((key, id))
-            }
-            u = null
-            root.path("link").forEach { l =>
-              if (l.path("relation").asText() == "next") u = l.path("url").asText()
-            }
-          }
-          out
-        }
+        // a server may cap _count below the requested batch size (the
+        // FHIR spec lets it override the client's count), so each
+        // shard fetch follows link:next like every other pager here —
+        // otherwise entries past the first page vanish silently
+        part.grouped(bsz).flatMap(g => keyed(pc, bearer, retries,
+          s"$url/$resourceType?_id=${g.mkString(",")}&_count=${g.size}&_format=json"))
       }.toDF("key", "id")
   }
 
@@ -575,32 +500,14 @@ class HttpFhirStore(baseUrl: String, maxRetries: Int = 5, bundleSize: Int = 100,
     * cohort partitions instead of total store size. */
   def snapshotForSubjects(spark: SparkSession, resourceType: String,
       subjectIds: DataFrame): DataFrame = {
-    val url = baseUrl
+    val (url, bearer, retries) = (baseUrl, auth, maxRetries)
     import spark.implicits._
     val idCol = subjectIds.columns.head
     subjectIds.select(col(idCol).cast("string")).as[String]
       .mapPartitions { sids =>
         val c = HttpClient.newHttpClient()
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        sids.flatMap { sid =>
-          val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
-          var u = s"$url/$resourceType?subject=Patient/$sid&_count=1000&_format=json"
-          while (u != null) {
-            val r = send(c, () => HttpRequest.newBuilder(URI.create(u)).GET())
-            val root = mapper.readTree(r.body())
-            root.path("entry").forEach { e =>
-              val res = e.path("resource")
-              val key = res.path("identifier").path(0).path("value").asText(null)
-              val id = res.path("id").asText(null)
-              if (key != null && id != null) out += ((key, id))
-            }
-            u = null
-            root.path("link").forEach { l =>
-              if (l.path("relation").asText() == "next") u = l.path("url").asText()
-            }
-          }
-          out
-        }
+        sids.flatMap(sid => keyed(c, bearer, retries,
+          s"$url/$resourceType?subject=Patient/$sid&_count=1000&_format=json"))
       }.toDF("key", "id")
   }
 
@@ -614,7 +521,7 @@ class HttpFhirStore(baseUrl: String, maxRetries: Int = 5, bundleSize: Int = 100,
     * collide across sites (two sites both have a patient "001"). */
   override def snapshotForKeys(spark: SparkSession, resourceType: String,
       keys: DataFrame, identifierSystem: Option[String] = None): DataFrame = {
-    val url = baseUrl
+    val (url, bearer, retries) = (baseUrl, auth, maxRetries)
     val batchN = math.max(1, idBatch)
     val sysPrefix = identifierSystem.map(_ + "|").getOrElse("")
     import spark.implicits._
@@ -622,28 +529,12 @@ class HttpFhirStore(baseUrl: String, maxRetries: Int = 5, bundleSize: Int = 100,
     keys.select(col(keyCol).cast("string")).distinct().as[String]
       .mapPartitions { ks =>
         val c = HttpClient.newHttpClient()
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
         ks.grouped(batchN).flatMap { batch =>
           val tokens = batch
             .map(v => java.net.URLEncoder.encode(sysPrefix + v, "UTF-8"))
             .mkString(",")
-          val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
-          var u = s"$url/$resourceType?identifier=$tokens&_count=1000&_format=json"
-          while (u != null) {
-            val r = send(c, () => HttpRequest.newBuilder(URI.create(u)).GET())
-            val root = mapper.readTree(r.body())
-            root.path("entry").forEach { e =>
-              val res = e.path("resource")
-              val key = res.path("identifier").path(0).path("value").asText(null)
-              val id = res.path("id").asText(null)
-              if (key != null && id != null) out += ((key, id))
-            }
-            u = null
-            root.path("link").forEach { l =>
-              if (l.path("relation").asText() == "next") u = l.path("url").asText()
-            }
-          }
-          out
+          keyed(c, bearer, retries,
+            s"$url/$resourceType?identifier=$tokens&_count=1000&_format=json")
         }
       }.toDF("key", "id")
   }
@@ -656,66 +547,11 @@ class HttpFhirStore(baseUrl: String, maxRetries: Int = 5, bundleSize: Int = 100,
     * keep-alive session, cnics_to_fhir.py:246-247). Entries are
     * PUT-with-id upserts / DELETEs, so a failed bundle retries
     * idempotently as a whole. */
-  def applyActions(resourceType: String, actions: DataFrame): Map[String, Long] = {
-    val url = baseUrl
-    val retries = maxRetries
-    val bsz = math.max(1, bundleSize)
-    val bearer = auth // local capture: the write closure ships no `this`
-    import org.apache.spark.sql.Encoders
-    val counts = actions.select("key", "id", "json", "merge_action")
-      .mapPartitions { rows =>
-        val c = HttpClient.newHttpClient()
-        val byAction = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
-        rows.grouped(bsz).foreach { batch =>
-          val sb = new StringBuilder("""{"resourceType":"Bundle","type":"transaction","entry":[""")
-          var first = true
-          batch.foreach { r =>
-            val (id, json, act) = (r.getString(1), r.getString(2), r.getString(3))
-            if (!first) sb.append(',')
-            first = false
-            // Patient deletes cascade to the patient's child resources
-            // (reference parity: cnics_to_fhir.py:333 appends
-            // `?_cascade=delete`) — without it, a HAPI store with
-            // referential integrity rejects the delete, and with it off
-            // the children silently orphan.
-            val cascade = if (resourceType == "Patient") "?_cascade=delete" else ""
-            if (act == "delete")
-              sb.append(s"""{"request":{"method":"DELETE","url":"$resourceType/$id$cascade"}}""")
-            else
-              sb.append(s"""{"resource":$json,"request":{"method":"PUT","url":"$resourceType/$id"}}""")
-          }
-          sb.append("]}")
-          var attempt = 0
-          var done = false
-          var refreshed = false
-          var last: Throwable = null
-          while (!done && attempt < retries) {
-            // built per attempt: a 401-triggered token refresh must
-            // re-stamp the Authorization header on the retried bundle
-            val b = HttpRequest.newBuilder(URI.create(url))
-              .header("Content-Type", "application/fhir+json;charset=utf-8")
-              .POST(HttpRequest.BodyPublishers.ofString(sb.toString))
-            bearer.foreach(a => b.header("Authorization", "Bearer " + a.token(c)))
-            try {
-              val resp = c.send(b.build(), HttpResponse.BodyHandlers.ofString())
-              if (resp.statusCode() < 400) done = true
-              else if (resp.statusCode() == 401 && bearer.isDefined && !refreshed) {
-                bearer.get.refresh(c)
-                refreshed = true
-                last = new RuntimeException("HTTP 401 (token refreshed once)")
-              } else last = new RuntimeException(
-                s"HTTP ${resp.statusCode()} for bundle of ${batch.size} $resourceType")
-            } catch { case e: Throwable => last = e }
-            if (!done) { attempt += 1; Thread.sleep(200L * attempt) }
-          }
-          if (!done) throw last
-          batch.foreach(r => byAction(r.getString(3)) += 1L)
-        }
-        byAction.iterator
-      }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
-    counts.groupBy("_1").agg(sum("_2").as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-  }
+  def applyActions(resourceType: String, actions: DataFrame): Map[String, Long] =
+    writeBundles(actions.select(lit(resourceType).as("resource_type"),
+        col("id"), col("json"), col("merge_action")),
+      baseUrl, auth, maxRetries, bundleSize)
+      .map { case ((_, a), n) => a -> n }
 
   /** TRUE single-stage mixed-type write (r15 verdict #7, SURVEY §3.2's
     * flagged design): every resource type's actions land in ONE
@@ -742,72 +578,141 @@ class HttpFhirStore(baseUrl: String, maxRetries: Int = 5, bundleSize: Int = 100,
     * Patient DELETEs keep `?_cascade=delete` (reference parity);
     * orphan-child DELETEs may race the cascade across partitions, but
     * deletes are idempotent and target disjoint end states. */
-  override def applyActionsMixed(actions: DataFrame): Map[(String, String), Long] = {
-    val url = baseUrl
-    val retries = maxRetries
+  override def applyActionsMixed(actions: DataFrame): Map[(String, String), Long] =
+    writeBundles(actions
+        .withColumn("subject_key", coalesce(
+          get_json_object(col("json"), "$.subject.reference"),
+          concat(lit("Patient/"), col("id"))))
+        .withColumn("type_rank",
+          when(col("resource_type") === "Patient", 0).otherwise(1))
+        .repartition(col("subject_key"))
+        .sortWithinPartitions(col("subject_key"), col("type_rank"), col("id"))
+        .select("resource_type", "id", "json", "merge_action"),
+      baseUrl, auth, maxRetries, bundleSize)
+}
+
+object HttpFhirStore {
+  import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+  import java.net.URI
+
+  // readTree is thread-safe: one per JVM serves every pager
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The one bounded-retry send every request goes through. It returns
+    * only replies below 400. A 5xx, a 429 or a connection error retries
+    * (linear 200 ms × attempt backoff, `retries` attempts in all).
+    * A 401 with `auth` configured triggers ONE token refresh; after
+    * that, and without auth, 401/403 fail loudly. Any other 4xx is
+    * terminal and throws at once, naming the status and the URL — an
+    * error body must never be parsed as an empty page (the snapshot
+    * would silently lose its rows) or counted as a written bundle. The
+    * request is supplied as a BUILDER thunk so each attempt can
+    * re-stamp the Authorization header with the current token. */
+  private def send(c: HttpClient, auth: Option[ClientCredentialsAuth], retries: Int,
+      mk: () => HttpRequest.Builder): HttpResponse[String] = {
+    var attempt = 0
+    var refreshed = false
+    var last: Throwable = null
+    while (attempt < retries) {
+      val b = mk()
+      auth.foreach(a => b.header("Authorization", "Bearer " + a.token(c)))
+      val req = b.build()
+      try {
+        val r = c.send(req, HttpResponse.BodyHandlers.ofString())
+        val status = r.statusCode()
+        if (status < 400) return r
+        else if (status == 401 && auth.isDefined && !refreshed) {
+          auth.get.refresh(c)
+          refreshed = true
+          last = new IllegalStateException("HTTP 401 (token refreshed once)")
+        } else if (status == 401 || status == 403)
+          throw new IllegalStateException(
+            s"unauthorized (HTTP $status) from ${req.uri()} — " +
+              (if (auth.isDefined) "token refresh did not help"
+               else "store requires auth but none is configured"))
+        else if (status == 429 || status >= 500)
+          last = new RuntimeException(s"HTTP $status from ${req.method()} ${req.uri()}")
+        else throw new IllegalStateException(
+          s"HTTP $status from ${req.method()} ${req.uri()}")
+      } catch {
+        case e: IllegalStateException => throw e
+        case e: Throwable => last = e
+      }
+      attempt += 1
+      Thread.sleep(200L * attempt)
+    }
+    throw last
+  }
+
+  /** The one link-next pager: GETs `first` and, when `follow`, every
+    * `link: next` page after it, handing each entry's resource to `f`. */
+  private def pages(c: HttpClient, auth: Option[ClientCredentialsAuth], retries: Int,
+      first: String, follow: Boolean = true)(
+      f: com.fasterxml.jackson.databind.JsonNode => Unit): Unit = {
+    var u = first
+    while (u != null) {
+      val root = mapper.readTree(
+        send(c, auth, retries, () => HttpRequest.newBuilder(URI.create(u)).GET()).body())
+      root.path("entry").forEach(e => f(e.path("resource")))
+      u = null
+      if (follow) root.path("link").forEach { l =>
+        if (l.path("relation").asText() == "next") u = l.path("url").asText()
+      }
+    }
+  }
+
+  /** The snapshot rows of [[pages]]: (first identifier value, id) per
+    * resource that carries both. */
+  private def keyed(c: HttpClient, auth: Option[ClientCredentialsAuth], retries: Int,
+      first: String, follow: Boolean = true): Iterator[(String, String)] = {
+    val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    pages(c, auth, retries, first, follow) { res =>
+      val key = res.path("identifier").path(0).path("value").asText(null)
+      val id = res.path("id").asText(null)
+      if (key != null && id != null) out += ((key, id))
+    }
+    out.iterator
+  }
+
+  /** The bundle writer behind both write paths: `rows` is
+    * (resource_type, id, json, merge_action), and each partition POSTs
+    * its rows in order as transaction Bundles of `bundleSize` entries
+    * through [[send]]. Returns counts keyed (resource_type, action).
+    * Lives in the companion so the write closure ships no store. */
+  private def writeBundles(rows: DataFrame, url: String,
+      auth: Option[ClientCredentialsAuth], retries: Int,
+      bundleSize: Int): Map[(String, String), Long] = {
     val bsz = math.max(1, bundleSize)
-    val bearer = auth // local capture: the write closure ships no `this`
     import org.apache.spark.sql.Encoders
-    val counts = actions
-      .withColumn("subject_key", coalesce(
-        get_json_object(col("json"), "$.subject.reference"),
-        concat(lit("Patient/"), col("id"))))
-      .withColumn("type_rank",
-        when(col("resource_type") === "Patient", 0).otherwise(1))
-      .repartition(col("subject_key"))
-      .sortWithinPartitions(col("subject_key"), col("type_rank"), col("id"))
-      .select("resource_type", "id", "json", "merge_action")
-      .mapPartitions { rows =>
+    rows.mapPartitions { it =>
         val c = HttpClient.newHttpClient()
         val byAction = scala.collection.mutable
           .Map[(String, String), Long]().withDefaultValue(0L)
-        rows.grouped(bsz).foreach { batch =>
-          val sb = new StringBuilder("""{"resourceType":"Bundle","type":"transaction","entry":[""")
-          var first = true
-          batch.foreach { r =>
+        it.grouped(bsz).foreach { batch =>
+          val body = batch.map { r =>
             val (rt, id, json, act) =
               (r.getString(0), r.getString(1), r.getString(2), r.getString(3))
-            if (!first) sb.append(',')
-            first = false
+            // Patient deletes cascade to the patient's child resources
+            // (reference parity: cnics_to_fhir.py:333 appends
+            // `?_cascade=delete`) — without it, a HAPI store with
+            // referential integrity rejects the delete, and with it off
+            // the children silently orphan.
             val cascade = if (rt == "Patient") "?_cascade=delete" else ""
             if (act == "delete")
-              sb.append(s"""{"request":{"method":"DELETE","url":"$rt/$id$cascade"}}""")
-            else
-              sb.append(s"""{"resource":$json,"request":{"method":"PUT","url":"$rt/$id"}}""")
-          }
-          sb.append("]}")
-          var attempt = 0
-          var done = false
-          var refreshed = false
-          var last: Throwable = null
-          while (!done && attempt < retries) {
-            val b = HttpRequest.newBuilder(URI.create(url))
-              .header("Content-Type", "application/fhir+json;charset=utf-8")
-              .POST(HttpRequest.BodyPublishers.ofString(sb.toString))
-            bearer.foreach(a => b.header("Authorization", "Bearer " + a.token(c)))
-            try {
-              val resp = c.send(b.build(), HttpResponse.BodyHandlers.ofString())
-              if (resp.statusCode() < 400) done = true
-              else if (resp.statusCode() == 401 && bearer.isDefined && !refreshed) {
-                bearer.get.refresh(c)
-                refreshed = true
-                last = new RuntimeException("HTTP 401 (token refreshed once)")
-              } else last = new RuntimeException(
-                s"HTTP ${resp.statusCode()} for mixed bundle of ${batch.size}")
-            } catch { case e: Throwable => last = e }
-            if (!done) { attempt += 1; Thread.sleep(200L * attempt) }
-          }
-          if (!done) throw last
+              s"""{"request":{"method":"DELETE","url":"$rt/$id$cascade"}}"""
+            else s"""{"resource":$json,"request":{"method":"PUT","url":"$rt/$id"}}"""
+          }.mkString("""{"resourceType":"Bundle","type":"transaction","entry":[""", ",", "]}")
+          send(c, auth, retries, () => HttpRequest.newBuilder(URI.create(url))
+            .header("Content-Type", "application/fhir+json;charset=utf-8")
+            .POST(HttpRequest.BodyPublishers.ofString(body)))
           batch.foreach(r => byAction((r.getString(0), r.getString(3))) += 1L)
         }
         byAction.iterator.map { case ((rt, a), n) => (rt, a, n) }
       }(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong))
-    counts.groupBy("_1", "_2").agg(sum("_3").as("n")).collect()
+      .groupBy("_1", "_2").agg(sum("_3").as("n")).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
   }
-}
 
-object HttpFhirStore {
   /** The reference's store-flavor dispatch (cnics_to_fhir.py:195-213):
     * `FhirStore=hapi` → unauthenticated `HapiFhirUrl`; `FhirStore=
     * aidbox` → `AidboxFhirUrl` behind client-credentials auth against

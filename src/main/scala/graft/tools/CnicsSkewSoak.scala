@@ -106,8 +106,10 @@ object CnicsSkewSoak {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
 
-    val (r1, w1) = timed(pipe.runObservations())
-    val (r2, w2) = timed(pipe.runObservations())
+    def observations() = pipe.sync(Set("observations"))
+      .collect { case (("Observation", a), n) => a -> n }
+    val (r1, w1) = timed(observations())
+    val (r2, w2) = timed(observations())
     val total = hotLabs + coldLabsEach * (nPatients - 1)
     assert(r1.getOrElse("insert", 0L) == total && r1.getOrElse("update", 0L) == 0L,
       s"run1 expected $total inserts, got $r1")
@@ -176,7 +178,8 @@ object CnicsSkewSoak {
     val proPipe = new graft.pipeline.CnicsPipeline(spark, proIn,
       new graft.sinks.ParquetFhirStore(
         java.nio.file.Files.createTempDirectory("graft_skewpro").toString), "uw")
-    val (rp, wp) = timed(proPipe.runPatients())
+    val (rp, wp) = timed(proPipe.sync(Set("patients"))
+      .collect { case (("Patient", a), n) => a -> n })
     assert(rp.getOrElse("insert", 0L) == nPatients.toLong,
       s"patient run expected $nPatients inserts, got $rp")
     val hotLen = proPipe.sessionsPerPatient

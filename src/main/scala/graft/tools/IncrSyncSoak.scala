@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Volume soak for the incremental sync over the real HTTP wire:
-  * 50 000 patients through [[graft.pipeline.CnicsPipeline.runPatientsIncremental]]
+  * 50 000 patients through [[graft.pipeline.CnicsPipeline.sync]] (patients, manifest scope)
   * against [[graft.sinks.FhirFixtureServer]], with the wire cost of
   * every phase checked as a closed form:
   *
@@ -74,12 +74,14 @@ object IncrSyncSoak {
     try {
       val store = new graft.sinks.HttpFhirStore(s"http://localhost:$port")
       val mdir = java.nio.file.Files.createTempDirectory("graft_incsoak").toString
-      def pipe(flip: Long) =
+      def sync(flip: Long) =
         new graft.pipeline.CnicsPipeline(spark, inputs(flip), store, "uw")
+          .sync(Set("patients"), graft.pipeline.Scope.Manifest(mdir))
+          .collect { case (("Patient", a), k) if k > 0 => a -> k }
 
       // cold manifest -> full insert sync
       val (p0, g0) = (srv.posts.get(), srv.gets.get())
-      val (r1, tCold) = timed(pipe(0L).runPatientsIncremental(mdir))
+      val (r1, tCold) = timed(sync(0L))
       require(r1 == Map("insert" -> n), s"cold: $r1")
       val coldPosts = srv.posts.get() - p0
       require(coldPosts >= 500 && coldPosts <= 520, s"cold posts: $coldPosts")
@@ -87,7 +89,7 @@ object IncrSyncSoak {
 
       // steady state -> the wire must be COMPLETELY idle
       val (p1, g1) = (srv.posts.get(), srv.gets.get())
-      val (r2, tSteady) = timed(pipe(0L).runPatientsIncremental(mdir))
+      val (r2, tSteady) = timed(sync(0L))
       require(r2.values.sum == 0L, s"steady: $r2")
       val steadyPosts = srv.posts.get() - p1
       val steadyGets = srv.gets.get() - g1
@@ -96,7 +98,7 @@ object IncrSyncSoak {
 
       // 500-patient delta (ids % 100 == 0 flip Sex)
       val (p2, g2) = (srv.posts.get(), srv.gets.get())
-      val (r3, tDelta) = timed(pipe(n).runPatientsIncremental(mdir))
+      val (r3, tDelta) = timed(sync(n))
       require(r3 == Map("update" -> 500L), s"delta: $r3")
       val deltaPosts = srv.posts.get() - p2
       val deltaGets = srv.gets.get() - g2

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.model.CnicsFixtures
-import graft.pipeline.CnicsPipeline
+import graft.pipeline.{CnicsInputs, CnicsPipeline, Scope}
 import graft.sinks.InMemoryFhirStore
 
 /** Contracts of the incremental Patient sync that the registry row
@@ -15,6 +15,12 @@ class CnicsIncrementalSpec extends AnyFunSuite {
 
   private def mdir() =
     java.nio.file.Files.createTempDirectory("graft_inc").toString
+
+  /** The Patient counters of a manifest-scoped Patient sync. */
+  private def patientsIncremental(in: CnicsInputs, store: InMemoryFhirStore,
+      dir: String): Map[String, Long] =
+    new CnicsPipeline(spark, in, store, "uw").sync(Set("patients"), Scope.Manifest(dir))
+      .collect { case (("Patient", a), n) => a -> n }
 
   private def changedInputs = {
     import spark.implicits._
@@ -31,13 +37,11 @@ class CnicsIncrementalSpec extends AnyFunSuite {
   test("incremental end state equals a from-scratch full run, bodies included") {
     val dir = mdir()
     val incStore = new InMemoryFhirStore
-    new CnicsPipeline(spark, CnicsFixtures.demo(spark), incStore, "uw")
-      .runPatientsIncremental(dir)
-    new CnicsPipeline(spark, changedInputs, incStore, "uw")
-      .runPatientsIncremental(dir)
+    patientsIncremental(CnicsFixtures.demo(spark), incStore, dir)
+    patientsIncremental(changedInputs, incStore, dir)
 
     val fullStore = new InMemoryFhirStore
-    new CnicsPipeline(spark, changedInputs, fullStore, "uw").runPatients()
+    new CnicsPipeline(spark, changedInputs, fullStore, "uw").sync(Set("patients"))
 
     val incPatients = incStore.data.filter(_._1._1 == "Patient")
     val fullPatients = fullStore.data.filter(_._1._1 == "Patient")
@@ -47,11 +51,9 @@ class CnicsIncrementalSpec extends AnyFunSuite {
   test("steady state: second incremental run writes nothing at all") {
     val dir = mdir()
     val store = new InMemoryFhirStore
-    new CnicsPipeline(spark, CnicsFixtures.demo(spark), store, "uw")
-      .runPatientsIncremental(dir)
+    patientsIncremental(CnicsFixtures.demo(spark), store, dir)
     val before = store.data.toMap
-    val r2 = new CnicsPipeline(spark, CnicsFixtures.demo(spark), store, "uw")
-      .runPatientsIncremental(dir)
+    val r2 = patientsIncremental(CnicsFixtures.demo(spark), store, dir)
     assert(r2.values.sum === 0L)
     assert(store.data.toMap === before) // not even a no-op re-PUT
   }
@@ -60,13 +62,23 @@ class CnicsIncrementalSpec extends AnyFunSuite {
     val dir = mdir()
     val incStore = new InMemoryFhirStore
     new CnicsPipeline(spark, CnicsFixtures.demo(spark), incStore, "uw")
-      .runIncremental(dir)
+      .sync(scope = Scope.Manifest(dir))
     new CnicsPipeline(spark, changedInputs, incStore, "uw")
-      .runIncremental(dir)
+      .sync(scope = Scope.Manifest(dir))
+
+    // the same two syncs targeted at every key of the first cohort
+    val keyStore = new InMemoryFhirStore
+    val keys = new CnicsPipeline(spark, CnicsFixtures.demo(spark), keyStore, "uw")
+      .cohort().select("site_pat_id")
+    new CnicsPipeline(spark, CnicsFixtures.demo(spark), keyStore, "uw")
+      .sync(scope = Scope.Keys(keys))
+    new CnicsPipeline(spark, changedInputs, keyStore, "uw")
+      .sync(scope = Scope.Keys(keys))
 
     val fullStore = new InMemoryFhirStore
-    new CnicsPipeline(spark, changedInputs, fullStore, "uw").run()
+    new CnicsPipeline(spark, changedInputs, fullStore, "uw").sync()
     assert(incStore.data.toMap === fullStore.data.toMap) // every type, every body
+    assert(keyStore.data.toMap === fullStore.data.toMap)
   }
 
   test("streaming key-sync end state equals the batch full run, bodies included") {
@@ -75,15 +87,15 @@ class CnicsIncrementalSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val store = new InMemoryFhirStore
     val mem = MemoryStream[String]
-    val q = graft.streaming.CnicsStreams.patientSync(
-      mem.toDF().toDF("site_pat_id"), CnicsFixtures.demo(spark), store, "uw")
+    val q = graft.streaming.CnicsStreams.sync(
+      mem.toDF().toDF("site_pat_id"), CnicsFixtures.demo(spark), store, "uw", Set("patients"))
     try {
       mem.addData("uw-001"); q.processAllAvailable()
       mem.addData("uw-002", "no-such-key"); q.processAllAvailable()
     } finally q.stop()
 
     val full = new InMemoryFhirStore
-    new CnicsPipeline(spark, CnicsFixtures.demo(spark), full, "uw").runPatients()
+    new CnicsPipeline(spark, CnicsFixtures.demo(spark), full, "uw").sync(Set("patients"))
     assert(store.data.filter(_._1._1 == "Patient")
       === full.data.filter(_._1._1 == "Patient"))
   }
@@ -92,7 +104,7 @@ class CnicsIncrementalSpec extends AnyFunSuite {
     import spark.implicits._
     val pq = new graft.sinks.ParquetFhirStore(
       java.nio.file.Files.createTempDirectory("graft_pqcascade").toString)
-    new CnicsPipeline(spark, CnicsFixtures.demo(spark), pq, "uw").run()
+    new CnicsPipeline(spark, CnicsFixtures.demo(spark), pq, "uw").sync()
     assert(pq.snapshot(spark, "Condition").count() === 2L)
     assert(pq.snapshot(spark, "Observation").count() === 3L)
 
@@ -102,7 +114,7 @@ class CnicsIncrementalSpec extends AnyFunSuite {
     val changed = dropped.copy(
       patient = dropped.patient.filter(col("PatientId") =!= 2L))
     val audit = new CnicsPipeline(spark, changed, pq, "uw")
-      .runForKeys(Seq("uw-002").toDF("site_pat_id"))
+      .sync(scope = Scope.Keys(Seq("uw-002").toDF("site_pat_id")))
     assert(audit(("Patient", "delete")) === 1L)
 
     assert(pq.snapshot(spark, "Patient").count() === 1L)
@@ -129,8 +141,7 @@ class CnicsIncrementalSpec extends AnyFunSuite {
     }
     val dir = mdir()
     val base = CnicsFixtures.demo(spark)
-    val r1 = new CnicsPipeline(spark, base, store, "uw")
-      .runPatientsIncremental(dir) // empty store: clean insert run
+    val r1 = patientsIncremental(base, store, dir) // empty store: clean insert run
     assert(r1.get("error").isEmpty && r1("insert") === 2L)
 
     // uw-001's content changes -> dirty -> the dup'd snapshot aborts it
@@ -141,15 +152,13 @@ class CnicsIncrementalSpec extends AnyFunSuite {
       (12L, 2L, None: Option[String], None: Option[String], None: Option[String]),
       (13L, 3L, Some("Male"), Some("Black"), Some("No"))
     ).toDF("DemographicId", "PatientId", "Sex", "Race", "Hispanic"))
-    val r2 = new CnicsPipeline(spark, changed, store, "uw")
-      .runPatientsIncremental(dir)
+    val r2 = patientsIncremental(changed, store, dir)
     assert(r2("error") === 1L && r2.getOrElse("update", 0L) === 0L)
 
     // SAME inputs again: the errored key must still be dirty — a
     // manifest that advanced its hash would report 0 and mask the
     // store corruption forever
-    val r3 = new CnicsPipeline(spark, changed, store, "uw")
-      .runPatientsIncremental(dir)
+    val r3 = patientsIncremental(changed, store, dir)
     assert(r3.get("error").contains(1L),
       s"errored key was masked by the manifest: $r3")
   }
@@ -175,14 +184,12 @@ class CnicsIncrementalSpec extends AnyFunSuite {
   test("a swap crashed between renames heals from the bak manifest") {
     val dir = mdir()
     val store = new InMemoryFhirStore
-    new CnicsPipeline(spark, CnicsFixtures.demo(spark), store, "uw")
-      .runPatientsIncremental(dir)
+    patientsIncremental(CnicsFixtures.demo(spark), store, dir)
     // simulate the crash window: live renamed to bak, new tmp never landed
-    val live = new java.io.File(s"$dir/manifest")
-    val bak = new java.io.File(s"$dir/.manifest.bak")
+    val live = new java.io.File(s"$dir/Patient/manifest")
+    val bak = new java.io.File(s"$dir/Patient/.manifest.bak")
     assert(live.renameTo(bak))
-    val r = new CnicsPipeline(spark, CnicsFixtures.demo(spark), store, "uw")
-      .runPatientsIncremental(dir)
+    val r = patientsIncremental(CnicsFixtures.demo(spark), store, dir)
     // healed prev manifest -> still a zero-action steady state, not a
     // full re-sync of every key
     assert(r.values.sum === 0L)

@@ -21,7 +21,7 @@ class CnicsPipelineSpec extends AnyFunSuite {
   private def inputs: CnicsInputs = graft.model.CnicsFixtures.demo(spark)
 
   private def run(store: InMemoryFhirStore): Map[(String, String), Long] =
-    new CnicsPipeline(spark, inputs, store, "uw").run()
+    new CnicsPipeline(spark, inputs, store, "uw").sync()
 
   test("golden: Patient resource for uw-001 (crosswalk hit, full demographics)") {
     val store = new InMemoryFhirStore
@@ -146,7 +146,7 @@ class CnicsPipelineSpec extends AnyFunSuite {
 
     // drop dx-1 from the source → exactly one Condition delete
     val in2 = inputs.copy(diagnosis = inputs.diagnosis.filter("PatientId <> 1 OR CAST(DiagnosisId AS STRING) <> 'dx-1'"))
-    val audit3 = new CnicsPipeline(spark, in2, store, "uw").run(Set("conditions"))
+    val audit3 = new CnicsPipeline(spark, in2, store, "uw").sync(Set("conditions"))
     assert(audit3(("Condition", "delete")) === 1L)
     assert(!store.data.contains(("Condition", "dx-1")))
     assert(store.data.contains(("Condition", "dx-3")))
@@ -224,7 +224,7 @@ class CnicsPipelineSpec extends AnyFunSuite {
         else super.snapshot(sp, rt, identifierSystem)
       }
     }
-    val audit = new CnicsPipeline(spark, inputs, store, "uw").run(Set("patients"))
+    val audit = new CnicsPipeline(spark, inputs, store, "uw").sync(Set("patients"))
     assert(audit(("Patient", "error")) === 1L)   // one key aborted
     assert(audit(("Patient", "insert")) === 1L)  // uw-002 unaffected
     assert(audit(("Patient", "delete")) === 0L)  // dup rows NOT deleted
@@ -300,7 +300,7 @@ class CnicsPipelineSpec extends AnyFunSuite {
   test("parquet lakehouse store: full pipeline parity with the in-memory store") {
     val pq = new graft.sinks.ParquetFhirStore(
       java.nio.file.Files.createTempDirectory("graft_pqstore").toString)
-    val auditPq = new CnicsPipeline(spark, inputs, pq, "uw").run()
+    val auditPq = new CnicsPipeline(spark, inputs, pq, "uw").sync()
     val mem = new InMemoryFhirStore
     val auditMem = run(mem)
     assert(auditPq === auditMem) // identical classification on both sinks
@@ -311,7 +311,7 @@ class CnicsPipelineSpec extends AnyFunSuite {
       assert(got === want, rt)
     }
     // idempotent re-run: updates only — copy-on-write rewrite is stable
-    val audit2 = new CnicsPipeline(spark, inputs, pq, "uw").run()
+    val audit2 = new CnicsPipeline(spark, inputs, pq, "uw").sync()
     assert(audit2.collect { case ((_, "insert"), n) => n }.sum === 0L)
     assert(audit2.collect { case ((_, "delete"), n) => n }.sum === 0L)
     // subject-scoped child snapshot off the stored JSON covers exactly
@@ -337,7 +337,7 @@ class CnicsPipelineSpec extends AnyFunSuite {
     // re-delete).
     val base = java.nio.file.Files.createTempDirectory("graft_pqcrash").toString
     val pq = new graft.sinks.ParquetFhirStore(base)
-    new CnicsPipeline(spark, inputs, pq, "uw").run()
+    new CnicsPipeline(spark, inputs, pq, "uw").sync()
     // simulate the crash window: uw-002's children removed from every
     // child dir (the cascade half), Patient dir left as-is
     Seq("Condition", "Observation", "MedicationRequest").foreach { rt =>
@@ -356,7 +356,7 @@ class CnicsPipelineSpec extends AnyFunSuite {
     // recovery: the next nightly run, uw-002 now gone from the cohort
     val changed = inputs.copy(
       patient = inputs.patient.filter(col("PatientId") =!= 2L))
-    val audit = new CnicsPipeline(spark, changed, pq, "uw").run()
+    val audit = new CnicsPipeline(spark, changed, pq, "uw").sync()
     assert(audit(("Patient", "delete")) === 1L) // the delete re-fired
     assert(audit(("Condition", "delete")) === 0L) // cascade no-op
     assert(audit(("Observation", "delete")) === 0L)
@@ -374,6 +374,8 @@ class CnicsPipelineSpec extends AnyFunSuite {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     val served = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val posts = new java.util.concurrent.atomic.AtomicInteger(0)
+    // page faults by `_offset`: (status to reply, replies left)
+    val pageFaults = new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
     val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
     server.createContext("/", new HttpHandler {
       def handle(ex: HttpExchange): Unit = {
@@ -425,7 +427,13 @@ class CnicsPipelineSpec extends AnyFunSuite {
               }
             }
             val sorted = matches.sortBy(_._1)
-            if (params.get("_summary").contains("count"))
+            val fault = params.get("_offset").flatMap(o => Option(pageFaults.get(o)))
+              .filter(_._2 > 0)
+            if (fault.isDefined) {
+              val (status, left) = fault.get
+              pageFaults.put(params("_offset"), (status, left - 1))
+              reply(status, """{"resourceType":"OperationOutcome"}""")
+            } else if (params.get("_summary").contains("count"))
               reply(200, s"""{"resourceType":"Bundle","total":${sorted.size}}""")
             else {
               val off = params.get("_offset").map(_.toInt).getOrElse(0)
@@ -490,13 +498,22 @@ class CnicsPipelineSpec extends AnyFunSuite {
         "offset pages must fan out over more than one partition")
       val pm = paged.collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(pm.size === 23 && pm("mk-007") === "mid-007")
+
+      // a 429 on one page is retried, not read as an empty page
+      pageFaults.put("10", (429, 1))
+      assert(pagedStore.snapshot(spark, "Group").count() === 23L)
+      assert(pageFaults.get("10") === ((429, 0)))
+      // any other 4xx fails the snapshot instead of dropping its rows
+      pageFaults.put("15", (404, Int.MaxValue))
+      val lost = intercept[Exception](pagedStore.snapshot(spark, "Group").count())
+      assert(lost.getMessage.contains("HTTP 404"), lost.getMessage)
     } finally server.stop(0)
   }
 
   test("debug channel: reconcile action frames land as queryable parquet (py:527 parity)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_debug").toString
     val store = new InMemoryFhirStore
-    new CnicsPipeline(spark, inputs, store, "uw", debugDir = Some(dir)).run()
+    new CnicsPipeline(spark, inputs, store, "uw", debugDir = Some(dir)).sync()
     val pats = spark.read.parquet(s"$dir/Patient").collect()
     assert(pats.length === 2)
     assert(pats.forall(_.getAs[String]("merge_action") === "insert"))
@@ -509,7 +526,7 @@ class CnicsPipelineSpec extends AnyFunSuite {
     // a delete run records the delete action with its null json
     val in2 = inputs.copy(diagnosis = inputs.diagnosis
       .filter("PatientId <> 1 OR CAST(DiagnosisId AS STRING) <> 'dx-1'"))
-    new CnicsPipeline(spark, in2, store, "uw", debugDir = Some(dir)).run(Set("conditions"))
+    new CnicsPipeline(spark, in2, store, "uw", debugDir = Some(dir)).sync(Set("conditions"))
     val dels = spark.read.parquet(s"$dir/Condition")
       .filter(org.apache.spark.sql.functions.col("merge_action") === "delete").collect()
     assert(dels.map(_.getAs[String]("key")).toSeq === Seq("dx-1"))
@@ -520,16 +537,16 @@ class CnicsPipelineSpec extends AnyFunSuite {
     // the reference's deployment shape — many sites, ONE FHIR store —
     // with the identifier-system-scoped snapshot (cnics_to_fhir.py:322)
     val mem = new InMemoryFhirStore
-    new CnicsPipeline(spark, inputs, mem, "uw").run()
+    new CnicsPipeline(spark, inputs, mem, "uw").sync()
     // sea runs into a store already holding uw's patients: the scoped
     // snapshot hides them, so store∖source must be EMPTY, not uw's rows
-    val sea = new CnicsPipeline(spark, inputs, mem, "sea").run()
+    val sea = new CnicsPipeline(spark, inputs, mem, "sea").sync()
     assert(sea(("Patient", "insert")) === 1L)
     assert(sea(("Patient", "delete")) === 0L)
     assert(mem.data.contains(("Patient", "uw-001")) && mem.data.contains(("Patient", "uw-002")))
     // uw re-runs on the store now holding sea-9: updates its own 2,
     // deletes nothing of sea's
-    val uw2 = new CnicsPipeline(spark, inputs, mem, "uw").run(Set("patients"))
+    val uw2 = new CnicsPipeline(spark, inputs, mem, "uw").sync(Set("patients"))
     assert(uw2(("Patient", "update")) === 2L && uw2(("Patient", "delete")) === 0L)
     assert(mem.data.contains(("Patient", "sea-9")))
     // the scoped snapshot itself returns exactly the site's patients
@@ -540,10 +557,10 @@ class CnicsPipelineSpec extends AnyFunSuite {
     // parquet-store twin: same isolation through the JSON-parsed scope
     val pq = new graft.sinks.ParquetFhirStore(
       java.nio.file.Files.createTempDirectory("graft_pq2site").toString)
-    new CnicsPipeline(spark, inputs, pq, "uw").run(Set("patients"))
-    val seaPq = new CnicsPipeline(spark, inputs, pq, "sea").run(Set("patients"))
+    new CnicsPipeline(spark, inputs, pq, "uw").sync(Set("patients"))
+    val seaPq = new CnicsPipeline(spark, inputs, pq, "sea").sync(Set("patients"))
     assert(seaPq(("Patient", "delete")) === 0L)
-    val uwPq2 = new CnicsPipeline(spark, inputs, pq, "uw").run(Set("patients"))
+    val uwPq2 = new CnicsPipeline(spark, inputs, pq, "uw").sync(Set("patients"))
     assert(uwPq2(("Patient", "delete")) === 0L && uwPq2(("Patient", "update")) === 2L)
     assert(pq.snapshot(spark, "Patient").collect().map(_.getString(0)).toSet
       === Set("uw-001", "uw-002", "sea-9"))
@@ -621,20 +638,20 @@ class CnicsPipelineSpec extends AnyFunSuite {
     try {
       val store = new graft.sinks.HttpFhirStore(
         s"http://localhost:${server.getAddress.getPort}", maxRetries = 2)
-      val uw1 = new CnicsPipeline(spark, inputs, store, "uw").run()
+      val uw1 = new CnicsPipeline(spark, inputs, store, "uw").sync()
       assert(uw1(("Patient", "insert")) === 2L)
-      val sea = new CnicsPipeline(spark, inputs, store, "sea").run()
+      val sea = new CnicsPipeline(spark, inputs, store, "sea").sync()
       assert(sea(("Patient", "insert")) === 1L)
       assert(sea(("Patient", "delete")) === 0L)
       // uw's patients survived sea's reconcile on the SHARED server
       assert(served.containsKey("/Patient/cnics-uw-uw-001"))
       assert(served.containsKey("/Patient/cnics-uw-uw-002"))
-      val uw2 = new CnicsPipeline(spark, inputs, store, "uw").run(Set("patients"))
+      val uw2 = new CnicsPipeline(spark, inputs, store, "uw").sync(Set("patients"))
       assert(uw2(("Patient", "update")) === 2L && uw2(("Patient", "delete")) === 0L)
       assert(served.containsKey("/Patient/cnics-sea-sea-9"))
       // and a real source-side drop arrives as a delete of ONLY that row
       val in2 = inputs.copy(patient = inputs.patient.filter("PatientId <> 2"))
-      val uw3 = new CnicsPipeline(spark, in2, store, "uw").run(Set("patients"))
+      val uw3 = new CnicsPipeline(spark, in2, store, "uw").sync(Set("patients"))
       assert(uw3(("Patient", "delete")) === 1L)
       assert(!served.containsKey("/Patient/cnics-uw-uw-002"))
       assert(served.containsKey("/Patient/cnics-uw-uw-001"))

@@ -352,12 +352,47 @@ object Lakehouse {
     val rowsAfter = spark.read.parquet(tmp).count()
     require(rowsAfter == rowsBefore,
       s"compaction row-count mismatch at $dir: $rowsBefore -> $rowsAfter")
-    val bak = new Path(dir + ".bak")
-    f.delete(bak, true)
-    f.rename(new Path(dir), bak)
-    f.rename(new Path(tmp), new Path(dir))
-    f.delete(bak, true)
+    bakSwapInto(spark, dir, tmp, "compactDir")
     stats
+  }
+
+  /** Swap the fully written dir `fresh` into place at `live` via two
+    * checked renames, staging the old dir (if any) aside at `bak`.
+    * NOT atomic: a crash between the renames leaves `live` missing with
+    * the old consistent dir stranded at `bak` — [[recoverBakSwap]], run
+    * here first and by every reader/writer entry of a bak-swapped
+    * store, restores it on next touch, so the durable contract is "old
+    * consistent dir until the swap completes". A failed rename throws
+    * before anything is deleted. A reader RACING the two-rename window
+    * on a live JVM can still observe the missing dir (or restore it
+    * under the writer, which then fails loudly): swaps are
+    * single-writer events, never run against a store being served. */
+  def bakSwapInto(spark: SparkSession, live: String, fresh: String, what: String,
+      bak: Option[String] = None): Unit = {
+    val f = fs(spark, live)
+    val (l, b) = (new Path(live), new Path(bak.getOrElse(live + ".bak")))
+    recoverBakSwap(spark, live, bak)
+    f.delete(b, true) // a completed swap's missed cleanup
+    if (f.exists(l) && !f.rename(l, b))
+      throw new IllegalStateException(s"$what: cannot stage $live aside")
+    if (!f.rename(new Path(fresh), l))
+      throw new IllegalStateException(s"$what: cannot swap $fresh into $live")
+    f.delete(b, true)
+    ()
+  }
+
+  /** Heal a [[bakSwapInto]] crash window: if `live` is missing but its
+    * `bak` exists, the process died between the two swap renames —
+    * restore the old consistent dir. Returns whether it restored;
+    * no-op in every healthy state ({live present} or {nothing}). */
+  def recoverBakSwap(spark: SparkSession, live: String,
+      bak: Option[String] = None): Boolean = {
+    val f = fs(spark, live)
+    val (l, b) = (new Path(live), new Path(bak.getOrElse(live + ".bak")))
+    val crashed = !f.exists(l) && f.exists(b)
+    if (crashed && !f.rename(b, l) && !f.exists(l))
+      throw new IllegalStateException(s"recoverBakSwap: cannot restore $live from $b")
+    crashed
   }
 
   /** General copy-on-write REWRITE of a versioned store's CURRENT

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.FhirResources
-import graft.operators.Merge
+import graft.operators.{Lakehouse, Merge}
 import graft.sinks.FhirStore
 
 /** The reference's job, re-expressed as one declarative DAG per
@@ -392,18 +392,14 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     val cur = cur0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val live = s"$dir/manifest"
-      val fsys = new org.apache.hadoop.fs.Path(live)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val bak = Some(s"$dir/.manifest.bak")
       // heal a swap crashed between its two renames (live gone, bak
       // holds the previous manifest): restore bak rather than letting
       // an empty prev force a full re-sync
-      val bak = new org.apache.hadoop.fs.Path(s"$dir/.manifest.bak")
-      val livePath = new org.apache.hadoop.fs.Path(live)
-      if (!fsys.exists(livePath) && fsys.exists(bak)) {
-        fsys.rename(bak, livePath); ()
-      }
+      Lakehouse.recoverBakSwap(spark, live, bak)
       val prev =
-        if (fsys.exists(livePath)) spark.read.parquet(live)
+        if (Lakehouse.fs(spark, live).exists(new org.apache.hadoop.fs.Path(live)))
+          spark.read.parquet(live)
         else spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType(Seq(
@@ -422,13 +418,9 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       val manifest = if (dupKeys.isEmpty) manifest0
         else manifest0.filter(!col("key").isin(dupKeys: _*))
       // apply succeeded -> swing the manifest (write fully, then swap)
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/.manifest.tmp")
-      manifest.write.mode("overwrite").parquet(tmp.toString)
-      if (fsys.exists(livePath) && !fsys.rename(livePath, bak))
-        throw new IllegalStateException(s"manifest bak rename failed: $live")
-      if (!fsys.rename(tmp, livePath))
-        throw new IllegalStateException(s"manifest swap failed: $live")
-      fsys.delete(bak, true)
+      val tmp = s"$dir/.manifest.tmp"
+      manifest.write.mode("overwrite").parquet(tmp)
+      Lakehouse.bakSwapInto(spark, live, tmp, "manifestPass", bak)
       counts
     } finally { cur.unpersist(); () }
   }

@@ -2087,13 +2087,12 @@ object SimilarityStreamQueries {
               |$dkSqIvfCtes
               |SELECT query_id, cand_id, adist_e6, rnk FROM sivf WHERE rnk <= 3""".stripMargin)),
 
-    // ── The IVF×SQ8 store's STREAMING serve twin as a driver row:
-    //    row-local probe cells + row-local flat SQ8 LUT (the broadcast
-    //    reconstruction grid transformed per probe — no groupBy on the
-    //    probe side) + coarse-pruned packed graft_sq8_adc scan + ONE
-    //    payload-distinct heap. Streamed == batch is MemoryStream-
-    //    tested in VectorStoreSpec; this row pins the plan's
-    //    arithmetic against the same one-shot IVF-SQ8 SQL. ──
+    // ── Runs the same code as `sq8ivf_store_serve`: the IVF×SQ8
+    //    store's one serve (row-local probe cells + row-local flat SQ8
+    //    LUT, coarse-pruned packed graft_sq8_adc scan, ONE
+    //    payload-distinct heap) accepts batch or streaming probes;
+    //    its MemoryStream run is in VectorStoreSpec. Kept until the
+    //    next registry re-anchor prunes it. ──
     QueryDef(
       "sq8ivf_serve_stream",
       "IVF-SQ8 store streaming-serve plan (row-local cells+LUT, packed kernel) == one-shot IVF-SQ8",
@@ -2106,7 +2105,7 @@ object SimilarityStreamQueries {
           graft.streaming.VectorStreams.sq8IvfFoldBatch(
             emb.filter(pmod(col("vec_id"), lit(2)) === b).select("vec_id", "embedding"),
             base, b, cent, bounds, nAssign = IvfAssign))
-        graft.streaming.VectorStreams.sq8IvfServeStreamFromStore(s, base,
+        graft.streaming.VectorStreams.sq8IvfServeFromStore(s, base,
             emb.filter(col("vec_id") < 32).select("vec_id", "embedding"),
             k = 3, nprobe = IvfProbe)
           .select("query_id", "cand_id", "adist_e6", "rnk")
@@ -2143,14 +2142,12 @@ object SimilarityStreamQueries {
       Some(s"""WITH $dkSqCtes
               |SELECT query_id, cand_id, adist_e6, rnk FROM sadc WHERE rnk <= 3""".stripMargin)),
 
-    // ── The SQ8 store's STREAMING serve twin as a driver row: the
-    //    query-independent reconstruction array broadcasts once, each
-    //    probe transforms it into its flat LUT row-locally (no groupBy
-    //    on the probe side — Sq.adcLutPacked's collect is
-    //    stream-illegal), the packed graft_sq8_adc scan scores the
-    //    pinned codes, ONE bounded heap ranks. Streamed == batch is
-    //    MemoryStream-tested in VectorStoreSpec; this row pins the
-    //    plan's arithmetic against the same exploded sadc SQL. ──
+    // ── Runs the same code as `sq8_store_serve`: the SQ8 store's one
+    //    serve (row-local flat LUT off the broadcast reconstruction
+    //    row, packed graft_sq8_adc scan, ONE bounded heap) accepts
+    //    batch or streaming probes; its MemoryStream run is in
+    //    VectorStoreSpec. Kept until the next registry re-anchor
+    //    prunes it. ──
     QueryDef(
       "sq8_serve_stream",
       "SQ8 store streaming-serve plan (row-local LUT, packed kernel, one heap) == batch ADC",
@@ -2164,7 +2161,7 @@ object SimilarityStreamQueries {
         graft.streaming.VectorStreams.sqFoldBatch(
           emb.filter(pmod(col("vec_id"), lit(2)) === 1).select("vec_id", "embedding"),
           base, 1L, bounds)
-        graft.streaming.VectorStreams.sq8ServeStreamFromStore(s, base,
+        graft.streaming.VectorStreams.sq8ServeFromStore(s, base,
           emb.filter(col("vec_id") < 32).select("vec_id", "embedding"), 3)
       },
       Some(s"""WITH $dkSqCtes
@@ -2985,13 +2982,11 @@ object SimilarityStreamQueries {
               |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rnk
               |FROM scored QUALIFY rnk <= 3""".stripMargin)),
 
-    // ── The IVF store's STREAMING serve twin as a driver row: the
-    //    row-local probe-cell ranking (comparator array_sort over the
-    //    one-row broadcast quantizer — no ivfRank window, so the plan
-    //    is streaming-legal with exactly one stateful op, the distinct
-    //    bounded heap) run here over the batch probe frame. Streamed ==
-    //    batch is MemoryStream-tested in VectorStoreSpec; this row pins
-    //    the plan's arithmetic against the same one-shot IVF SQL. ──
+    // ── Runs the same code as `ivf_store_serve`: the IVF store's one
+    //    serve (row-local probe-cell ranking over the one-row broadcast
+    //    quantizer, ONE distinct bounded heap) accepts batch or
+    //    streaming probes; its MemoryStream run is in VectorStoreSpec.
+    //    Kept until the next registry re-anchor prunes it. ──
     QueryDef(
       "ivf_serve_stream",
       "IVF store streaming-serve plan (row-local probe cells, one heap) == one-shot IVF",
@@ -3005,7 +3000,7 @@ object SimilarityStreamQueries {
         graft.streaming.VectorStreams.ivfFoldBatch(
           emb.filter(pmod(col("vec_id"), lit(2)) === 1), base, 1L, cent,
           nAssign = IvfAssign)
-        graft.streaming.VectorStreams.ivfServeStreamFromStore(
+        graft.streaming.VectorStreams.ivfServeFromStore(
             s, base, emb.filter(col("vec_id") < 32), k = 3, nprobe = IvfProbe)
           .select("query_id", "cand_id", "cosine", "rnk")
       },
@@ -3252,13 +3247,12 @@ object SimilarityStreamQueries {
               |$dkIvfAdcCtes
               |SELECT query_id, cand_id, adist_e6, rnk FROM ivfadc WHERE rnk <= 3""".stripMargin)),
 
-    // ── The IVF×PQ store's STREAMING serve twin as a driver row:
-    //    row-local probe cells + row-local flat LUT (dense broadcast
-    //    codeword grid transformed per probe — no groupBy on the probe
-    //    side) + packed graft_adc_sum scan + ONE payload-distinct heap.
-    //    Streamed == batch is MemoryStream-tested in VectorStoreSpec;
-    //    this row pins the plan's arithmetic against the same one-shot
-    //    IVF-ADC CTE chain. ──
+    // ── Runs the same code as `ivfpq_store_serve`: the IVF×PQ store's
+    //    one serve (row-local probe cells + row-local flat LUT off the
+    //    broadcast codeword grid, packed graft_adc_sum scan, ONE
+    //    payload-distinct heap) accepts batch or streaming probes; its
+    //    MemoryStream run is in VectorStoreSpec. Kept until the next
+    //    registry re-anchor prunes it. ──
     QueryDef(
       "ivfpq_serve_stream",
       "IVF-PQ store streaming-serve plan (row-local cells+LUT, packed kernel) == one-shot IVF-ADC",
@@ -3273,7 +3267,7 @@ object SimilarityStreamQueries {
         graft.streaming.VectorStreams.ivfPqFoldBatch(
           emb.filter(pmod(col("vec_id"), lit(2)) === 1), base, 1L, cent, books,
           nAssign = IvfAssign, pqM = PqM, pqSub = PqSub)
-        graft.streaming.VectorStreams.ivfPqServeStreamFromStore(
+        graft.streaming.VectorStreams.ivfPqServeFromStore(
             s, base, emb.filter(col("vec_id") < 32), k = 3, nprobe = IvfProbe)
           .select("query_id", "cand_id", "adist_e6", "rnk")
       },

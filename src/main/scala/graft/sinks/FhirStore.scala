@@ -163,8 +163,19 @@ class InMemoryFhirStore extends FhirStore with Serializable {
 class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
   private def dir(rt: String) = s"$baseDir/$rt"
 
+  /** Restore every type dir a crashed [[swapIn]] left stranded at
+    * `<type>.bak` — run by every read and write entry, so a crash
+    * between the swap's two renames never reads as an empty store
+    * (which would classify every source row as an insert). */
+  private def heal(spark: SparkSession): Unit =
+    Option(new java.io.File(baseDir).list()).getOrElse(Array.empty[String])
+      .filter(_.endsWith(".bak"))
+      .foreach(b => graft.operators.Lakehouse.recoverBakSwap(spark,
+        s"$baseDir/${b.stripSuffix(".bak")}"))
+
   def snapshot(spark: SparkSession, resourceType: String,
       identifierSystem: Option[String] = None): DataFrame = {
+    heal(spark)
     val d = new java.io.File(dir(resourceType))
     if (!d.exists())
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], FhirStore.snapshotSchema)
@@ -186,6 +197,7 @@ class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
 
   def snapshotForSubjects(spark: SparkSession, resourceType: String,
       subjectIds: DataFrame): DataFrame = {
+    heal(spark)
     val d = new java.io.File(dir(resourceType))
     if (!d.exists())
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], FhirStore.snapshotSchema)
@@ -200,6 +212,7 @@ class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
 
   def applyActions(resourceType: String, actions: DataFrame): Map[String, Long] = {
     val spark = actions.sparkSession
+    heal(spark)
     val acts = actions.select("key", "id", "json", "merge_action")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counts = acts.groupBy("merge_action").count().collect()
@@ -241,29 +254,25 @@ class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
               .withColumn("__subj", get_json_object(col("json"), "$.subject.reference"))
               .join(broadcast(deletedRefs), Seq("__subj"), "left_anti")
               .select("key", "id", "json")
-            swapIn(child.getName, kept)
+            swapIn(spark, child.getName, kept)
           }
       }
     }
-    swapIn(resourceType, next)
+    swapIn(spark, resourceType, next)
     acts.unpersist(blocking = false)
     counts
   }
 
   /** Copy-on-write swap: write `next` to a versioned tmp dir, then
-    * bak-swap it into place (atomic-enough for a local filesystem;
-    * object stores would commit a manifest instead). */
-  private def swapIn(resourceType: String, next: DataFrame): Unit = {
+    * bak-swap it into place ([[graft.operators.Lakehouse.bakSwapInto]]:
+    * a failed rename throws before anything is deleted, and a crash
+    * between the renames is healed by [[heal]]; object stores would
+    * commit a manifest instead). */
+  private def swapIn(spark: SparkSession, resourceType: String, next: DataFrame): Unit = {
     val tmp = dir(resourceType) + ".v" + System.nanoTime()
     next.write.mode("overwrite").parquet(tmp)
-    val old = dir(resourceType)
-    val bak = old + ".bak"
-    if (new java.io.File(old).exists()) {
-      new java.io.File(old).renameTo(new java.io.File(bak)); ()
-    }
-    new java.io.File(tmp).renameTo(new java.io.File(old))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(bak))
-    ()
+    graft.operators.Lakehouse.bakSwapInto(spark, dir(resourceType), tmp,
+      "ParquetFhirStore")
   }
 }
 
@@ -275,9 +284,10 @@ class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
   * `access_token` parsed from the JSON reply, and `Authorization:
   * Bearer <token>` on every subsequent store call. A failed fetch
   * THROWS — the reference `quit()`s ("Unable to query FHIR server for
-  * auth token"); a 4xx is a credential problem and fails immediately
-  * (retrying cannot fix it), 5xx/connect errors get the store's
-  * bounded-retry treatment.
+  * auth token"). The POST goes through [[HttpFhirStore.send]]: a 429,
+  * 5xx or connect error gets the store's bounded-retry treatment, any
+  * other 4xx is a credential problem and fails immediately (retrying
+  * cannot fix it), and so does a reply without an `access_token`.
   *
   * Scale shape: tokens cache PER JVM (companion map keyed on
   * (url, client, secret)), so the driver fetches once at store
@@ -287,7 +297,7 @@ class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
   * before the request is failed for real. */
 final class ClientCredentialsAuth(tokenUrl: String, clientId: String,
     clientSecret: String, maxRetries: Int = 5) extends Serializable {
-  import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+  import java.net.http.{HttpClient, HttpRequest}
 
   private def key = (tokenUrl, clientId, clientSecret)
 
@@ -311,33 +321,26 @@ final class ClientCredentialsAuth(tokenUrl: String, clientId: String,
     // the hardening move if the server ever accepts it.
     val u = s"$tokenUrl?grant_type=client_credentials" +
       s"&client_id=${enc(clientId)}&client_secret=${enc(clientSecret)}"
-    val req = HttpRequest.newBuilder(java.net.URI.create(u))
-      .header("Content-Type", "application/json")
-      .POST(HttpRequest.BodyPublishers.noBody()).build()
-    var attempt = 0
-    var last: Throwable = null
-    while (attempt < maxRetries) {
-      try {
-        val r = c.send(req, HttpResponse.BodyHandlers.ofString())
-        if (r.statusCode() < 400) {
-          val tok = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(r.body()).path("access_token").asText(null)
-          if (tok != null && tok.nonEmpty) return tok
-          last = new IllegalStateException(
-            s"auth reply from $tokenUrl carries no access_token")
-        } else if (r.statusCode() < 500) {
-          throw new IllegalStateException(
-            s"unable to fetch FHIR auth token: HTTP ${r.statusCode()} from $tokenUrl")
-        } else last = new RuntimeException(s"HTTP ${r.statusCode()}")
-      } catch {
-        case e: IllegalStateException => throw e
-        case e: Throwable => last = e
-      }
-      attempt += 1
-      Thread.sleep(200L * attempt)
+    try {
+      val r = HttpFhirStore.send(c, None, maxRetries, () =>
+        HttpRequest.newBuilder(java.net.URI.create(u))
+          .header("Content-Type", "application/json")
+          .POST(HttpRequest.BodyPublishers.noBody()))
+      val tok = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(r.body()).path("access_token").asText(null)
+      require(tok != null && tok.nonEmpty, "auth reply carries no access_token")
+      tok
+    } catch {
+      case e: Exception =>
+        // send's messages name the request URI, whose query carries the
+        // secret: the cause keeps the trace, never the secret
+        val (msg, secret) = (String.valueOf(e.getMessage), enc(clientSecret))
+        val cause = new RuntimeException(
+          if (secret.isEmpty) msg else msg.replace(secret, "<secret>"))
+        cause.setStackTrace(e.getStackTrace)
+        throw new IllegalStateException(
+          s"unable to fetch FHIR auth token from $tokenUrl", cause)
     }
-    throw new IllegalStateException(
-      s"unable to fetch FHIR auth token from $tokenUrl", last)
   }
 }
 
@@ -608,7 +611,7 @@ object HttpFhirStore {
     * would silently lose its rows) or counted as a written bundle. The
     * request is supplied as a BUILDER thunk so each attempt can
     * re-stamp the Authorization header with the current token. */
-  private def send(c: HttpClient, auth: Option[ClientCredentialsAuth], retries: Int,
+  private[sinks] def send(c: HttpClient, auth: Option[ClientCredentialsAuth], retries: Int,
       mk: () => HttpRequest.Builder): HttpResponse[String] = {
     var attempt = 0
     var refreshed = false

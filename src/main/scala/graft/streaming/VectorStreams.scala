@@ -83,43 +83,15 @@ object VectorStreams {
         col("e._2").as("cand_id"), col("e._1").as("cosine"))
   }
 
-  /** Swap a freshly rebuilt store into place via two directory
-    * renames. NOT atomic (ADVICE r15): a crash between the renames
-    * leaves `tableDir` missing with the old consistent store stranded
-    * under `tableDir.bak` — [[recoverBakSwap]], run by every
-    * reader/fold entry, restores it on next touch, so the DURABLE
-    * contract is "old consistent store until the swap completes". A
-    * reader RACING the two-rename window on a live JVM can still
-    * observe the missing directory and fail ("no CURRENT pointer");
-    * rebuilds are single-writer ops events, so the documented
-    * discipline is: don't serve a store while rebuilding it in place
-    * (rebuild a copy and repoint, or accept the transient failure). */
-  private def bakSwapInto(tableDir: String, fresh: String, what: String): Unit = {
-    val old = new java.io.File(tableDir)
-    val bak = new java.io.File(tableDir + ".bak")
-    org.apache.commons.io.FileUtils.deleteQuietly(bak)
-    require(old.renameTo(bak), s"$what: cannot stage $tableDir aside")
-    require(new java.io.File(fresh).renameTo(old),
-      s"$what: cannot swap rebuilt store into $tableDir")
-    org.apache.commons.io.FileUtils.deleteQuietly(bak)
-  }
-
-  /** Startup recovery for a [[bakSwapInto]] crash window: if the store
-    * directory is missing but `tableDir.bak` exists, the JVM died
-    * between the two swap renames — restore the old consistent store
-    * and discard any half-staged `.rebuild` sibling (a crashed rebuild
-    * must be re-run from its entry point, never resumed). No-op in
-    * every healthy state ({dir present} or {nothing at all}). */
-  private def recoverBakSwap(tableDir: String): Unit = {
-    val dir = new java.io.File(tableDir)
-    val bak = new java.io.File(tableDir + ".bak")
-    if (!dir.exists() && bak.exists()) {
-      require(bak.renameTo(dir),
-        s"recoverBakSwap: cannot restore $tableDir from its .bak stage")
+  /** [[graft.operators.Lakehouse.recoverBakSwap]] for a vector store:
+    * a restore also discards any half-staged `.rebuild` sibling (a
+    * crashed rebuild must be re-run from its entry point, never
+    * resumed). Run by every reader/fold entry. */
+  private def recoverBakSwap(spark: org.apache.spark.sql.SparkSession,
+      tableDir: String): Unit =
+    if (graft.operators.Lakehouse.recoverBakSwap(spark, tableDir))
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(tableDir + ".rebuild"))
-    }
-  }
 
   // ─────────── candidate attributes (filtered serving) ───────────
 
@@ -219,7 +191,7 @@ object VectorStreams {
       compactEvery: Int, vacuumKeep: Int, compactTables: Seq[String])
       (writeBatchTables: Option[String] => Unit): Unit = {
     val spark = batch.sparkSession
-    recoverBakSwap(tableDir)
+    recoverBakSwap(spark, tableDir)
     val cur = new java.io.File(s"$tableDir/CURRENT")
     val ver: Option[String] =
       if (cur.exists()) Some(java.nio.file.Files.readString(cur.toPath).trim)
@@ -252,7 +224,7 @@ object VectorStreams {
     * racing a concurrent fold's swing. */
   private def pinnedReader(spark: org.apache.spark.sql.SparkSession,
       tableDir: String, version: Option[String]): String => DataFrame = {
-    recoverBakSwap(tableDir)
+    recoverBakSwap(spark, tableDir)
     val ver = version.orElse(graft.operators.Lakehouse.currentVersion(spark, tableDir))
       .getOrElse(throw new IllegalStateException(s"no CURRENT pointer under $tableDir"))
     t => graft.operators.Lakehouse.readCurrentAppend(spark, tableDir, t, Some(ver))
@@ -879,7 +851,7 @@ object VectorStreams {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(fresh))
     mipsAlshFoldBatch(vecs, fresh, 0L, newM, dim, nPlanes, nTables,
       attrCols = attrs)
-    bakSwapInto(tableDir, fresh, "rebuildAlshStore")
+    graft.operators.Lakehouse.bakSwapInto(spark, tableDir, fresh, "rebuildAlshStore")
     newM
   }
 
@@ -925,7 +897,7 @@ object VectorStreams {
       multiProbe: Boolean = false,
       predicate: Option[String] = None): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    recoverBakSwap(tableDir) // before the layout guards: in the swap
+    recoverBakSwap(spark, tableDir) // before the layout guards: in the swap
     // crash window every pin lives under .bak, and the guard would
     // misread the store as raw
     require(new java.io.File(s"$tableDir/MAX_NORM").exists(),
@@ -1051,18 +1023,22 @@ object VectorStreams {
 
   /** IVF top-k from a standing [[ivfIndexIngest]] store, pinned to
     * `version` (default CURRENT). `probes` may be batch or streaming:
-    * probe cells come from one broadcast ranking against the store's
-    * PINNED quantizer (nq×K rows through a probe-local window), the
-    * pinned posts table joins on cell — parquet row-group pruning on
-    * the cell-sorted layout bounds the scan to ≈nprobe/K of the index
-    * — and candidates rescore exactly against the once-per-vector
-    * `vectors` table with the payload-distinct bounded heap (a
-    * candidate reached through several probed cells collapses in O(k)
-    * aggregation state — the [[annServe]] discipline). Ties (cosine
-    * desc, cand_id) match the batch `sim_ivf_topk` window row for row
-    * (oracle-pinned by `ivf_store_serve`).
+    * the probe side is ROW-LOCAL ([[ivfProbeCellsRowLocal]] ranks the
+    * probe's `nprobe` cells against the store's PINNED quantizer in a
+    * projection — no window, shuffle or aggregate), the pinned posts
+    * table joins on cell — parquet row-group pruning on the
+    * cell-sorted layout bounds the scan to ≈nprobe/K of the index —
+    * and candidates rescore exactly against the once-per-vector
+    * `vectors` table. ONE stateful operator ranks: the payload-distinct
+    * bounded heap (a candidate reached through several probed cells
+    * carries one identical cosine and collapses in O(k) aggregation
+    * state — the [[annServe]] discipline). Ties (cosine desc, cand_id)
+    * match the batch `sim_ivf_topk` window row for row (oracle-pinned
+    * by `ivf_store_serve` / `ivf_serve_stream`). The pre-filter
+    * `predicate` is stream-legal: it and the semi-prune sit on the
+    * store side of the join.
     *
-    * Output: (query_id, rnk, cand_id, cosine). */
+    * Output: (query_id, rnk, cand_id, cosine); update mode on a stream. */
   def ivfServeFromStore(spark: org.apache.spark.sql.SparkSession,
       tableDir: String, probes: DataFrame, k: Int, nprobe: Int,
       version: Option[String] = None,
@@ -1073,22 +1049,18 @@ object VectorStreams {
         "use mipsIvfServeFromStore")
     val pinned = pinnedReader(spark, tableDir, version)
     val cent = spark.read.parquet(s"$tableDir/centroids")
-    val probeCells = graft.operators.Knn
-      .ivfRank(probes.select("vec_id", "embedding"), cent, "vec_id", "embedding")
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_norm"), col("cell"))
-    // pre-filter (see mipsIvfServeFromStore): survivors prune the
-    // postings below the candidate join; rescore reads only survivors
+    val pc = ivfProbeCellsRowLocal(probes, cent, nprobe)
+      .withColumn("cell", explode(col("cells"))).drop("cells")
+    // pre-filter: survivors prune the postings below the candidate
+    // join; rescore reads only survivors
     val keep = keepOf(pinned, predicate)
     val posts = pruneToSurvivors(
       pinned("posts").select(col("vec_id").as("cand_id"), col("cell")),
       keep, "cand_id", predicate)
-    val vecs = keep
     val topk = udaf(graft.functions.TopKDistinctAgg.longs(k))
-    probeCells.join(posts, Seq("cell"))
+    pc.join(posts, Seq("cell"))
       .filter(col("query_id") =!= col("cand_id"))
-      .join(vecs.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
+      .join(keep.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
         col("nrm").as("c_norm")), Seq("cand_id"))
       .withColumn("cosine", round(
         VectorFunctions.dot("q_emb", "c_emb") / (col("q_norm") * col("c_norm")), 8))
@@ -1099,17 +1071,18 @@ object VectorStreams {
         col("e._2").as("cand_id"), col("e._1").as("cosine"))
   }
 
-  /** Row-local probe-cell ranking — the streaming-legal twin of
-    * [[graft.operators.Knn.ivfRank]]'s per-vector window: the pinned
-    * K-row quantizer collapses to ONE broadcastable array row, each
-    * probe ranks it INSIDE a higher-order expression (comparator
-    * `array_sort` + `slice`), and the top-`nprobe` cells come back as
-    * a row-local array — a pure stream-side projection, no window, no
-    * aggregation. Arithmetic is ivfRank's verbatim (round-8 cosine of
-    * the double casts); the comparator reproduces the window's
-    * (csim desc, cell asc) total order including NaN-greatest (a
-    * zero-norm probe ranks NaN cells first, exactly like the desc
-    * sort). K×dim doubles per probe row — metadata-sized.
+  /** Row-local probe-cell ranking — the per-probe form of
+    * [[graft.operators.Knn.ivfRank]]'s per-vector window, legal on a
+    * stream and on a batch frame alike: the pinned K-row quantizer
+    * collapses to ONE broadcastable array row, each probe ranks it
+    * INSIDE a higher-order expression (comparator `array_sort` +
+    * `slice`), and the top-`nprobe` cells come back as a row-local
+    * array — a pure probe-side projection, no window, no aggregation.
+    * Arithmetic is ivfRank's verbatim (round-8 cosine of the double
+    * casts); the comparator reproduces the window's (csim desc, cell
+    * asc) total order including NaN-greatest (a zero-norm probe ranks
+    * NaN cells first, exactly like the desc sort). K×dim doubles per
+    * probe row — metadata-sized.
     *
     * Output: (query_id, q_emb, q_norm, cells array<bigint>) — callers
     * attach any further per-probe columns, then explode `cells`. */
@@ -1138,47 +1111,70 @@ object VectorStreams {
            |1, $nprobe), e -> e.cell)""".stripMargin).as("cells"))
   }
 
-  /** STREAMING IVF serving off the standing [[ivfIndexIngest]] store —
-    * [[ivfServeFromStore]]'s plan with the probe-side cell ranking
-    * made row-local ([[ivfProbeCellsRowLocal]]; the batch path's
-    * ivfRank window is stream-illegal), leaving exactly ONE stateful
-    * operator: the payload-distinct bounded heap (a candidate reached
-    * through several probed cells carries one identical cosine and
-    * collapses in O(k) aggregation state). Equals the batch serve row
-    * for row over the same pinned version (equivalence-tested).
+  /** The pinned PQ codebooks as ONE broadcastable row `cws`: a dense
+    * (m × ksEff) codeword grid ordered by (m, code) — slot m·ksEff+code
+    * carries the codeword, NULL where the Lloyd update dropped the cell
+    * (the [[graft.operators.Pq.adcLutFlat]] densification). */
+  private def codewordGrid(books: DataFrame, ksEff: Int): DataFrame =
+    books.select(col("m")).distinct()
+      .withColumn("code", explode(expr(s"sequence(0, ${ksEff - 1})")))
+      .join(books.select(col("m"), col("cell").as("code"), col("cw")),
+        Seq("m", "code"), "left")
+      .groupBy()
+      .agg(expr("transform(array_sort(collect_list(struct(m, code, cw))), x -> x.cw)")
+        .as("cws"))
+
+  /** The pinned coarse quantizer as ONE broadcastable row `cgrid`: slot
+    * cell+1 carries the (×2²⁰-space) centroid, NULL if the Lloyd update
+    * dropped the cell (stored homes always name live cells). */
+  private def centroidGrid(cent: DataFrame, kCells: Int): DataFrame =
+    cent.sparkSession.range(kCells).select(col("id").as("cell"))
+      .join(cent.select(col("cell"), col("cw")), Seq("cell"), "left")
+      .groupBy()
+      .agg(expr("transform(array_sort(collect_list(struct(cell, cw))), x -> x.cw)")
+        .as("cgrid"))
+
+  /** Attach each probe row's flat SQ8 LUT `lut` off its `q_emb`, row
+    * locally: the pinned bounds collapse to ONE dense (dim·256)-slot
+    * broadcast reconstruction row — slot d·256 + code is that code's
+    * reconstructed value in dimension d ([[graft.operators.Sq.adcLut]]'s
+    * CASE + affine verbatim) — and each probe transforms it into its
+    * `floor((v − recon)² · 1e6)` entries. A pure projection, no groupBy
+    * on the probe side ([[graft.operators.Sq.adcLutPacked]]'s collect is
+    * stream-illegal). dim rides the plan as size(mn_arr) (r18): no
+    * driver action per serve construction. */
+  private def withSq8Lut(probes: DataFrame, bounds: DataFrame): DataFrame = {
+    val recon = graft.operators.Sq.boundsRow(bounds).select(expr(
+      s"""transform(sequence(0, size(mn_arr) * 256 - 1), i ->
+         |  CASE WHEN mx_arr[i div 256] = mn_arr[i div 256] THEN mn_arr[i div 256]
+         |       ELSE mn_arr[i div 256] + (i % 256) / 255.0D
+         |              * (mx_arr[i div 256] - mn_arr[i div 256])
+         |  END)""".stripMargin).as("recon"))
+    probes.crossJoin(broadcast(recon))
+      .withColumn("lut", expr(
+        """transform(recon, (r, i) ->
+          |  CAST(floor((CAST(q_emb[i div 256] AS DOUBLE) - r)
+          |    * (CAST(q_emb[i div 256] AS DOUBLE) - r) * 1000000.0D) AS BIGINT))""".stripMargin))
+      .drop("recon")
+  }
+
+  /** Rank `scored` (query_id, cand_id, `dist` BIGINT) per query by
+    * (dist asc, cand_id asc) through ONE bounded heap — payload-distinct
+    * when a candidate may arrive through several probed cells (it
+    * carries one identical integer sum each time).
     *
-    * Output: (query_id, rnk, cand_id, cosine); update mode. */
-  def ivfServeStreamFromStore(spark: org.apache.spark.sql.SparkSession,
-      tableDir: String, probeStream: DataFrame, k: Int, nprobe: Int,
-      version: Option[String] = None,
-      predicate: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    require(!new java.io.File(s"$tableDir/MAX_NORM").exists(),
-      s"ivfServeStreamFromStore: $tableDir is a lifted (MIPS) IVF store — " +
-        "use mipsIvfServeFromStore")
-    val pinned = pinnedReader(spark, tableDir, version)
-    val cent = spark.read.parquet(s"$tableDir/centroids")
-    val pc = ivfProbeCellsRowLocal(probeStream, cent, nprobe)
-      .withColumn("cell", explode(col("cells"))).drop("cells")
-    // pre-filter is stream-legal: the predicate and the semi-prune sit
-    // on the BATCH (store) side of the stream-static join
-    val keep = keepOf(pinned, predicate)
-    val posts = pruneToSurvivors(
-      pinned("posts").select(col("vec_id").as("cand_id"), col("cell")),
-      keep, "cand_id", predicate)
-    val vecs = keep
-    val topk = udaf(graft.functions.TopKDistinctAgg.longs(k))
-    pc.join(posts, Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .join(vecs.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
-        col("nrm").as("c_norm")), Seq("cand_id"))
-      .withColumn("cosine", round(
-        VectorFunctions.dot("q_emb", "c_emb") / (col("q_norm") * col("c_norm")), 8))
-      .groupBy("query_id")
-      .agg(topk(col("cosine"), col("cand_id").cast("long")).as("tk"))
+    * Output: (query_id, cand_id, `dist`, rnk). */
+  private def ascTopK(scored: DataFrame, dist: String, k: Int,
+      distinct: Boolean): DataFrame = {
+    val topk =
+      if (distinct) udaf(graft.functions.TopKDistinctAgg.longs(k))
+      else udaf(graft.functions.TopKAgg.longs(k))
+    scored.groupBy("query_id")
+      .agg(topk((-col(dist)).cast("double"), col("cand_id")).as("tk"))
       .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("query_id"), (col("pos") + 1).cast("long").as("rnk"),
-        col("e._2").as("cand_id"), col("e._1").as("cosine"))
+      .select(col("query_id"), col("e._2").as("cand_id"),
+        (-col("e._1")).cast("long").as(dist),
+        (col("pos") + 1).cast("int").as("rnk"))
   }
 
   // ─────────────── lifted-IVF (MIPS) standing store ───────────────
@@ -1295,7 +1291,7 @@ object VectorStreams {
     val fresh = tableDir + ".rebuild"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(fresh))
     mipsIvfFoldBatch(vecs, fresh, 0L, cent, newM, nAssign, attrCols = attrs)
-    bakSwapInto(tableDir, fresh, "rebuildMipsIvfStore")
+    graft.operators.Lakehouse.bakSwapInto(spark, tableDir, fresh, "rebuildMipsIvfStore")
     newM
   }
 
@@ -1332,7 +1328,7 @@ object VectorStreams {
       version: Option[String] = None,
       predicate: Option[String] = None): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    recoverBakSwap(tableDir) // before the layout guard (see
+    recoverBakSwap(spark, tableDir) // before the layout guard (see
     // mipsAlshServeFromStore)
     require(new java.io.File(s"$tableDir/MAX_NORM").exists(),
       s"mipsIvfServeFromStore: $tableDir carries raw (unlifted) IVF postings — " +
@@ -1410,7 +1406,7 @@ object VectorStreams {
       tableDir: String, k: Int, predicate: String, version: Option[String],
       what: String, safety: Double, grow: Int, maxRetries: Int)(
       serveAt: (Int, Option[String]) => DataFrame): DataFrame = {
-    recoverBakSwap(tableDir)
+    recoverBakSwap(spark, tableDir)
     val ver = version.orElse(graft.operators.Lakehouse.currentVersion(spark, tableDir))
       .getOrElse(throw new IllegalStateException(s"no CURRENT pointer under $tableDir"))
     val pinned = pinnedReader(spark, tableDir, Some(ver))
@@ -1604,20 +1600,29 @@ object VectorStreams {
       .start()
 
   /** IVF-ADC top-k from a standing [[ivfPqIngest]] store, pinned to
-    * `version` (default CURRENT): probe cells against the pinned
-    * quantizer, coarse-prune candidates through the pinned posts, and
-    * ADC-score ONLY those candidates' PACKED code rows through the
-    * codegen'd `graft_adc_sum` kernel against the broadcast flat
-    * per-query LUT — the scan touches ≈ nprobe·nAssign/K of the code
-    * index (one row per candidate, never |cand|·m exploded join rows),
-    * and the index itself is the 64×-compressed view of the corpus.
-    * Ranking is the bounded heap by (adist_e6 asc, cand_id asc) —
-    * exactly the batch `pq_ivf_adc_topk` total order (oracle-pinned
-    * by `ivfpq_store_serve`; integer ADC sums are order-insensitive,
-    * so the exploded-form oracle applies verbatim — the
-    * `sq8_store_serve` precedent).
+    * `version` (default CURRENT). `probes` may be batch or streaming:
+    * every probe-side stage is row-local, leaving ONE stateful
+    * operator:
     *
-    * Output: (query_id, cand_id, adist_e6, rnk). */
+    *   - probe cells rank against the pinned quantizer
+    *     ([[ivfProbeCellsRowLocal]]);
+    *   - the flat ADC LUT builds row-locally: each probe row transforms
+    *     the broadcast [[codewordGrid]] into its LUT with the exact
+    *     [[graft.operators.Pq.adcLut]] arithmetic — no groupBy on the
+    *     probe side;
+    *   - candidates coarse-prune through the pinned posts — the scan
+    *     touches ≈ nprobe·nAssign/K of the code index, the
+    *     64×-compressed view of the corpus — and score their PACKED code
+    *     row in one codegen'd `graft_adc_sum` kernel call;
+    *   - ranking is the payload-distinct bounded heap by (adist_e6 asc,
+    *     cand_id asc) — a candidate reached through several probed
+    *     cells carries one identical integer sum.
+    *
+    * Exactly the batch `pq_ivf_adc_topk` total order (oracle-pinned by
+    * `ivfpq_store_serve` / `ivfpq_serve_stream`; integer ADC sums are
+    * order-insensitive, so the exploded-form oracle applies verbatim).
+    *
+    * Output: (query_id, cand_id, adist_e6, rnk); update mode on a stream. */
   def ivfPqServeFromStore(spark: org.apache.spark.sql.SparkSession,
       tableDir: String, probes: DataFrame, k: Int, nprobe: Int,
       version: Option[String] = None,
@@ -1638,87 +1643,8 @@ object VectorStreams {
       max(size(col("cw"))).as("sd"), max(col("cell")).as("mc")).head()
     val (pqM, pqSub) = (shape.getInt(0) + 1, shape.getInt(1))
     val ksEff = shape.getLong(2).toInt + 1
-    val probeCells = graft.operators.Knn
-      .ivfRank(probes.select("vec_id", "embedding"), cent, "vec_id", "embedding")
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("cell"))
-    val cand = probeCells
-      .join(pruneToSurvivors( // pre-filter below the candidate join
-          pinned("posts").select(col("vec_id").as("cand_id"), col("cell")),
-          keepOf(pinned, predicate), "cand_id", predicate), Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select("query_id", "cand_id").distinct()
-    val lut = graft.operators.Pq.adcLutFlat(
-        graft.operators.Pq.subviews(probes.select("vec_id", "embedding"),
-          "vec_id", "embedding", pqM, pqSub),
-        "vec_id", books, ksEff)
-      .withColumnRenamed("vec_id", "query_id")
-    val topk = udaf(graft.functions.TopKAgg.longs(k))
-    // coarse prune BEFORE the kernel scan. `cand` scales with corpus
-    // size (≈ nq·nAssign·n_vecs/K rows), so it is NOT force-broadcast:
-    // AQE broadcasts it when small and shuffle-joins on cand_id when
-    // not. Only the flat LUT (nq rows of m·ks longs) is always
-    // broadcast; each surviving (query, cand) pair is ONE kernel call.
-    pinned("codes").select(col("vec_id").as("cand_id"), col("codes"))
-      .join(cand, Seq("cand_id"))
-      .join(broadcast(lut), Seq("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        expr(s"graft_adc_sum(codes, lut, $ksEff)").as("adist_e6"))
-      .groupBy("query_id")
-      .agg(topk((-col("adist_e6")).cast("double"), col("cand_id")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e._2").as("cand_id"),
-        (-col("e._1")).cast("long").as("adist_e6"),
-        (col("pos") + 1).cast("int").as("rnk"))
-  }
-
-  /** STREAMING IVF-ADC serving off the standing [[ivfPqIngest]] store —
-    * [[ivfPqServeFromStore]] with every probe-side stage made
-    * row-local, leaving ONE stateful operator:
-    *
-    *   - probe cells rank row-locally ([[ivfProbeCellsRowLocal]] —
-    *     the ivfRank window is stream-illegal);
-    *   - the flat ADC LUT builds row-locally: the pinned codebooks
-    *     collapse to ONE dense (m·ks)-slot broadcast array (dead Lloyd
-    *     cells = NULL slots, the [[graft.operators.Pq.adcLutFlat]]
-    *     densification), and each probe row transforms it into its LUT
-    *     with the exact [[graft.operators.Pq.adcLut]] arithmetic — no
-    *     groupBy on the stream;
-    *   - candidates coarse-prune through the pinned posts and score
-    *     their PACKED code row in one `graft_adc_sum` kernel call;
-    *   - ranking is the payload-distinct bounded heap (a candidate
-    *     reached through several probed cells carries one identical
-    *     integer sum and collapses in O(k) state — standing in for the
-    *     batch path's blocking `.distinct()`).
-    *
-    * Equals the batch serve row for row over the same pinned version
-    * (equivalence-tested; integer ADC sums are order-insensitive).
-    *
-    * Output: (query_id, cand_id, adist_e6, rnk); update mode. */
-  def ivfPqServeStreamFromStore(spark: org.apache.spark.sql.SparkSession,
-      tableDir: String, probeStream: DataFrame, k: Int, nprobe: Int,
-      version: Option[String] = None,
-      predicate: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    requireResidual(tableDir, expect = false, "ivfPqServeStreamFromStore")
-    val pinned = pinnedReader(spark, tableDir, version)
-    val cent = spark.read.parquet(s"$tableDir/centroids")
-    val books = spark.read.parquet(s"$tableDir/codebooks")
-    val shape = books.agg(max(col("m")).as("mx"),
-      max(size(col("cw"))).as("sd"), max(col("cell")).as("mc")).head()
-    val (pqM, pqSub) = (shape.getInt(0) + 1, shape.getInt(1))
-    val ksEff = shape.getLong(2).toInt + 1
-    // dense (m × ksEff) codeword grid as ONE broadcastable row ordered
-    // by (m, code): slot m·ks+code carries the codeword, NULL if dead
-    val booksGrid = books.select(col("m")).distinct()
-      .withColumn("code", explode(expr(s"sequence(0, ${ksEff - 1})")))
-      .join(books.select(col("m"), col("cell").as("code"), col("cw")),
-        Seq("m", "code"), "left")
-      .groupBy()
-      .agg(expr("transform(array_sort(collect_list(struct(m, code, cw))), x -> x.cw)")
-        .as("cws"))
-    val pc = ivfProbeCellsRowLocal(probeStream, cent, nprobe)
-      .crossJoin(broadcast(booksGrid))
+    val pc = ivfProbeCellsRowLocal(probes, cent, nprobe)
+      .crossJoin(broadcast(codewordGrid(books, ksEff)))
       // the row-local flat LUT: per slot, the e6-floored exact L2² of
       // the probe's m-th subvector to that codeword — Pq.adcLut's
       // arithmetic verbatim (same slice, same double casts, same fold)
@@ -1732,22 +1658,16 @@ object VectorStreams {
            |  END)""".stripMargin))
       .drop("cws", "q_emb", "q_norm")
       .withColumn("cell", explode(col("cells"))).drop("cells")
-    val posts = pruneToSurvivors( // batch-side pre-filter: stream-legal
+    val posts = pruneToSurvivors( // pre-filter below the candidate join
       pinned("posts").select(col("vec_id").as("cand_id"), col("cell")),
       keepOf(pinned, predicate), "cand_id", predicate)
     val codes = pinned("codes").select(col("vec_id").as("cand_id"), col("codes"))
-    val topk = udaf(graft.functions.TopKDistinctAgg.longs(k))
-    pc.join(posts, Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .join(codes, Seq("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        expr(s"graft_adc_sum(codes, lut, $ksEff)").as("adist_e6"))
-      .groupBy("query_id")
-      .agg(topk((-col("adist_e6")).cast("double"), col("cand_id")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e._2").as("cand_id"),
-        (-col("e._1")).cast("long").as("adist_e6"),
-        (col("pos") + 1).cast("int").as("rnk"))
+    ascTopK(pc.join(posts, Seq("cell"))
+        .filter(col("query_id") =!= col("cand_id"))
+        .join(codes, Seq("cand_id"))
+        .select(col("query_id"), col("cand_id"),
+          expr(s"graft_adc_sum(codes, lut, $ksEff)").as("adist_e6")),
+      "adist_e6", k, distinct = true)
   }
 
   // ───────────── residual IVF×PQ standing store (IVFADC) ─────────────
@@ -1862,9 +1782,9 @@ object VectorStreams {
       }
       .start()
 
-  /** Residual IVF-ADC top-k from a standing [[ivfPqResIngest]] store:
-    * coarse-prune through the pinned posts as [[ivfPqServeFromStore]],
-    * then score each surviving candidate's PACKED residual code row
+  /** Residual IVF-ADC top-k from a standing [[ivfPqResIngest]] store,
+    * BATCH probes only: coarse-prune through the pinned posts, then
+    * score each surviving candidate's PACKED residual code row
     * through `graft_adc_sum` against the per-(query, home-cell) flat
     * LUT. LUTs are built ONLY for the (query, home-cell) pairs that
     * actually occur among candidates — bounded by min(K, |cand|) per
@@ -1874,7 +1794,9 @@ object VectorStreams {
     * sides of the qc join (never hardcode the training-time K on one
     * side — the multiplier is a property of the pinned model, and the
     * key is collision-free because cell < kCells by construction).
-    * Oracle-pinned by
+    * The LUT scoping needs a blocking distinct and a localCheckpoint,
+    * so streaming probes go to [[ivfPqResServeStreamFromStore]], which
+    * scores each pair directly instead. Oracle-pinned by
     * `ivfres_store_serve` against the one-shot `pq_ivfres_topk` CTE
     * chain (fold ≡ rebuild: both models pinned, assignment and
     * encoding per-vector).
@@ -1884,19 +1806,14 @@ object VectorStreams {
       tableDir: String, probes: DataFrame, k: Int, nprobe: Int,
       version: Option[String] = None,
       predicate: Option[String] = None): DataFrame = {
+    require(!probes.isStreaming, "ivfPqResServeFromStore takes batch probes — " +
+      "serve a stream with ivfPqResServeStreamFromStore")
     graft.functions.GraftFunctions.register(spark)
     requireResidual(tableDir, expect = true, "ivfPqResServeFromStore")
     val pinned = pinnedReader(spark, tableDir, version)
     val cent = spark.read.parquet(s"$tableDir/centroids")
     val books = spark.read.parquet(s"$tableDir/codebooks")
-    // ONE metadata job for the codebook shape AND the centroid count
-    // (r17: each .head() is a driver barrier — fold them)
-    val shape = books.agg(max(col("m")).as("mx"),
-        max(size(col("cw"))).as("sd"), max(col("cell")).as("mc"))
-      .crossJoin(cent.agg(max(col("cell")).as("kc"))).head()
-    val (pqM, pqSub) = (shape.getInt(0) + 1, shape.getInt(1))
-    val ksEff = shape.getLong(2).toInt + 1
-    val kCells = shape.getLong(3) + 1
+    val (pqM, pqSub, ksEff, kCells) = residualGeometry(books, cent)
     val probeCells = graft.operators.Knn
       .ivfRank(probes.select("vec_id", "embedding"), cent, "vec_id", "embedding")
       .filter(col("rn") <= nprobe)
@@ -1909,13 +1826,14 @@ object VectorStreams {
       .select("query_id", "cand_id").distinct()
     val codes = pinned("codes")
       .select(col("vec_id").as("cand_id"), col("cell"), col("codes"))
-    // coarse prune BEFORE the kernel scan (cand scales with corpus
-    // size — AQE picks broadcast vs shuffle, as in the raw serve).
-    // Checkpointed: the frame feeds BOTH the LUT pair-scoping distinct
-    // and the kernel scan, and Catalyst does not dedupe identical
-    // subtrees — without the cut, the corpus-side code scan and the
-    // probe ranking would execute twice per serve (|cand| rows: the
-    // coarse prune bounds it, so the materialization is probe-sized)
+    // coarse prune BEFORE the kernel scan. `cand` scales with corpus
+    // size (≈ nq·nAssign·n_vecs/K rows), so it is NOT force-broadcast:
+    // AQE broadcasts it when small and shuffle-joins on cand_id when
+    // not. Checkpointed: the frame feeds BOTH the LUT pair-scoping
+    // distinct and the kernel scan, and Catalyst does not dedupe
+    // identical subtrees — without the cut, the corpus-side code scan
+    // and the probe ranking would execute twice per serve (|cand| rows:
+    // the coarse prune bounds it, so the materialization is probe-sized)
     val scored0 = codes.join(cand, Seq("cand_id")).localCheckpoint(true)
     // LUTs only for the (query, home-cell) pairs candidates realize
     val pairs = scored0.select(col("query_id"), col("cell")).distinct()
@@ -1927,84 +1845,49 @@ object VectorStreams {
           .as("rvec"))
     val lut = graft.operators.Pq.adcLutFlat(
       graft.operators.Pq.subviews(qres, "qc", "rvec", pqM, pqSub), "qc", books, ksEff)
-    val topk = udaf(graft.functions.TopKAgg.longs(k))
-    scored0
-      .withColumn("qc", col("query_id") * lit(kCells) + col("cell"))
-      .join(broadcast(lut), Seq("qc"))
-      .select(col("query_id"), col("cand_id"),
-        expr(s"graft_adc_sum(codes, lut, $ksEff)").as("adist_e6"))
-      .groupBy("query_id")
-      .agg(topk((-col("adist_e6")).cast("double"), col("cand_id")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e._2").as("cand_id"),
-        (-col("e._1")).cast("long").as("adist_e6"),
-        (col("pos") + 1).cast("int").as("rnk"))
+    ascTopK(scored0
+        .withColumn("qc", col("query_id") * lit(kCells) + col("cell"))
+        .join(broadcast(lut), Seq("qc"))
+        .select(col("query_id"), col("cand_id"),
+          expr(s"graft_adc_sum(codes, lut, $ksEff)").as("adist_e6")),
+      "adist_e6", k, distinct = false)
   }
 
-  /** STREAMING residual IVF-ADC serving off the standing
-    * [[ivfPqResIngest]] store — [[ivfPqResServeFromStore]] made
-    * streaming-legal. The batch path's LUT build needs a blocking
-    * distinct over realized (query, home-cell) pairs, so the stream
-    * twin drops LUT amortization entirely: each surviving (probe,
-    * candidate) pair computes its ADC sum ROW-LOCALLY from the
-    * broadcast dense centroid grid + codeword grid — per subspace,
-    * the e6-floored exact L2² of the probe's residual subvector
-    * (wrt the CANDIDATE's home centroid) to the codeword its code
-    * names. Same fixed single-op sequence as
-    * [[graft.operators.Pq.adcLut]], so the integers are identical;
-    * the cost is dim multiplies per pair instead of m lookups —
-    * the stated streaming tradeoff (probe batches are bounded; the
-    * corpus-side scan is still coarse-pruned and packed). One
-    * stateful op: the payload-distinct bounded heap.
-    *
-    * Output: (query_id, cand_id, adist_e6, rnk); update mode. */
-  def ivfPqResServeStreamFromStore(spark: org.apache.spark.sql.SparkSession,
-      tableDir: String, probeStream: DataFrame, k: Int, nprobe: Int,
-      version: Option[String] = None,
-      predicate: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    requireResidual(tableDir, expect = true, "ivfPqResServeStreamFromStore")
-    val pinned = pinnedReader(spark, tableDir, version)
-    val cent = spark.read.parquet(s"$tableDir/centroids")
-    val books = spark.read.parquet(s"$tableDir/codebooks")
-    // ONE metadata job for the codebook shape AND the centroid count
-    // (r17: each .head() is a driver barrier — fold them)
+  /** A residual store's geometry off its pinned models in ONE metadata
+    * job (r17: each .head() is a driver barrier — fold them):
+    * (pqM, pqSub, ksEff, kCells) — the codebook shape, the effective
+    * codebook width and the centroid count. */
+  private def residualGeometry(books: DataFrame, cent: DataFrame): (Int, Int, Int, Int) = {
     val shape = books.agg(max(col("m")).as("mx"),
         max(size(col("cw"))).as("sd"), max(col("cell")).as("mc"))
       .crossJoin(cent.agg(max(col("cell")).as("kc"))).head()
-    val (pqM, pqSub) = (shape.getInt(0) + 1, shape.getInt(1))
-    val ksEff = shape.getLong(2).toInt + 1
-    val kCells = (shape.getLong(3) + 1).toInt
-    // dense grids as ONE broadcastable row each: slot cell+1 → the
-    // (×2²⁰-space) centroid, slot m·ks+code+1 → the codeword (NULL if
-    // the Lloyd update dropped the cell); homes always name live cells
-    val cgrid = spark.range(kCells).select(col("id").as("cell"))
-      .join(cent.select(col("cell"), col("cw")), Seq("cell"), "left")
-      .groupBy()
-      .agg(expr("transform(array_sort(collect_list(struct(cell, cw))), x -> x.cw)")
-        .as("cgrid"))
-    val booksGrid = books.select(col("m")).distinct()
-      .withColumn("code", explode(expr(s"sequence(0, ${ksEff - 1})")))
-      .join(books.select(col("m"), col("cell").as("code"), col("cw")),
-        Seq("m", "code"), "left")
-      .groupBy()
-      .agg(expr("transform(array_sort(collect_list(struct(m, code, cw))), x -> x.cw)")
-        .as("cws"))
-    val pc = ivfProbeCellsRowLocal(probeStream, cent, nprobe)
-      .withColumn("cell", explode(col("cells"))).drop("cells", "q_norm")
+    (shape.getInt(0) + 1, shape.getInt(1), shape.getLong(2).toInt + 1,
+      (shape.getLong(3) + 1).toInt)
+  }
+
+  /** The per-pair residual ADC stage both streaming residual serves
+    * share: the row-local probe rows `pc` (query_id, q_emb, cells, plus
+    * any pass-through columns) join the pinned (pre-filtered) posts on
+    * each probed cell and the candidates' home-cell codes, and each
+    * (probe, candidate) pair scores its `adist_e6` ROW-LOCALLY against
+    * the broadcast [[centroidGrid]] and [[codewordGrid]] rows:
+    * Σ_m floor(l2sq((q − c_home/2²⁰)_m, cw[m, code_m])·1e6) —
+    * [[graft.operators.Pq.adcLut]]'s fixed single-op sequence per pair
+    * instead of per LUT slot, so the integers are identical. */
+  private def residualPairs(pinned: String => DataFrame, cent: DataFrame,
+      books: DataFrame, pc: DataFrame, predicate: Option[String]): DataFrame = {
+    val (pqM, pqSub, ksEff, kCells) = residualGeometry(books, cent)
     val posts = pruneToSurvivors( // batch-side pre-filter: stream-legal
       pinned("posts").select(col("vec_id").as("cand_id"), col("cell")),
       keepOf(pinned, predicate), "cand_id", predicate)
     val codes = pinned("codes")
       .select(col("vec_id").as("cand_id"), col("cell").as("home"), col("codes"))
-    val topk = udaf(graft.functions.TopKDistinctAgg.longs(k))
-    pc.join(posts, Seq("cell"))
+    pc.withColumn("cell", explode(col("cells"))).drop("cells")
+      .join(posts, Seq("cell"))
       .filter(col("query_id") =!= col("cand_id"))
       .join(codes, Seq("cand_id"))
-      .crossJoin(broadcast(cgrid))
-      .crossJoin(broadcast(booksGrid))
-      // per-pair ADC: Σ_m floor(l2sq((q − c_home/2²⁰)_m, cw[m, code_m])·1e6)
-      // — Pq.adcLut's arithmetic verbatim, per pair instead of per LUT slot
+      .crossJoin(broadcast(centroidGrid(cent, kCells)))
+      .crossJoin(broadcast(codewordGrid(books, ksEff)))
       .withColumn("adist_e6", expr(
         s"""aggregate(sequence(0, ${pqM - 1}), 0L, (acc, mi) ->
            |  acc + CASE
@@ -2017,22 +1900,45 @@ object VectorStreams {
            |      element_at(cws, mi * $ksEff + element_at(codes, mi + 1) + 1))
            |      * 1000000.0D) AS BIGINT)
            |  END)""".stripMargin))
-      .groupBy("query_id")
-      .agg(topk((-col("adist_e6")).cast("double"), col("cand_id")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e._2").as("cand_id"),
-        (-col("e._1")).cast("long").as("adist_e6"),
-        (col("pos") + 1).cast("int").as("rnk"))
+  }
+
+  /** STREAMING residual IVF-ADC serving off the standing
+    * [[ivfPqResIngest]] store. [[ivfPqResServeFromStore]]'s LUT build
+    * needs a blocking distinct over realized (query, home-cell) pairs,
+    * so this serve drops LUT amortization entirely: each surviving
+    * (probe, candidate) pair computes its ADC sum ROW-LOCALLY
+    * ([[residualPairs]]) from the broadcast centroid and codeword grids.
+    * The integers are identical; the cost is dim multiplies per pair
+    * instead of m lookups — the stated streaming tradeoff (probe
+    * batches are bounded; the corpus-side scan is still coarse-pruned
+    * and packed), measured slower than the LUT serve on batch probes.
+    * One stateful op: the payload-distinct bounded heap.
+    *
+    * Output: (query_id, cand_id, adist_e6, rnk); update mode. */
+  def ivfPqResServeStreamFromStore(spark: org.apache.spark.sql.SparkSession,
+      tableDir: String, probeStream: DataFrame, k: Int, nprobe: Int,
+      version: Option[String] = None,
+      predicate: Option[String] = None): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    requireResidual(tableDir, expect = true, "ivfPqResServeStreamFromStore")
+    val pinned = pinnedReader(spark, tableDir, version)
+    val cent = spark.read.parquet(s"$tableDir/centroids")
+    ascTopK(residualPairs(pinned, cent, spark.read.parquet(s"$tableDir/codebooks"),
+          ivfProbeCellsRowLocal(probeStream, cent, nprobe), predicate)
+        .select("query_id", "cand_id", "adist_e6"),
+      "adist_e6", k, distinct = true)
   }
 
   /** REFINE-AT-SERVE off the pinned standing stores (FAISS's
-    * IndexRefine as a serve-time composition, round-13 verdict #2):
-    * the residual store answers the cheap ADC SHORTLIST
-    * ([[ivfPqResServeFromStore]], `shortlist` per query), and the SQ8
-    * store's packed codes RERANK just those survivors through the
-    * codegen'd `graft_sq8_adc` kernel — the serve never touches a raw
-    * vector (8 residual-PQ bytes + dim SQ8 bytes per candidate read,
-    * out of 4·dim raw bytes).
+    * IndexRefine as a serve-time composition, round-13 verdict #2),
+    * BATCH probes only: the residual store answers the cheap ADC
+    * SHORTLIST ([[ivfPqResServeFromStore]], `shortlist` per query), and
+    * the SQ8 store's packed codes RERANK just those survivors through
+    * the codegen'd `graft_sq8_adc` kernel — the serve never touches a
+    * raw vector (8 residual-PQ bytes + dim SQ8 bytes per candidate
+    * read, out of 4·dim raw bytes). Streaming probes go to
+    * [[ivfResRefineServeStreamFromStore]] (the shortlist's LUT scoping
+    * is stream-illegal).
     *
     * Torn-model rule (round 9): each store's version pin resolves
     * ONCE — the residual serve resolves `resVersion` internally, and
@@ -2052,6 +1958,8 @@ object VectorStreams {
       resVersion: Option[String] = None,
       sqVersion: Option[String] = None,
       predicate: Option[String] = None): DataFrame = {
+    require(!probes.isStreaming, "ivfResRefineServeFromStore takes batch probes — " +
+      "serve a stream with ivfResRefineServeStreamFromStore")
     graft.functions.GraftFunctions.register(spark)
     requireResidual(resDir, expect = true, "ivfResRefineServeFromStore")
     // the shortlist is already predicate-constrained, so the refine
@@ -2063,20 +1971,14 @@ object VectorStreams {
     val bounds = spark.read.parquet(s"$sqDir/bounds")
     val lut = graft.operators.Sq.adcLutPacked(probes.select("vec_id", "embedding"),
       "vec_id", "embedding", bounds)
-    val topk = udaf(graft.functions.TopKAgg.longs(k))
     // shortlist prune BEFORE the code scan: |Q|·shortlist rows,
     // broadcast over the pinned packed index
-    pinnedSq("codes").select(col("vec_id").as("cand_id"), col("codes"))
-      .join(broadcast(short), Seq("cand_id"))
-      .join(broadcast(lut), Seq("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        expr("graft_sq8_adc(codes, lut)").as("sq_e6"))
-      .groupBy("query_id")
-      .agg(topk((-col("sq_e6")).cast("double"), col("cand_id")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e._2").as("cand_id"),
-        (-col("e._1")).cast("long").as("sq_e6"),
-        (col("pos") + 1).cast("int").as("rnk"))
+    ascTopK(pinnedSq("codes").select(col("vec_id").as("cand_id"), col("codes"))
+        .join(broadcast(short), Seq("cand_id"))
+        .join(broadcast(lut), Seq("query_id"))
+        .select(col("query_id"), col("cand_id"),
+          expr("graft_sq8_adc(codes, lut)").as("sq_e6")),
+      "sq_e6", k, distinct = false)
   }
 
   /** STREAMING refine-at-serve — [[ivfResRefineServeFromStore]] made
@@ -2090,16 +1992,15 @@ object VectorStreams {
     *     alive past the aggregate;
     *   - the rerank is then ROW-LOCAL: each survivor's codes score in
     *     one `graft_sq8_adc` call against the probe's flat SQ8 LUT
-    *     (built row-locally from the broadcast reconstruction grid —
-    *     the [[sq8ServeStreamFromStore]] projection — and carried
-    *     through the aggregate via first()), followed by a comparator
-    *     `array_sort` + `slice` (sq_e6 asc, cand_id asc — BIGINTs, no
-    *     NaN arm needed).
+    *     (built row-locally by [[withSq8Lut]] and carried through the
+    *     aggregate via first()), followed by a comparator `array_sort`
+    *     + `slice` (sq_e6 asc, cand_id asc — BIGINTs, no NaN arm
+    *     needed).
     *
     * The shortlist stage is [[ivfPqResServeStreamFromStore]]'s per-pair
-    * row-local residual ADC verbatim (the stated no-LUT streaming
-    * tradeoff), so streamed == batch-refine row for row over the same
-    * pinned versions (equivalence-tested; oracle-pinned by
+    * row-local residual ADC ([[residualPairs]], the stated no-LUT
+    * streaming tradeoff), so streamed == batch-refine row for row over
+    * the same pinned versions (equivalence-tested; oracle-pinned by
     * `ivfres_refine_serve_stream`).
     *
     * Output: (query_id, cand_id, sq_e6, rnk); update mode. */
@@ -2114,72 +2015,12 @@ object VectorStreams {
     val pinnedRes = pinnedReader(spark, resDir, resVersion)
     val pinnedSq = pinnedReader(spark, sqDir, sqVersion)
     val cent = spark.read.parquet(s"$resDir/centroids")
-    val books = spark.read.parquet(s"$resDir/codebooks")
     val bounds = spark.read.parquet(s"$sqDir/bounds")
-    // ONE metadata job for codebook shape, centroid count AND SQ8 dim
-    // (r17: each .head() is a driver barrier — fold them)
-    val shape = books.agg(max(col("m")).as("mx"),
-        max(size(col("cw"))).as("sd"), max(col("cell")).as("mc"))
-      .crossJoin(cent.agg(max(col("cell")).as("kc")))
-      .crossJoin(bounds.agg(max(col("dim")).as("dm"))).head()
-    val (pqM, pqSub) = (shape.getInt(0) + 1, shape.getInt(1))
-    val ksEff = shape.getLong(2).toInt + 1
-    val kCells = (shape.getLong(3) + 1).toInt
-    val dim = shape.getInt(4) + 1
-    // broadcast one-row grids: centroids (residual arithmetic),
-    // codewords (residual ADC), SQ8 reconstructions (rerank LUT)
-    val cgrid = spark.range(kCells).select(col("id").as("cell"))
-      .join(cent.select(col("cell"), col("cw")), Seq("cell"), "left")
-      .groupBy()
-      .agg(expr("transform(array_sort(collect_list(struct(cell, cw))), x -> x.cw)")
-        .as("cgrid"))
-    val booksGrid = books.select(col("m")).distinct()
-      .withColumn("code", explode(expr(s"sequence(0, ${ksEff - 1})")))
-      .join(books.select(col("m"), col("cell").as("code"), col("cw")),
-        Seq("m", "code"), "left")
-      .groupBy()
-      .agg(expr("transform(array_sort(collect_list(struct(m, code, cw))), x -> x.cw)")
-        .as("cws"))
-    val reconArr = graft.operators.Sq.boundsRow(bounds).select(expr(
-      s"""transform(sequence(0, size(mn_arr) * 256 - 1), i ->
-         |  CASE WHEN mx_arr[i div 256] = mn_arr[i div 256] THEN mn_arr[i div 256]
-         |       ELSE mn_arr[i div 256] + (i % 256) / 255.0D
-         |              * (mx_arr[i div 256] - mn_arr[i div 256])
-         |  END)""".stripMargin).as("recon"))
-    val pc = ivfProbeCellsRowLocal(probeStream, cent, nprobe)
-      .crossJoin(broadcast(reconArr))
-      .withColumn("lut", expr(
-        """transform(recon, (r, i) ->
-          |  CAST(floor((CAST(q_emb[i div 256] AS DOUBLE) - r)
-          |    * (CAST(q_emb[i div 256] AS DOUBLE) - r) * 1000000.0D) AS BIGINT))""".stripMargin))
-      .drop("recon", "q_norm")
-      .withColumn("cell", explode(col("cells"))).drop("cells")
-    val posts = pruneToSurvivors( // batch-side pre-filter: stream-legal
-      pinnedRes("posts").select(col("vec_id").as("cand_id"), col("cell")),
-      keepOf(pinnedRes, predicate), "cand_id", predicate)
-    val rcodes = pinnedRes("codes")
-      .select(col("vec_id").as("cand_id"), col("cell").as("home"), col("codes"))
     val scodes = pinnedSq("codes")
       .select(col("vec_id").as("cand_id"), col("codes").as("sqcodes"))
     val heap = udaf(graft.functions.TopKCodesAgg(shortlist))
-    pc.join(posts, Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .join(rcodes, Seq("cand_id"))
-      .crossJoin(broadcast(cgrid))
-      .crossJoin(broadcast(booksGrid))
-      // per-pair residual ADC (ivfPqResServeStreamFromStore verbatim)
-      .withColumn("adist_e6", expr(
-        s"""aggregate(sequence(0, ${pqM - 1}), 0L, (acc, mi) ->
-           |  acc + CASE
-           |    WHEN element_at(cws, mi * $ksEff + element_at(codes, mi + 1) + 1) IS NULL
-           |      THEN ${graft.operators.Pq.DeadCellSentinel}L
-           |    ELSE CAST(floor(graft_l2sq(
-           |      transform(sequence(1, $pqSub), j ->
-           |        CAST(element_at(q_emb, mi * $pqSub + j) AS DOUBLE)
-           |          - element_at(element_at(cgrid, CAST(home + 1 AS INT)), mi * $pqSub + j) / 1048576.0D),
-           |      element_at(cws, mi * $ksEff + element_at(codes, mi + 1) + 1))
-           |      * 1000000.0D) AS BIGINT)
-           |  END)""".stripMargin))
+    residualPairs(pinnedRes, cent, spark.read.parquet(s"$resDir/codebooks"),
+        withSq8Lut(ivfProbeCellsRowLocal(probeStream, cent, nprobe), bounds), predicate)
       .join(scodes, Seq("cand_id"))
       .groupBy("query_id")
       .agg(heap((-col("adist_e6")).cast("double"),
@@ -2267,16 +2108,19 @@ object VectorStreams {
       .start()
 
   /** SQ8-ADC top-k from a standing [[sqIngest]] store, pinned to
-    * `version` (default CURRENT): the probe batch builds its FLAT
-    * per-query LUT against the PINNED bounds and broadcasts it over
-    * the pinned packed code index — the codegen'd `graft_sq8_adc`
-    * kernel scores |Q|·N rows (never |Q|·N·dim); ranking is the
-    * bounded heap by (adist_e6 asc, cand_id asc) — exactly the batch
-    * `sq8_adc_topk` total order (oracle-pinned by `sq8_store_serve`;
-    * integer ADC sums are order-insensitive so the exploded oracle
-    * applies verbatim).
+    * `version` (default CURRENT). `probes` may be batch or streaming:
+    * each probe row builds its flat LUT row-locally against the PINNED
+    * bounds ([[withSq8Lut]] — no groupBy on the probe side), every
+    * pinned packed code row scores in one codegen'd `graft_sq8_adc`
+    * kernel call (|Q|·N rows, never |Q|·N·dim), and ONE bounded heap
+    * ranks by (adist_e6 asc, cand_id asc) — exactly the batch
+    * `sq8_adc_topk` total order (oracle-pinned by `sq8_store_serve` /
+    * `sq8_serve_stream`; integer ADC sums are order-insensitive so the
+    * exploded oracle applies verbatim). The scan is |codes| kernel
+    * calls per probe (per micro-batch on a stream) — the flat store's
+    * full-scan contract.
     *
-    * Output: (query_id, cand_id, adist_e6, rnk). */
+    * Output: (query_id, cand_id, adist_e6, rnk); update mode on a stream. */
   def sq8ServeFromStore(spark: org.apache.spark.sql.SparkSession,
       tableDir: String, probes: DataFrame, k: Int,
       version: Option[String] = None,
@@ -2284,88 +2128,18 @@ object VectorStreams {
     graft.functions.GraftFunctions.register(spark)
     val pinned = pinnedReader(spark, tableDir, version)
     val bounds = spark.read.parquet(s"$tableDir/bounds")
-    val lut = graft.operators.Sq.adcLutPacked(probes.select("vec_id", "embedding"),
-      "vec_id", "embedding", bounds)
-    val topk = udaf(graft.functions.TopKAgg.longs(k))
+    val q = withSq8Lut(probes.select(col("vec_id").as("query_id"),
+        col("embedding").as("q_emb")), bounds)
+      .select("query_id", "lut")
     // flat store: the codes scan IS the candidate set, so the
     // pre-filter prunes it directly (no posts layer to prune below)
-    pruneToSurvivors(
-        pinned("codes").select(col("vec_id").as("cand_id"), col("codes")),
-        keepOf(pinned, predicate), "cand_id", predicate)
-      .crossJoin(broadcast(lut))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        expr("graft_sq8_adc(codes, lut)").as("adist_e6"))
-      .groupBy("query_id")
-      .agg(topk((-col("adist_e6")).cast("double"), col("cand_id")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e._2").as("cand_id"),
-        (-col("e._1")).cast("long").as("adist_e6"),
-        (col("pos") + 1).cast("int").as("rnk"))
-  }
-
-  /** STREAMING SQ8-ADC serving off the standing [[sqIngest]] store —
-    * [[sq8ServeFromStore]] with the LUT build made row-local, leaving
-    * ONE stateful operator:
-    *
-    *   - the per-(dim, code) RECONSTRUCTION array is query-independent
-    *     — it collapses to one dense (dim·256)-slot broadcast row
-    *     computed from the pinned bounds with
-    *     [[graft.operators.Sq.adcLut]]'s arithmetic verbatim;
-    *   - each probe row transforms it into its flat LUT (the
-    *     `floor((v − recon)² · 1e6)` entry per slot) — a pure
-    *     projection, no groupBy on the stream (the batch path's
-    *     [[graft.operators.Sq.adcLutPacked]] collect is stream-illegal);
-    *   - every pinned packed code row scores in one `graft_sq8_adc`
-    *     kernel call; ranking is the bounded heap.
-    *
-    * Equals the batch serve row for row over the same pinned version
-    * (equivalence-tested; integer ADC sums are order-insensitive).
-    * The scan is |codes| kernel calls per probe per micro-batch —
-    * the same full-scan contract as the batch serve; at cluster scale
-    * the probe micro-batch is the broadcast side of the join.
-    *
-    * Output: (query_id, cand_id, adist_e6, rnk); update mode. */
-  def sq8ServeStreamFromStore(spark: org.apache.spark.sql.SparkSession,
-      tableDir: String, probeStream: DataFrame, k: Int,
-      version: Option[String] = None,
-      predicate: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val pinned = pinnedReader(spark, tableDir, version)
-    val bounds = spark.read.parquet(s"$tableDir/bounds")
-    // dim rides the plan as size(mn_arr) (r18): the old
-    // `bounds.agg(max(dim)).head() + 1` was a full extra driver action
-    // per serve construction just to inline a literal slot count
-    // static: slot d·256 + code = the reconstructed value of that code
-    // in that dimension (Sq.adcLut's CASE + affine spelled verbatim)
-    val reconArr = graft.operators.Sq.boundsRow(bounds).select(expr(
-      s"""transform(sequence(0, size(mn_arr) * 256 - 1), i ->
-         |  CASE WHEN mx_arr[i div 256] = mn_arr[i div 256] THEN mn_arr[i div 256]
-         |       ELSE mn_arr[i div 256] + (i % 256) / 255.0D
-         |              * (mx_arr[i div 256] - mn_arr[i div 256])
-         |  END)""".stripMargin).as("recon"))
-    val q = probeStream
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .crossJoin(broadcast(reconArr))
-      // row-local flat LUT: dq_e6 per slot, Sq.adcLut's arithmetic
-      .withColumn("lut", expr(
-        """transform(recon, (r, i) ->
-          |  CAST(floor((CAST(q_emb[i div 256] AS DOUBLE) - r)
-          |    * (CAST(q_emb[i div 256] AS DOUBLE) - r) * 1000000.0D) AS BIGINT))""".stripMargin))
-      .select("query_id", "lut")
-    val topk = udaf(graft.functions.TopKAgg.longs(k))
-    q.join(pruneToSurvivors( // batch-side prune: stream-legal
+    ascTopK(q.join(pruneToSurvivors(
           pinned("codes").select(col("vec_id").as("cand_id"), col("codes")),
           keepOf(pinned, predicate), "cand_id", predicate),
         col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        expr("graft_sq8_adc(codes, lut)").as("adist_e6"))
-      .groupBy("query_id")
-      .agg(topk((-col("adist_e6")).cast("double"), col("cand_id")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e._2").as("cand_id"),
-        (-col("e._1")).cast("long").as("adist_e6"),
-        (col("pos") + 1).cast("int").as("rnk"))
+        .select(col("query_id"), col("cand_id"),
+          expr("graft_sq8_adc(codes, lut)").as("adist_e6")),
+      "adist_e6", k, distinct = false)
   }
 
   // ─────────────────── IVF×SQ8 standing store ───────────────────
@@ -2449,18 +2223,22 @@ object VectorStreams {
       .start()
 
   /** IVF-pruned SQ8-ADC top-k from a standing [[sq8IvfIngest]] store,
-    * pinned to `version` (default CURRENT): probe cells against the
-    * pinned quantizer, coarse-prune candidates through the pinned
-    * posts, and score ONLY those candidates' packed code rows through
-    * the codegen'd `graft_sq8_adc` kernel against the broadcast flat
-    * per-query LUT (built off the pinned bounds) — the scan touches
-    * ≈ nprobe·nAssign/K of the 4×-compressed code index. Ranking is
-    * the bounded heap by (adist_e6 asc, cand_id asc) — exactly the
-    * batch `sq8_ivf_adc_topk` total order (oracle-pinned by
-    * `sq8ivf_store_serve`; integer ADC sums are order-insensitive so
-    * the exploded-form oracle applies verbatim).
+    * pinned to `version` (default CURRENT). `probes` may be batch or
+    * streaming: every probe-side stage is row-local, leaving ONE
+    * stateful operator — probe cells rank against the pinned quantizer
+    * ([[ivfProbeCellsRowLocal]]), each probe builds its flat SQ8 LUT off
+    * the pinned bounds ([[withSq8Lut]]), candidates coarse-prune
+    * through the pinned posts (the scan touches ≈ nprobe·nAssign/K of
+    * the 4×-compressed code index) and score their packed code row in
+    * one `graft_sq8_adc` call, and the payload-distinct bounded heap
+    * ranks by (adist_e6 asc, cand_id asc) — a candidate reached
+    * through several probed cells carries one identical integer sum.
+    * Exactly the batch `sq8_ivf_adc_topk` total order (oracle-pinned
+    * by `sq8ivf_store_serve` / `sq8ivf_serve_stream`; integer ADC sums
+    * are order-insensitive so the exploded-form oracle applies
+    * verbatim).
     *
-    * Output: (query_id, cand_id, adist_e6, rnk). */
+    * Output: (query_id, cand_id, adist_e6, rnk); update mode on a stream. */
   def sq8IvfServeFromStore(spark: org.apache.spark.sql.SparkSession,
       tableDir: String, probes: DataFrame, k: Int, nprobe: Int,
       version: Option[String] = None,
@@ -2469,91 +2247,19 @@ object VectorStreams {
     val pinned = pinnedReader(spark, tableDir, version)
     val cent = spark.read.parquet(s"$tableDir/centroids")
     val bounds = spark.read.parquet(s"$tableDir/bounds")
-    val probeCells = graft.operators.Knn
-      .ivfRank(probes.select("vec_id", "embedding"), cent, "vec_id", "embedding")
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("cell"))
-    val cand = probeCells
-      .join(pruneToSurvivors( // pre-filter below the candidate join
-          pinned("posts").select(col("vec_id").as("cand_id"), col("cell")),
-          keepOf(pinned, predicate), "cand_id", predicate), Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select("query_id", "cand_id").distinct()
-    val lut = graft.operators.Sq.adcLutPacked(probes.select("vec_id", "embedding"),
-      "vec_id", "embedding", bounds)
-    val topk = udaf(graft.functions.TopKAgg.longs(k))
-    // coarse prune BEFORE the kernel scan (cand scales with corpus
-    // size — AQE picks broadcast vs shuffle, the ivfPqServeFromStore
-    // discipline); only the probe-batch-bounded flat LUT (dim·256
-    // longs per probe) is always broadcast
-    pinned("codes").select(col("vec_id").as("cand_id"), col("codes"))
-      .join(cand, Seq("cand_id"))
-      .join(broadcast(lut), Seq("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        expr("graft_sq8_adc(codes, lut)").as("adist_e6"))
-      .groupBy("query_id")
-      .agg(topk((-col("adist_e6")).cast("double"), col("cand_id")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e._2").as("cand_id"),
-        (-col("e._1")).cast("long").as("adist_e6"),
-        (col("pos") + 1).cast("int").as("rnk"))
-  }
-
-  /** STREAMING IVF-pruned SQ8 serving off the standing
-    * [[sq8IvfIngest]] store — [[sq8IvfServeFromStore]] with every
-    * probe-side stage made row-local, leaving ONE stateful operator:
-    * probe cells rank via [[ivfProbeCellsRowLocal]] (the ivfRank
-    * window is stream-illegal), each probe transforms the broadcast
-    * query-independent reconstruction array into its flat SQ8 LUT
-    * (the [[sq8ServeStreamFromStore]] projection — no groupBy on the
-    * stream), candidates coarse-prune through the pinned posts and
-    * score their packed code row in one `graft_sq8_adc` call, and the
-    * payload-distinct bounded heap ranks (a candidate reached through
-    * several probed cells carries one identical integer sum).
-    *
-    * Output: (query_id, cand_id, adist_e6, rnk); update mode. */
-  def sq8IvfServeStreamFromStore(spark: org.apache.spark.sql.SparkSession,
-      tableDir: String, probeStream: DataFrame, k: Int, nprobe: Int,
-      version: Option[String] = None,
-      predicate: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val pinned = pinnedReader(spark, tableDir, version)
-    val cent = spark.read.parquet(s"$tableDir/centroids")
-    val bounds = spark.read.parquet(s"$tableDir/bounds")
-    // dim rides the plan as size(mn_arr) (r18): the old
-    // `bounds.agg(max(dim)).head() + 1` was a full extra driver action
-    // per serve construction just to inline a literal slot count
-    val reconArr = graft.operators.Sq.boundsRow(bounds).select(expr(
-      s"""transform(sequence(0, size(mn_arr) * 256 - 1), i ->
-         |  CASE WHEN mx_arr[i div 256] = mn_arr[i div 256] THEN mn_arr[i div 256]
-         |       ELSE mn_arr[i div 256] + (i % 256) / 255.0D
-         |              * (mx_arr[i div 256] - mn_arr[i div 256])
-         |  END)""".stripMargin).as("recon"))
-    val pc = ivfProbeCellsRowLocal(probeStream, cent, nprobe)
-      .crossJoin(broadcast(reconArr))
-      // row-local flat LUT: Sq.adcLut's arithmetic verbatim per slot
-      .withColumn("lut", expr(
-        """transform(recon, (r, i) ->
-          |  CAST(floor((CAST(q_emb[i div 256] AS DOUBLE) - r)
-          |    * (CAST(q_emb[i div 256] AS DOUBLE) - r) * 1000000.0D) AS BIGINT))""".stripMargin))
-      .drop("recon", "q_emb", "q_norm")
+    val pc = withSq8Lut(ivfProbeCellsRowLocal(probes, cent, nprobe), bounds)
+      .drop("q_emb", "q_norm")
       .withColumn("cell", explode(col("cells"))).drop("cells")
-    val posts = pruneToSurvivors( // batch-side pre-filter: stream-legal
+    val posts = pruneToSurvivors( // pre-filter below the candidate join
       pinned("posts").select(col("vec_id").as("cand_id"), col("cell")),
       keepOf(pinned, predicate), "cand_id", predicate)
     val codes = pinned("codes").select(col("vec_id").as("cand_id"), col("codes"))
-    val topk = udaf(graft.functions.TopKDistinctAgg.longs(k))
-    pc.join(posts, Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .join(codes, Seq("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        expr("graft_sq8_adc(codes, lut)").as("adist_e6"))
-      .groupBy("query_id")
-      .agg(topk((-col("adist_e6")).cast("double"), col("cand_id")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e._2").as("cand_id"),
-        (-col("e._1")).cast("long").as("adist_e6"),
-        (col("pos") + 1).cast("int").as("rnk"))
+    ascTopK(pc.join(posts, Seq("cell"))
+        .filter(col("query_id") =!= col("cand_id"))
+        .join(codes, Seq("cand_id"))
+        .select(col("query_id"), col("cand_id"),
+          expr("graft_sq8_adc(codes, lut)").as("adist_e6")),
+      "adist_e6", k, distinct = true)
   }
 
   /** Enrich a stream of `(id, h)` 64-bit perceptual fingerprints (the

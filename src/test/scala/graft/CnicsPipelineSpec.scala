@@ -370,6 +370,24 @@ class CnicsPipelineSpec extends AnyFunSuite {
       === Set("med-1"))
   }
 
+  test("parquet store swap crashed between its two renames heals on the next run") {
+    // the copy-on-write swap's crash window: the old Patient dir staged
+    // aside as Patient.bak, the rewrite never renamed in. Read as an
+    // empty store, every source patient would re-classify as an insert
+    // (and the next swap would delete the .bak holding the only copy)
+    val base = java.nio.file.Files.createTempDirectory("graft_pqswap").toString
+    val pq = new graft.sinks.ParquetFhirStore(base)
+    new CnicsPipeline(spark, inputs, pq, "uw").sync()
+    val live = new java.io.File(s"$base/Patient")
+    val bak = new java.io.File(s"$base/Patient.bak")
+    assert(live.renameTo(bak))
+    val audit = new CnicsPipeline(spark, inputs, pq, "uw").sync()
+    assert(audit(("Patient", "insert")) === 0L)
+    assert(audit(("Patient", "update")) === 2L)
+    assert(audit(("Patient", "delete")) === 0L)
+    assert(live.exists() && !bak.exists())
+  }
+
   test("HttpFhirStore round-trip against a live HTTP server") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     val served = new java.util.concurrent.ConcurrentHashMap[String, String]()

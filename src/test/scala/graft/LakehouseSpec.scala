@@ -80,6 +80,28 @@ class LakehouseSpec extends AnyFunSuite {
     assert(stats.filesAfter == stats.filesBefore) // no-op, never a split
   }
 
+  test("bakSwapInto: a failed swap rename throws and leaves the old dir recoverable") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_bakswap").toString
+    val live = s"$root/t"
+    (1L to 10L).toDF("id").write.parquet(live)
+    // the fresh dir never landed: the swap rename fails loudly, and the
+    // staged old dir is NOT deleted
+    intercept[Exception] {
+      Lakehouse.bakSwapInto(spark, live, s"$root/t.missing", "spec") }
+    assert(!new java.io.File(live).exists() && new java.io.File(s"$live.bak").exists())
+    // the heal restores it; healthy states are a no-op
+    assert(Lakehouse.recoverBakSwap(spark, live))
+    assert(!Lakehouse.recoverBakSwap(spark, live))
+    assert(spark.read.parquet(live).count() === 10L)
+    assert(!new java.io.File(s"$live.bak").exists())
+    // a completed swap replaces the dir and drops the stage
+    (1L to 3L).toDF("id").write.parquet(s"$root/t.fresh")
+    Lakehouse.bakSwapInto(spark, live, s"$root/t.fresh", "spec")
+    assert(spark.read.parquet(live).count() === 3L)
+    assert(!new java.io.File(s"$live.bak").exists())
+  }
+
   test("compaction + vacuum of a live dedup-ingest store under the append layout") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -128,6 +128,29 @@ class SourceSinkQueriesSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("token fetch retries a 429 like every other store request") {
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    val hits = new java.util.concurrent.atomic.AtomicInteger(0)
+    val server = HttpServer.create(new java.net.InetSocketAddress("localhost", 0), 0)
+    server.createContext("/auth/token", (ex: HttpExchange) => {
+      val (status, body) =
+        if (hits.getAndIncrement() == 0) (429, """{"error":"slow_down"}""")
+        else (200, """{"access_token":"tok-after-429","token_type":"Bearer"}""")
+      val b = body.getBytes("UTF-8")
+      ex.sendResponseHeaders(status, b.length.toLong)
+      ex.getResponseBody.write(b)
+      ex.close()
+    })
+    server.start()
+    try {
+      val auth = new graft.sinks.ClientCredentialsAuth(
+        s"http://localhost:${server.getAddress.getPort}/auth/token",
+        "client-cnics-crud", "pw", maxRetries = 3)
+      assert(auth.token(java.net.http.HttpClient.newHttpClient()) === "tok-after-429")
+      assert(hits.get() === 2)
+    } finally server.stop(0)
+  }
+
   test("HttpFhirStore.fromSettings dispatches the reference store flavors") {
     val srv = new graft.sinks.FhirFixtureServer(authSecret = Some("aidbox-pw"))
     val port = srv.start()

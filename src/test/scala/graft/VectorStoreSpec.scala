@@ -297,13 +297,11 @@ class VectorStoreSpec extends AnyFunSuite {
     assert(served === oneShot)
     assert(served.nonEmpty)
 
-    // STREAMING serve twin: the row-local LUT plan (no groupBy on the
-    // probe side) equals the batch serve on a batch frame AND through
-    // a real MemoryStream (one stateful op — the bounded heap)
-    assert(adist(VectorStreams.sq8ServeStreamFromStore(spark, tbl, probes, 3))
-      === served)
+    // the same serve through a real MemoryStream: the row-local LUT
+    // plan (no groupBy on the probe side, one stateful op — the
+    // bounded heap) equals the batch-frame answer
     val pmem = MemoryStream[(Long, Seq[Float])]
-    val sout = VectorStreams.sq8ServeStreamFromStore(spark, tbl,
+    val sout = VectorStreams.sq8ServeFromStore(spark, tbl,
       pmem.toDF().toDF("vec_id", "embedding")
         .select(col("vec_id"), col("embedding").cast("array<float>")), 3)
     val sq = sout.writeStream.outputMode("update")
@@ -388,12 +386,10 @@ class VectorStoreSpec extends AnyFunSuite {
     val expected = ranking(oneShot(lit(true)))
     assert(serve() === expected && expected.nonEmpty)
 
-    // STREAMING serve twin: row-local probe-cell ranking (no ivfRank
-    // window) == the batch serve, on a batch frame and via MemoryStream
-    assert(ranking(VectorStreams.ivfServeStreamFromStore(spark, tbl, probes, k, nprobe)
-      .select(col("query_id"), col("rnk"), col("cand_id"), col("cosine"))) === expected)
+    // the same serve through a MemoryStream: row-local probe-cell
+    // ranking (no ivfRank window) == the batch-frame answer
     val pmem = MemoryStream[(Long, Seq[Float])]
-    val sout = VectorStreams.ivfServeStreamFromStore(spark, tbl,
+    val sout = VectorStreams.ivfServeFromStore(spark, tbl,
       pmem.toDF().toDF("vec_id", "embedding")
         .select(col("vec_id"), col("embedding").cast("array<float>")), k, nprobe)
     val sq = sout.writeStream.outputMode("update")
@@ -436,12 +432,13 @@ class VectorStoreSpec extends AnyFunSuite {
       probes.filter(!col("vec_id").isin(doomed: _*)), k, nprobe)
       .queryExecution.executedPlan.toString
     assert(servePlan.contains("ObjectHashAggregate"), servePlan.take(800))
-    // the only window is the probe-side cell ranking (nq x K rows);
     // candidate ranking must NOT be a window — the heap aggregate
     // above is the ranking operator
     assert(servePlan.contains("TopKDistinctAgg") ||
       servePlan.contains("ObjectHashAggregate"))
     assert(!servePlan.contains("CartesianProduct"))
+    // probe cells rank row-locally: no window anywhere in the serve
+    assert(!servePlan.contains("Window"), servePlan.take(800))
   }
 
   test("two-batch ivfPqIngest == one-shot IVF-ADC; pinned models; forget spans codes") {
@@ -502,16 +499,14 @@ class VectorStoreSpec extends AnyFunSuite {
     val expected = ranking(oneShot(lit(true)))
     assert(serve() === expected && expected.nonEmpty)
 
-    // STREAMING serve twin: row-local probe cells + row-local flat LUT
-    // + packed-kernel scan + distinct heap == the batch serve, on a
-    // batch frame and via MemoryStream (one stateful op)
+    // the same serve through a MemoryStream: row-local probe cells +
+    // row-local flat LUT + packed-kernel scan + distinct heap (one
+    // stateful op) == the batch-frame answer
     def rankStream(df: org.apache.spark.sql.DataFrame) =
       ranking(df.select(col("query_id"), col("rnk").cast("long"),
         col("cand_id"), col("adist_e6").cast("double")))
-    assert(rankStream(VectorStreams.ivfPqServeStreamFromStore(
-      spark, tbl, probes, k, nprobe)) === expected)
     val pmem = MemoryStream[(Long, Seq[Float])]
-    val sout = VectorStreams.ivfPqServeStreamFromStore(spark, tbl,
+    val sout = VectorStreams.ivfPqServeFromStore(spark, tbl,
       pmem.toDF().toDF("vec_id", "embedding")
         .select(col("vec_id"), col("embedding").cast("array<float>")), k, nprobe)
     val sq2 = sout.writeStream.outputMode("update")
@@ -544,11 +539,12 @@ class VectorStoreSpec extends AnyFunSuite {
     val adcDf = VectorStreams.ivfPqServeFromStore(spark, tbl, probes, k, nprobe)
     val adcPlan = adcDf.queryExecution.executedPlan.toString
     assert(adcPlan.contains("ObjectHashAggregate"), adcPlan.take(800))
-    // the only window is the probe-side cell ranking (nq x K rows);
-    // the candidate ranking is the bounded heap above, and both the
-    // candidate prune and the LUT enter as broadcast joins
+    // the candidate ranking is the bounded heap above, probe cells
+    // rank row-locally (no window anywhere), and the candidate prune
+    // enters as a broadcast join
     assert(!adcPlan.contains("CartesianProduct"))
     assert(adcPlan.contains("BroadcastHashJoin"), adcPlan.take(800))
+    assert(!adcPlan.contains("Window"), adcPlan.take(800))
     // round 13: the store persists PACKED codes and the serve scores
     // them through the codegen'd kernel — one row per candidate, no
     // (vec, m, code) explosion anywhere in the serve plan (the
@@ -654,13 +650,16 @@ class VectorStoreSpec extends AnyFunSuite {
         rank4(spark.table("graft_ivfresserve_test"))
       } finally sq2.stop()
     assert(streamed === expected)
+    // the LUT-scoped batch serve refuses a stream, naming the stream serve
+    val eStream = intercept[IllegalArgumentException] {
+      VectorStreams.ivfPqResServeFromStore(spark, tbl, pmem.toDF().toDF("vec_id", "embedding")
+        .select(col("vec_id"), col("embedding").cast("array<float>")), k, nprobe) }
+    assert(eStream.getMessage.contains("ivfPqResServeStreamFromStore"))
 
     // layout guards: residual and raw functions refuse each other's
     // stores (the marker is a store property, never caller memory)
     intercept[IllegalArgumentException] {
       VectorStreams.ivfPqServeFromStore(spark, tbl, probes, k, nprobe) }
-    intercept[IllegalArgumentException] {
-      VectorStreams.ivfPqServeStreamFromStore(spark, tbl, probes, k, nprobe) }
     intercept[IllegalArgumentException] {
       VectorStreams.ivfPqFoldBatch(emb, tbl, 2L, cent, books, nAssign, pqM, pqSub) }
     val rawTbl = java.nio.file.Files.createTempDirectory("graft_ivfres_raw").toString
@@ -753,12 +752,10 @@ class VectorStoreSpec extends AnyFunSuite {
       === expected)
     assert(expected.nonEmpty)
 
-    // STREAMING serve twin: row-local probe cells + row-local SQ8 LUT
-    // == the batch serve, on a batch frame and via MemoryStream
-    assert(rank4(VectorStreams.sq8IvfServeStreamFromStore(
-      spark, tbl, probes, k, nprobe)) === expected)
+    // the same serve through a MemoryStream: row-local probe cells +
+    // row-local SQ8 LUT == the batch-frame answer
     val pmem = MemoryStream[(Long, Seq[Float])]
-    val sout = VectorStreams.sq8IvfServeStreamFromStore(spark, tbl,
+    val sout = VectorStreams.sq8IvfServeFromStore(spark, tbl,
       pmem.toDF().toDF("vec_id", "embedding")
         .select(col("vec_id"), col("embedding").cast("array<float>")), k, nprobe)
     val sq2 = sout.writeStream.outputMode("update")
@@ -803,6 +800,7 @@ class VectorStoreSpec extends AnyFunSuite {
     assert(bp.contains("graft_sq8_adc"), bp.take(800))
     assert(bp.contains("ObjectHashAggregate"), bp.take(800))
     assert(!bp.contains("CartesianProduct"))
+    assert(!bp.contains("Window"), bp.take(800)) // row-local probe cells
     // the store's code table is packed: ONE row per vector
     val storedCodes = spark.read.parquet(s"$tbl/codes")
     assert(storedCodes.schema.fieldNames.toSet === Set("vec_id", "codes", "batch"))
@@ -904,6 +902,13 @@ class VectorStoreSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       VectorStreams.ivfResRefineServeFromStore(
         spark, sqTbl, sqTbl, probes, shortlist, k, nprobe) }
+    // the batch refine refuses a stream, naming the stream serve
+    val eStream = intercept[IllegalArgumentException] {
+      VectorStreams.ivfResRefineServeFromStore(spark, resTbl, sqTbl,
+        pmem.toDF().toDF("vec_id", "embedding")
+          .select(col("vec_id"), col("embedding").cast("array<float>")),
+        shortlist, k, nprobe) }
+    assert(eStream.getMessage.contains("ivfResRefineServeStreamFromStore"))
 
     // geometry contract (ADVICE r13): a fold whose pqM/pqSub disagree
     // with the pinned codebook shape fails loudly instead of silently
@@ -1422,7 +1427,7 @@ class VectorStoreSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).map(_.toList).toSet
 
-    // raw IVF (batch serve AND the row-local stream plan over batch rows)
+    // raw IVF
     val (ivfF, ivfS) = (dir("graft_fivf"), dir("graft_fivf_s"))
     VectorStreams.ivfFoldBatch(emb, ivfF, 0L, cent, nAssign, attrCols = attrs)
     VectorStreams.ivfFoldBatch(surv, ivfS, 0L, cent, nAssign, attrCols = attrs)
@@ -1431,8 +1436,6 @@ class VectorStoreSpec extends AnyFunSuite {
     assert(ivfFiltered.nonEmpty)
     assert(ivfFiltered === rows(VectorStreams.ivfServeFromStore(
       spark, ivfS, probes, k, nprobe)))
-    assert(ivfFiltered === rows(VectorStreams.ivfServeStreamFromStore(
-      spark, ivfF, probes, k, nprobe, predicate = pred)))
 
     // IVF×PQ
     val (pqF, pqS) = (dir("graft_fpq"), dir("graft_fpq_s"))

@@ -47,11 +47,12 @@ object Scope {
   sealed trait Write
   /** Each type's actions go to its own `applyActions` call. */
   case object PerType extends Write
-  /** Every type's actions go to one `applyActionsMixed` call. */
+  /** Every type's actions go to one `applyActionsMixed` call (the
+    * default). */
   case object OneJob extends Write
 
   /** The site's whole cohort. */
-  final case class Full(write: Write = PerType) extends Scope
+  final case class Full(write: Write = OneJob) extends Scope
   /** A dirty set of site-patient ids: a one-column frame. */
   final case class Keys(keys: DataFrame) extends Scope
   /** Manifest-diffed: per-type manifests at `<root>/<Type>/manifest`. */
@@ -76,13 +77,14 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
   private def historicalFilter: Column =
     coalesce(col("Historical") =!= "Yes", lit(true))
 
-  /** Cohort: Patient ⋈ Demographic restricted to site (A2), distinct
+  /** Cohort: site patients (A2) that have a demographic row, distinct
     * on the patient key (the reference may enqueue duplicates when a
-    * patient has several demographic rows — idempotent either way). */
+    * patient has several demographic rows — idempotent either way). A
+    * semi join: no `distinct()` exchange on the demographic side. */
   def cohort(limit: Int = Int.MaxValue): DataFrame =
     in.patient
       .filter(col("Site") === site)
-      .join(in.demographic.select("PatientId").distinct(), Seq("PatientId"))
+      .join(in.demographic, Seq("PatientId"), "left_semi")
       .select(col("PatientId"), col("SitePatientId").cast("string").as("site_pat_id"))
       .distinct()
       .limit(limit)
@@ -156,8 +158,11 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
   def crosswalkLastWins: DataFrame = CnicsPipeline.crosswalkLastWins(in.crosswalk)
 
   /** Assembled patient resources: (PatientId, key, id, json). */
-  def patientResources(limit: Int = Int.MaxValue): DataFrame = {
-    val base = cohort(limit)
+  def patientResources(limit: Int = Int.MaxValue): DataFrame = patientsOf(cohort(limit))
+
+  /** The Patient resources of a (PatientId, site_pat_id) cohort frame. */
+  private def patientsOf(ids: DataFrame): DataFrame = {
+    val base = ids
       .join(demoFirst, Seq("PatientId"), "left")
       .join(sessionsPerPatient, Seq("PatientId"), "left")
       .join(broadcast(crosswalkLastWins), Seq("site_pat_id"), "left")
@@ -186,10 +191,13 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     * forever). With a `keyScope` the source is semi-joined to it too,
     * so keys outside the scope are neither writable nor deletable;
     * semi joins keep the scope frame un-duplicated, and Catalyst
-    * broadcasts it when dimension-sized. */
+    * broadcasts it when dimension-sized. The persisted snapshot joins
+    * `held`, which the caller unpersists once every write is done (a
+    * deferring `write` still reads it). */
   private def reconcile(resourceType: String, source0: DataFrame,
       keyScope: Option[DataFrame], snapshot: => DataFrame,
-      write: (String, DataFrame) => Map[String, Long]): (Map[String, Long], Seq[String]) = {
+      write: (String, DataFrame) => Map[String, Long],
+      held: scala.collection.mutable.Buffer[DataFrame]): (Map[String, Long], Seq[String]) = {
     val source = keyScope
       .map(ks => source0.join(ks, Seq("key"), "left_semi"))
       .getOrElse(source0)
@@ -197,50 +205,53 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     // for HTTP stores recomputing means re-fetching the whole snapshot
     val snapAll = snapshot.filter(col("key").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // E5 — multiple store resources sharing one business key: the
-      // reference aborts that row ("Multiple patient resources",
-      // cnics_to_fhir.py:359, 906-908). Route the key out of the merge
-      // entirely (no write, no delete) and surface an `error` counter.
-      val dupKeys = snapAll.groupBy("key").agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > 1).select("key")
-      // error-channel-sized by construction (only keys the store holds
-      // twice); collected once so the manifest can exclude them and
-      // callers can count them without a second job. CAPPED: a
-      // misconfigured store that duplicates a large fraction of its
-      // keys would otherwise turn this into an unbounded driver
-      // collect feeding a huge isin() literal tree — past the cap the
-      // run fails loudly (the store needs repair, not a bigger merge).
-      val dupKeyRows = dupKeys.limit(CnicsPipeline.MaxDupKeys + 1).collect()
-      require(dupKeyRows.length <= CnicsPipeline.MaxDupKeys,
-        s"$resourceType store holds > ${CnicsPipeline.MaxDupKeys} duplicated business keys — " +
-          "this is store corruption at scale, not an error channel; repair " +
-          "the store before syncing")
-      val dupKeyValues = dupKeyRows.map(_.getString(0)).toSeq
-      val nDup = dupKeyValues.size.toLong
-      val (snap, src) =
-        if (nDup == 0) (snapAll, source)
-        else (snapAll.join(broadcast(dupKeys), Seq("key"), "left_anti"),
-          source.join(broadcast(dupKeys), Seq("key"), "left_anti"))
-      val classified = Merge.classify(src, snap, Seq("key"))
-        .withColumn("id", coalesce(col(Merge.StoreIdCol), col("id")))
-        .withColumnRenamed(Merge.ActionCol, "merge_action")
-      // B-side debug channel (reference parity, see class doc): the
-      // exact frame handed to the sink, persisted for inspection.
-      // When the dump runs, the classify join is materialized ONCE
-      // (localCheckpoint) so the sink pass doesn't recompute the
-      // source scan + snapshot join a second time.
-      val actions = debugDir match {
-        case None => classified
-        case Some(dir) =>
-          val pinned = classified.localCheckpoint(true)
-          pinned.select("key", "id", "merge_action", "json")
-            .write.mode("overwrite").parquet(s"$dir/$resourceType")
-          pinned
-      }
-      val counts = write(resourceType, actions.select("key", "id", "json", "merge_action"))
-      (if (nDup > 0) counts + ("error" -> nDup) else counts, dupKeyValues)
-    } finally { snapAll.unpersist(); () }
+    held += snapAll
+    // E5 — multiple store resources sharing one business key: the
+    // reference aborts that row ("Multiple patient resources",
+    // cnics_to_fhir.py:359, 906-908). Route the key out of the merge
+    // entirely (no write, no delete) and surface an `error` counter.
+    val dupKeys = snapAll.groupBy("key").agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > 1).select("key")
+    // error-channel-sized by construction (only keys the store holds
+    // twice); one aggregate job returns their count and at most
+    // MaxDupKeys of them, so the manifest can exclude them and
+    // callers can count them without a second job. CAPPED, per
+    // partition and in the driver-side merge: a misconfigured store
+    // that duplicates a large fraction of its keys would otherwise
+    // turn this into an unbounded driver collect feeding a huge
+    // isin() literal tree — past the cap the run fails loudly (the
+    // store needs repair, not a bigger merge).
+    val cap = CnicsPipeline.MaxDupKeys
+    val (nDup, dupKeyValues) = dupKeys.rdd.map(_.getString(0))
+      .aggregate((0L, Vector.empty[String]))(
+        { case ((n, ks), k) => (n + 1, if (ks.size < cap) ks :+ k else ks) },
+        { case ((n1, a), (n2, b)) => (n1 + n2, (a ++ b).take(cap)) })
+    require(nDup <= cap,
+      s"$resourceType store holds > $cap duplicated business keys — " +
+        "this is store corruption at scale, not an error channel; repair " +
+        "the store before syncing")
+    val (snap, src) =
+      if (nDup == 0) (snapAll, source)
+      else (snapAll.join(broadcast(dupKeys), Seq("key"), "left_anti"),
+        source.join(broadcast(dupKeys), Seq("key"), "left_anti"))
+    val classified = Merge.classify(src, snap, Seq("key"))
+      .withColumn("id", coalesce(col(Merge.StoreIdCol), col("id")))
+      .withColumnRenamed(Merge.ActionCol, "merge_action")
+    // B-side debug channel (reference parity, see class doc): the
+    // exact frame handed to the sink, persisted for inspection.
+    // When the dump runs, the classify join is materialized ONCE
+    // (localCheckpoint) so the sink pass doesn't recompute the
+    // source scan + snapshot join a second time.
+    val actions = debugDir match {
+      case None => classified
+      case Some(dir) =>
+        val pinned = classified.localCheckpoint(true)
+        pinned.select("key", "id", "merge_action", "json")
+          .write.mode("overwrite").parquet(s"$dir/$resourceType")
+        pinned
+    }
+    val counts = write(resourceType, actions.select("key", "id", "json", "merge_action"))
+    (if (nDup > 0) counts + ("error" -> nDup) else counts, dupKeyValues)
   }
 
   /** Subject resource ids of the cohort (the `Patient/<id>` targets). */
@@ -276,13 +287,18 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     *  - [[Scope.Full]] — the site's cohort. Patient reads the
     *    site-scoped snapshot; children read the distributed
     *    per-subject snapshot of the cohort (A7), so store∖source
-    *    deletes stay within this cohort's subjects. `OneJob` runs the
-    *    same reads and classifies but defers every write into one
-    *    [[graft.sinks.FhirStore.applyActionsMixed]] call — on
-    *    [[graft.sinks.HttpFhirStore]] one job of mixed-type Bundles,
-    *    with no parent→child stage barrier. Legal because ids are
-    *    client-assigned; the end state equals `PerType`'s (pinned by
-    *    `cnics_http_tx_audit` against a strict-reference server).
+    *    deletes stay within this cohort's subjects. `OneJob` (the
+    *    default) runs the same reads and classifies but defers every
+    *    write into one [[graft.sinks.FhirStore.applyActionsMixed]]
+    *    call — on [[graft.sinks.HttpFhirStore]] one job of mixed-type
+    *    Bundles, with no parent→child stage barrier; on
+    *    [[graft.sinks.ParquetFhirStore]] one rewrite per type
+    *    directory, the Patient-delete cascade included. Legal because
+    *    ids are client-assigned; the end state equals `PerType`'s
+    *    (pinned by `cnics_http_tx_audit` against a strict-reference
+    *    server). When a child type is requested, Patient and every
+    *    child type sync one cohort, the [[cohortIds]] frame, so a
+    *    `limit` cuts them alike.
     *  - [[Scope.Keys]] — a caller-known dirty set of site-patient ids
     *    (a CDC feed, [[graft.streaming.CnicsStreams.sync]]). The
     *    inputs are semi-join-scoped first, so assembly and wire are
@@ -313,7 +329,10 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     }
     lazy val ids = pipe.cohortIds(limit)
     val table = Seq(
-      ("Patient", "patients", sitePatientIdSystem, () => pipe.patientResources(limit)),
+      // a patients-only sync skips the cohortIds checkpoint job
+      ("Patient", "patients", sitePatientIdSystem, () =>
+        if ((CnicsPipeline.AllTypes - "patients").exists(types)) pipe.patientsOf(ids)
+        else pipe.patientResources(limit)),
       ("Condition", "conditions", recordIdSystem("diagnosis"),
         () => pipe.conditionResources(ids)),
       ("MedicationRequest", "medicationrequests", recordIdSystem("medication"),
@@ -321,42 +340,44 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       ("Observation", "observations", recordIdSystem("lab"),
         () => pipe.observationResources(ids)))
     val deferred = scala.collection.mutable.ListBuffer.empty[(String, DataFrame)]
+    // every reconcile's persisted snapshot, unpersisted when the sync
+    // returns: the deferred actions are not materialized here (the
+    // store's write materializes their union once) and still read them
+    val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val write: (String, DataFrame) => Map[String, Long] = scope match {
-      // materialized NOW (eager checkpoint): reconcile unpersists its
-      // snapshot when it returns, and the deferred frame must survive that
-      case Scope.Full(Scope.OneJob) => (rt, df) => {
-        deferred += ((rt, df.localCheckpoint(true))); Map.empty
-      }
+      case Scope.Full(Scope.OneJob) => (rt, df) => { deferred += ((rt, df)); Map.empty }
       case _ => store.applyActions
     }
-    val counts = table.filter(t => types(t._2)).map { case (rt, _, system, source) =>
-      def systemRead(keys: Option[DataFrame]): DataFrame =
-        keys.fold(store.snapshot(spark, rt, Some(system)))(
-          store.snapshotForKeys(spark, rt, _, Some(system)))
-      rt -> (scope match {
-        case Scope.Manifest(root) =>
-          manifestPass(s"$root/$rt", source()) { (cur, dirty) =>
-            reconcile(rt, cur, Some(dirty), systemRead(Some(dirty)), write)
-          }
-        case _ if rt == "Patient" =>
-          reconcile(rt, source(), patientKeys, systemRead(patientKeys), write)._1
-        case _ =>
-          reconcile(rt, source(), None,
-            store.snapshotForSubjects(spark, rt, cohortSubjects(ids)), write)._1
-      })
-    }
-    val written =
-      if (deferred.isEmpty) Map.empty[(String, String), Long]
-      else store.applyActionsMixed(deferred.map { case (rt, df) =>
-        df.select(lit(rt).as("resource_type"),
-          col("key"), col("id"), col("json"), col("merge_action"))
-      }.reduce(_.unionByName(_)))
-    counts.foldLeft(Map.empty[(String, String), Long]) { case (audit, (rt, c)) =>
-      val all = c ++ written.collect { case ((`rt`, a), n) => a -> n }
-      val filled = Seq("insert", "update", "delete")
-        .foldLeft(audit)((m, a) => m + ((rt, a) -> all.getOrElse(a, 0L)))
-      all.get("error").fold(filled)(n => filled + ((rt, "error") -> n))
-    }
+    try {
+      val counts = table.filter(t => types(t._2)).map { case (rt, _, system, source) =>
+        def systemRead(keys: Option[DataFrame]): DataFrame =
+          keys.fold(store.snapshot(spark, rt, Some(system)))(
+            store.snapshotForKeys(spark, rt, _, Some(system)))
+        rt -> (scope match {
+          case Scope.Manifest(root) =>
+            manifestPass(s"$root/$rt", source()) { (cur, dirty) =>
+              reconcile(rt, cur, Some(dirty), systemRead(Some(dirty)), write, held)
+            }
+          case _ if rt == "Patient" =>
+            reconcile(rt, source(), patientKeys, systemRead(patientKeys), write, held)._1
+          case _ =>
+            reconcile(rt, source(), None,
+              store.snapshotForSubjects(spark, rt, cohortSubjects(ids)), write, held)._1
+        })
+      }
+      val written =
+        if (deferred.isEmpty) Map.empty[(String, String), Long]
+        else store.applyActionsMixed(deferred.map { case (rt, df) =>
+          df.select(lit(rt).as("resource_type"),
+            col("key"), col("id"), col("json"), col("merge_action"))
+        }.reduce(_.unionByName(_)))
+      counts.foldLeft(Map.empty[(String, String), Long]) { case (audit, (rt, c)) =>
+        val all = c ++ written.collect { case ((`rt`, a), n) => a -> n }
+        val filled = Seq("insert", "update", "delete")
+          .foldLeft(audit)((m, a) => m + ((rt, a) -> all.getOrElse(a, 0L)))
+        all.get("error").fold(filled)(n => filled + ((rt, "error") -> n))
+      }
+    } finally { held.foreach(_.unpersist()); () }
   }
 
   /** A pipeline whose INPUTS are semi-join-scoped to the dirty keys —
@@ -399,14 +420,9 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       Lakehouse.recoverBakSwap(spark, live, bak)
       val prev =
         if (Lakehouse.fs(spark, live).exists(new org.apache.hadoop.fs.Path(live)))
-          spark.read.parquet(live)
+          spark.read.schema(CnicsPipeline.manifestSchema).parquet(live)
         else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("key",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("__h",
-              org.apache.spark.sql.types.LongType))))
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], CnicsPipeline.manifestSchema)
       val (dirty, manifest0) = Merge.manifestDiff(cur, "key", "json", prev)
       val (counts, dupKeys) = reconcileDirty(cur, dirty)
       // E5 dup keys were routed OUT of the merge unapplied: advancing
@@ -425,10 +441,11 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     } finally { cur.unpersist(); () }
   }
 
-  /** The cohort-id frame every child type joins against, materialized
-    * (localCheckpoint) once per [[sync]], and only when a child type
-    * is requested: it feeds both the fan-out join and the subject
-    * scope, so the cut halves the cohort assembly work — and,
+  /** The cohort-id frame Patient assembly and every child type join
+    * against, materialized (localCheckpoint) once per [[sync]], and
+    * only when a child type is requested: it feeds the Patient
+    * assembly, the fan-out join and the subject scope, so the cohort
+    * is assembled once — and,
     * critically for skew, it puts a REAL shuffle boundary under the
     * fan-out join. Without it the cohort side arrives pre-partitioned
     * by PatientId from its own upstream join, the whole right side
@@ -487,6 +504,11 @@ object CnicsPipeline {
   /** E5 dup-key error-channel bound: above this the duplicate set is
     * store corruption, not an error channel (see reconcile). */
   val MaxDupKeys: Int = 10000
+
+  /** A [[CnicsPipeline.sync]] manifest row: (key, xxhash64 of the json). */
+  private val manifestSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("key", org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("__h", org.apache.spark.sql.types.LongType)))
 
   /** A6 — the per-field last-wins crosswalk merge on SitePatientId
     * (cnics_to_fhir.py:296-304): hmrn is overwritten by every

@@ -145,7 +145,8 @@ object SourceSinkQueries {
           val tx2 = tx()
           val pipelineRejects = srvT.refRejects.get().toLong
           val storeC = new graft.sinks.HttpFhirStore(s"http://localhost:$portC", maxRetries = 2)
-          new CnicsPipeline(s, CnicsFixtures.demo(s), storeC, "uw").sync()
+          new CnicsPipeline(s, CnicsFixtures.demo(s), storeC, "uw")
+            .sync(scope = Scope.Full(Scope.PerType))
           val endStateEqual = if (srvT.data.equals(srvC.data)) 1L else 0L
           // negative probe: an orphan child PUT must 400 atomically
           val badBundle =

@@ -60,12 +60,14 @@ trait FhirStore {
     * ids make this legal: children reference `Patient/<deterministic
     * id>`, so no store-returned id feeds a later stage.
     *
-    * Default (scan-based stores without a transaction endpoint):
-    * per-type [[applyActions]] in parent-first order — same end state,
-    * still sequential per type. [[HttpFhirStore]] overrides with true
-    * mixed-type transaction Bundles (ONE distributed write job, the
-    * parent→child stage barrier gone). The distinct-type collect is a
-    * ≤#resource-types driver read, not a data collect. */
+    * Default (stores with no write of their own, such as
+    * [[InMemoryFhirStore]]): per-type [[applyActions]] in parent-first
+    * order — same end state, still sequential per type. Neither real
+    * store uses it: [[HttpFhirStore]] overrides with true mixed-type
+    * transaction Bundles (ONE distributed write job, the parent→child
+    * stage barrier gone), and [[ParquetFhirStore]] with one rewrite per
+    * type directory, children before Patient. The distinct-type collect
+    * is a ≤#resource-types driver read, not a data collect. */
   def applyActionsMixed(actions: DataFrame): Map[(String, String), Long] = {
     val types = actions.select("resource_type").distinct()
       .collect().map(_.getString(0))
@@ -154,13 +156,22 @@ class InMemoryFhirStore extends FhirStore with Serializable {
 /** Parquet-backed store: the lakehouse form of the reconcile target.
   * Resources live as (key, id, json) rows in one parquet directory per
   * resource type; `snapshot` is a plain distributed scan (no paging at
-  * all — the scan parallelism IS the fan-out), and `applyActions`
-  * rewrites the directory copy-on-write: survivors (minus deletes)
+  * all — the scan parallelism IS the fan-out), and a write rewrites
+  * each touched directory copy-on-write: survivors (minus deletes)
   * plus upserts, written to a fresh version directory and swapped in.
-  * Every operation is a Spark job over the full cluster; the driver
-  * only moves directory pointers. Idempotent by construction — actions
-  * keyed on the business identifier, PUT-semantics like the HTTP sink. */
+  * One write mechanism serves both entry points: [[applyActionsMixed]]
+  * rewrites every directory it touches exactly once, children before
+  * Patient, and [[applyActions]] is the same body over a one-type
+  * frame. Every operation is a Spark job over the full cluster; the
+  * driver only moves directory pointers. Idempotent by construction —
+  * actions keyed on the business identifier, PUT-semantics like the
+  * HTTP sink. `baseDir` may be any Hadoop path (plain local, `file:`,
+  * `hdfs:`, `s3a:`): every existence check and listing goes through
+  * the path's Hadoop FileSystem, like the swap itself. */
 class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
+  import org.apache.hadoop.fs.Path
+  import graft.operators.Lakehouse
+
   private def dir(rt: String) = s"$baseDir/$rt"
 
   /** Restore every type dir a crashed [[swapIn]] left stranded at
@@ -168,18 +179,31 @@ class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
     * between the swap's two renames never reads as an empty store
     * (which would classify every source row as an insert). */
   private def heal(spark: SparkSession): Unit =
-    Option(new java.io.File(baseDir).list()).getOrElse(Array.empty[String])
-      .filter(_.endsWith(".bak"))
-      .foreach(b => graft.operators.Lakehouse.recoverBakSwap(spark,
-        s"$baseDir/${b.stripSuffix(".bak")}"))
+    Option(Lakehouse.fs(spark, baseDir).globStatus(new Path(baseDir, "*.bak")))
+      .getOrElse(Array.empty)
+      .foreach(b => Lakehouse.recoverBakSwap(spark, dir(b.getPath.getName.stripSuffix(".bak"))))
+
+  /** The stored (key, id, json) rows of a type, read with the declared
+    * schema (no schema-inference job); empty when the type has no dir. */
+  private def stored(spark: SparkSession, rt: String): DataFrame =
+    if (Lakehouse.fs(spark, baseDir).exists(new Path(dir(rt))))
+      spark.read.schema(ParquetFhirStore.rowSchema).parquet(dir(rt))
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ParquetFhirStore.rowSchema)
+
+  /** The type dirs on disk other than Patient — the cascade's targets
+    * (not the `.v*` versions a write is building, nor a swap's `.bak`). */
+  private def childDirs(spark: SparkSession): Seq[String] = {
+    val fs = Lakehouse.fs(spark, baseDir)
+    val root = new Path(baseDir)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filter(n => n != "Patient" && !n.contains(".v") && !n.endsWith(".bak"))
+  }
 
   def snapshot(spark: SparkSession, resourceType: String,
       identifierSystem: Option[String] = None): DataFrame = {
     heal(spark)
-    val d = new java.io.File(dir(resourceType))
-    if (!d.exists())
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], FhirStore.snapshotSchema)
-    val base = spark.read.parquet(d.toString)
+    val base = stored(spark, resourceType)
     identifierSystem match {
       case None => base.select("key", "id")
       case Some(sys) =>
@@ -198,69 +222,76 @@ class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
   def snapshotForSubjects(spark: SparkSession, resourceType: String,
       subjectIds: DataFrame): DataFrame = {
     heal(spark)
-    val d = new java.io.File(dir(resourceType))
-    if (!d.exists())
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], FhirStore.snapshotSchema)
     val idCol = subjectIds.columns.head
     val subj = subjectIds.select(
       concat(lit("Patient/"), col(idCol).cast("string")).as("__subj"))
-    spark.read.parquet(d.toString)
+    stored(spark, resourceType)
       .withColumn("__subj", get_json_object(col("json"), "$.subject.reference"))
       .join(broadcast(subj), Seq("__subj"), "left_semi")
       .select("key", "id")
   }
 
-  def applyActions(resourceType: String, actions: DataFrame): Map[String, Long] = {
+  def applyActions(resourceType: String, actions: DataFrame): Map[String, Long] =
+    applyActionsMixed(actions.select(lit(resourceType).as("resource_type"),
+        col("key"), col("id"), col("json"), col("merge_action")))
+      .map { case ((_, a), n) => a -> n }
+
+  /** The store's one write: `actions` is materialized once (a local
+    * checkpoint, filled by the count) and counted with one
+    * (resource_type, merge_action) aggregate, then each type
+    * dir is rewritten ONCE — its stored rows minus its touched keys,
+    * minus (HAPI cascade parity with the HTTP sink's
+    * `?_cascade=delete`, cnics_to_fhir.py:333) the rows whose
+    * `subject.reference` names a Patient deleted in this call, plus
+    * its upserts. A Patient delete rewrites every child dir on disk;
+    * otherwise only the types with actions are rewritten.
+    *
+    * The checkpoint is released when the write returns, and a lost
+    * executor during the rewrites fails the write (checkpoint blocks
+    * cannot be recomputed; the bak swaps keep the store consistent and
+    * the next run re-classifies what was not swapped in).
+    *
+    * Children swap BEFORE the Patient dir: a crash between the two then
+    * leaves the deleted patients still in the store, so the next run
+    * re-classifies the delete and re-fires the cascade (idempotent
+    * no-op on the already-rewritten children). The reverse order would
+    * orphan children permanently — the departed patient has no cohort
+    * subject, so no later child reconcile can reach them and the
+    * Patient delete never re-fires. */
+  override def applyActionsMixed(actions: DataFrame): Map[(String, String), Long] = {
     val spark = actions.sparkSession
     heal(spark)
-    val acts = actions.select("key", "id", "json", "merge_action")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = acts.groupBy("merge_action").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val d = new java.io.File(dir(resourceType))
-    val current =
-      if (d.exists()) spark.read.parquet(d.toString).select("key", "id", "json")
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("key", StringType), StructField("id", StringType),
-          StructField("json", StringType))))
-    // copy-on-write: survivors (keys not touched by any action) + upserts
-    val touched = acts.select("key").distinct()
-    val survivors = current.join(touched, Seq("key"), "left_anti")
-    val upserts = acts.filter(col("merge_action") =!= "delete")
-      .select("key", "id", "json")
-    val next = survivors.unionByName(upserts)
-    // HAPI cascade parity with the HTTP sink's `?_cascade=delete`
-    // (cnics_to_fhir.py:333): Patient deletes take their children in
-    // every sibling resource dir with them — one anti-join rewrite per
-    // child type against the broadcast-sized deleted-subject set.
-    // Children rewrite BEFORE the Patient dir swaps: a crash between
-    // the two then leaves the deleted patients still in the store, so
-    // the next run re-classifies the delete and re-fires the cascade
-    // (idempotent no-op on the already-rewritten children). The
-    // reverse order would orphan children permanently — the departed
-    // patient has no cohort subject, so no later child reconcile can
-    // reach them and the Patient delete never re-fires.
-    if (resourceType == "Patient") {
-      val deletedRefs = acts.filter(col("merge_action") === "delete")
+    // a checkpoint, not a persist: every rewrite below then plans over
+    // a leaf instead of re-analyzing the whole classify lineage
+    val acts = actions.select("resource_type", "key", "id", "json", "merge_action")
+      .localCheckpoint(eager = false)
+    try {
+      val counts = acts.groupBy("resource_type", "merge_action").count().collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      val acted = counts.keySet.map(_._1)
+      val cascade = counts.contains(("Patient", "delete"))
+      val deletedRefs = acts
+        .filter(col("resource_type") === "Patient" && col("merge_action") === "delete")
         .select(concat(lit("Patient/"), col("id")).as("__subj"))
-      if (!deletedRefs.isEmpty) {
-        val root = new java.io.File(baseDir)
-        Option(root.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.getName != "Patient" &&
-            !f.getName.contains(".v") && !f.getName.endsWith(".bak"))
-          .foreach { child =>
-            val cur = spark.read.parquet(child.toString).select("key", "id", "json")
-            val kept = cur
-              .withColumn("__subj", get_json_object(col("json"), "$.subject.reference"))
-              .join(broadcast(deletedRefs), Seq("__subj"), "left_anti")
-              .select("key", "id", "json")
-            swapIn(spark, child.getName, kept)
-          }
+      def rewrite(rt: String): Unit = {
+        val mine = acts.filter(col("resource_type") === rt)
+        val upserts = mine.filter(col("merge_action") =!= "delete").select("key", "id", "json")
+        val cur = stored(spark, rt)
+        val live = if (!cascade || rt == "Patient") cur else cur
+          .withColumn("__subj", get_json_object(col("json"), "$.subject.reference"))
+          .join(broadcast(deletedRefs), Seq("__subj"), "left_anti")
+          .select("key", "id", "json")
+        swapIn(spark, rt,
+          live.join(mine.select("key"), Seq("key"), "left_anti").unionByName(upserts))
       }
+      val children = (acted ++ (if (cascade) childDirs(spark) else Nil)) - "Patient"
+      children.toSeq.sorted.foreach(rewrite)
+      if (acted("Patient")) rewrite("Patient")
+      counts
+    } finally acts.queryExecution.analyzed.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
     }
-    swapIn(spark, resourceType, next)
-    acts.unpersist(blocking = false)
-    counts
   }
 
   /** Copy-on-write swap: write `next` to a versioned tmp dir, then
@@ -271,9 +302,14 @@ class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
   private def swapIn(spark: SparkSession, resourceType: String, next: DataFrame): Unit = {
     val tmp = dir(resourceType) + ".v" + System.nanoTime()
     next.write.mode("overwrite").parquet(tmp)
-    graft.operators.Lakehouse.bakSwapInto(spark, dir(resourceType), tmp,
-      "ParquetFhirStore")
+    Lakehouse.bakSwapInto(spark, dir(resourceType), tmp, "ParquetFhirStore")
   }
+}
+
+object ParquetFhirStore {
+  /** The stored row of every type dir. */
+  private val rowSchema: StructType = StructType(Seq(StructField("key", StringType),
+    StructField("id", StringType), StructField("json", StringType)))
 }
 
 /** Client-credentials OAuth for auth-fronted FHIR stores — the

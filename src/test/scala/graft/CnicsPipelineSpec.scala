@@ -388,6 +388,153 @@ class CnicsPipelineSpec extends AnyFunSuite {
     assert(live.exists() && !bak.exists())
   }
 
+  test("parquet store: a mixed write dying before the Patient swap re-converges on the next run") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // the real write path's crash window: applyActionsMixed swaps every
+    // child dir, then dies rewriting the Patient dir — a stray part file
+    // whose json column is an INT fails any read of the Patient json
+    val base = java.nio.file.Files.createTempDirectory("graft_pqmixcrash").toString
+    val pq = new graft.sinks.ParquetFhirStore(base)
+    new CnicsPipeline(spark, inputs, pq, "uw").sync()
+    val strayDir = java.nio.file.Files.createTempDirectory("graft_pqstray").toString
+    Seq(("uw-999", "cnics-uw-uw-999", 1)).toDF("key", "id", "json")
+      .coalesce(1).write.mode("overwrite").parquet(strayDir)
+    val part = new java.io.File(strayDir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val stray = new java.io.File(s"$base/Patient/part-stray.parquet")
+    java.nio.file.Files.copy(part.toPath, stray.toPath)
+    val acts = Seq(("Patient", "uw-002", "cnics-uw-uw-002", null: String, "delete"))
+      .toDF("resource_type", "key", "id", "json", "merge_action")
+    intercept[Exception](pq.applyActionsMixed(acts))
+    assert(stray.delete())
+    assert(pq.snapshot(spark, "Patient").collect().map(_.getString(0)).toSet
+      === Set("uw-001", "uw-002")) // the Patient dir never swapped
+    assert(pq.snapshot(spark, "Condition").collect().map(_.getString(0)).toSet
+      === Set("dx-1")) // the children did
+    val changed = inputs.copy(
+      patient = inputs.patient.filter(col("PatientId") =!= 2L))
+    val audit = new CnicsPipeline(spark, changed, pq, "uw").sync()
+    assert(audit(("Patient", "delete")) === 1L)
+    assert(audit(("Condition", "delete")) === 0L)
+    assert(audit(("Observation", "delete")) === 0L)
+    assert(pq.snapshot(spark, "Patient").collect().map(_.getString(0)).toSet
+      === Set("uw-001"))
+    assert(pq.snapshot(spark, "Observation").collect().map(_.getString(0)).toSet
+      === Set("lab-1", "lab-2"))
+  }
+
+  test("parquet store: one mixed write ends where per-type writes end, cascade included") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    def seeded(): String = {
+      val base = java.nio.file.Files.createTempDirectory("graft_pqmixed").toString
+      new CnicsPipeline(spark, inputs, new graft.sinks.ParquetFhirStore(base), "uw")
+        .sync(scope = graft.pipeline.Scope.Full(graft.pipeline.Scope.PerType))
+      base
+    }
+    val (mixedBase, perTypeBase) = (seeded(), seeded())
+    // uw-002's children sit in two child dirs: dx-3 and lab-3
+    val acts = Seq(
+      ("Patient", "uw-002", "cnics-uw-uw-002", null: String, "delete"),
+      ("Patient", "uw-001", "cnics-uw-uw-001",
+        """{"resourceType":"Patient","id":"cnics-uw-uw-001"}""", "update"),
+      ("Condition", "dx-9", "cnics-dx-uw-dx-9",
+        """{"resourceType":"Condition","subject":{"reference":"Patient/cnics-uw-uw-001"}}""",
+        "insert"),
+      ("Observation", "lab-1", "cnics-lab-uw-lab-1", null: String, "delete"))
+      .toDF("resource_type", "key", "id", "json", "merge_action")
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    val counts = new graft.sinks.ParquetFhirStore(mixedBase).applyActionsMixed(acts)
+    // the write's action checkpoint is released when it returns
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cached)
+    assert(counts ===Map(("Patient", "delete") -> 1L, ("Patient", "update") -> 1L,
+      ("Condition", "insert") -> 1L, ("Observation", "delete") -> 1L))
+    val perType = new graft.sinks.ParquetFhirStore(perTypeBase)
+    Seq("Patient", "Condition", "Observation").foreach { rt =>
+      perType.applyActions(rt, acts.filter(col("resource_type") === rt).drop("resource_type"))
+    }
+    def contents(base: String, rt: String): Set[(String, String, String)] =
+      spark.read.parquet(s"$base/$rt").as[(String, String, String)].collect().toSet
+    Seq("Patient", "Condition", "MedicationRequest", "Observation").foreach { rt =>
+      assert(contents(mixedBase, rt) === contents(perTypeBase, rt), rt)
+    }
+    assert(contents(mixedBase, "Condition").map(_._1) === Set("dx-1", "dx-9"))
+    assert(contents(mixedBase, "Observation").map(_._1) === Set("lab-2"))
+  }
+
+  test("parquet store: PerType and OneJob Full syncs end in the same store and audit") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.pipeline.Scope
+    val changed = inputs.copy(
+      patient = inputs.patient.filter(col("PatientId") =!= 2L))
+    def run(write: Scope.Write) = {
+      val base = java.nio.file.Files.createTempDirectory("graft_pqwrite").toString
+      val pq = new graft.sinks.ParquetFhirStore(base)
+      new CnicsPipeline(spark, inputs, pq, "uw").sync(scope = Scope.Full(write))
+      val audit = new CnicsPipeline(spark, changed, pq, "uw").sync(scope = Scope.Full(write))
+      (audit, Seq("Patient", "Condition", "MedicationRequest", "Observation").map { rt =>
+        rt -> spark.read.parquet(s"$base/$rt").as[(String, String, String)].collect().toSet
+      }.toMap)
+    }
+    val (perTypeAudit, perTypeStore) = run(Scope.PerType)
+    val (oneJobAudit, oneJobStore) = run(Scope.OneJob)
+    assert(perTypeAudit(("Patient", "delete")) === 1L)
+    assert(oneJobAudit === perTypeAudit)
+    assert(oneJobStore === perTypeStore)
+  }
+
+  test("parquet store: a Full sync with a departed patient writes each type dir once") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val base = java.nio.file.Files.createTempDirectory("graft_pqonce").toString
+    val pq = new graft.sinks.ParquetFhirStore(base)
+    new CnicsPipeline(spark, inputs, pq, "uw").sync()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: SparkListenerSQLExecutionStart
+              if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+            plans.add(s.physicalPlanDescription); ()
+          case _ =>
+        }
+    }
+    val changed = inputs.copy(
+      patient = inputs.patient.filter(col("PatientId") =!= 2L))
+    spark.sparkContext.addSparkListener(listener)
+    val audit =
+      try {
+        val a = new CnicsPipeline(spark, changed, pq, "uw").sync()
+        org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+        a
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(audit(("Patient", "delete")) === 1L)
+    import scala.jdk.CollectionConverters._
+    Seq("Patient", "Condition", "MedicationRequest", "Observation").foreach { rt =>
+      assert(plans.asScala.count(_.contains(s"$base/$rt.v")) === 1, rt)
+    }
+    assert(pq.snapshot(spark, "Condition").collect().map(_.getString(0)).toSet
+      === Set("dx-1")) // the cascade rode the one Condition rewrite
+    assert(pq.snapshot(spark, "Observation").collect().map(_.getString(0)).toSet
+      === Set("lab-1", "lab-2"))
+  }
+
+  test("parquet store under a file: URI base reads back what it wrote") {
+    // every existence check and listing goes through Hadoop FS: read
+    // through java.io.File, a `file:` base looked empty, so the second
+    // sync classified every row as an insert
+    val base = java.nio.file.Files.createTempDirectory("graft_pquri").toString
+    val pq = new graft.sinks.ParquetFhirStore("file://" + base)
+    val audit1 = new CnicsPipeline(spark, inputs, pq, "uw").sync()
+    assert(audit1(("Patient", "insert")) === 2L)
+    val audit2 = new CnicsPipeline(spark, inputs, pq, "uw").sync()
+    assert(audit2.collect { case ((_, "insert"), n) => n }.sum === 0L)
+    assert(audit2.collect { case ((_, "delete"), n) => n }.sum === 0L)
+    assert(audit2(("Patient", "update")) === 2L)
+    assert(audit2(("Observation", "update")) === 3L)
+  }
+
   test("HttpFhirStore round-trip against a live HTTP server") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     val served = new java.util.concurrent.ConcurrentHashMap[String, String]()

@@ -202,10 +202,8 @@ object SourceSinkQueries {
       "standard diagnosis/medication CSV code lists: row and distinct counts",
       (s, _) => {
         import s.implicits._
-        val dx = CnicsCsv.loadCodeList(s,
-          "/root/reference/CNICS_Standard_Diagnosis_Codes_20210419.csv")
-        val med = CnicsCsv.loadCodeList(s,
-          "/root/reference/CNICS_Standard_Medication_Codes_20210419.csv")
+        val dx = CnicsCsv.loadCodeList(s, CnicsCsv.StandardDiagnosisCodes)
+        val med = CnicsCsv.loadCodeList(s, CnicsCsv.StandardMedicationCodes)
         Seq(
           ("diagnosis", dx.size.toLong, dx.distinct.size.toLong),
           ("medication", med.size.toLong, med.distinct.size.toLong)

@@ -7,6 +7,16 @@ import org.apache.spark.sql.functions._
   * the patient-id list text round-trip (A9/B4). */
 object CnicsCsv {
 
+  /** A5 — the reference's standard code lists (cnics_to_fhir.py:190-193),
+    * read in place from the reference snapshot: 641 diagnosis names and
+    * 773 medication names. They are not in this repository: without them
+    * the `a5_codelist_stats` row fails, and the tests that read them
+    * check these paths first. */
+  val StandardDiagnosisCodes =
+    "/root/reference/CNICS_Standard_Diagnosis_Codes_20210419.csv"
+  val StandardMedicationCodes =
+    "/root/reference/CNICS_Standard_Medication_Codes_20210419.csv"
+
   /** A5 — quoted single-column code list (e.g. the 641-name standard
     * diagnosis list, cnics_to_fhir.py:190-193). Returned as a Seq for
     * broadcast membership tests (D7): these lists are dictionary-sized

@@ -90,7 +90,16 @@ class FixtureSchemaSpec extends AnyFunSuite {
     // silently drop out of the driver's CORRECTNESS compare. Builders
     // that train models (BPE, IVF/PQ) do run small local jobs here;
     // sf0.001 keeps that to seconds.
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    // `a5_codelist_stats` reads no fixture table, only the reference's
+    // code-list CSVs; it is left out only while those are not readable.
+    val absent = CnicsSourcesSpec.absentCodeLists
+    if (absent.nonEmpty)
+      info(s"a5_codelist_stats not analyzed: ${absent.mkString(", ")} not readable")
+    val queries = SparkEntry.queries.toSeq
+      .filterNot { case (name, _) => absent.nonEmpty && name == "a5_codelist_stats" }
+      .sortBy(_._1)
+    info(s"${queries.size} queries analyzed")
+    val failures = queries.flatMap { case (name, fn) =>
       try { fn(spark, dir).schema; None }
       catch { case e: Throwable =>
         Some(s"$name: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").linesIterator.take(2).mkString(" ")}")

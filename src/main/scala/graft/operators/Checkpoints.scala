@@ -58,6 +58,21 @@ object Checkpoints {
   def truncateEvery(df: DataFrame, round: Int, total: Int, every: Int): DataFrame =
     if (round < total && round % every == 0) truncate(df) else df
 
+  /** Runs `use` on `df` materialized once: a LAZY local checkpoint, so
+    * the first action `use` runs fills it and every later reader reads
+    * its blocks instead of recomputing (or re-fetching) the lineage.
+    * The blocks are released when `use` returns, not left to the
+    * ContextCleaner. Local mode only: checkpoint blocks cannot be
+    * recomputed, so an executor lost inside `use` fails it. */
+  def pinned[A](df: DataFrame)(use: DataFrame => A): A = {
+    val p = df.localCheckpoint(eager = false)
+    try use(p)
+    finally p.queryExecution.analyzed.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+  }
+
   /** `.truncated` — drop-in for the eager `.localCheckpoint(true)`
     * idiom at every iterative round boundary. */
   implicit class TruncateOps(private val df: DataFrame) extends AnyVal {

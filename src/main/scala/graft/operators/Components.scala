@@ -203,19 +203,25 @@ object Components {
     * 10⁸-degree hub never buffers its whole neighborhood in one task
     * (the WindowExec hazard the PageRank totals rework removed). Labels
     * are checkpointed per round: three references per round would
-    * otherwise grow the plan exponentially in the round count. */
+    * otherwise grow the plan exponentially in the round count.
+    *
+    * Edges are undirected: (a, b) and (b, a) are one edge, whatever the
+    * input holds. `edgesDistinct = true` promises one row per UNORDERED
+    * pair; its one caller, `lpa_communities`, passes distinct a < b
+    * pairs. */
   def labelPropagation(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iters: Int = 3,
       edgesDistinct: Boolean = false): DataFrame = {
-    val pre = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+    // canonical pairs BEFORE the distinct: a duplicate adjacency would
+    // break the round-1 min(dst) fold below
+    val (s, d) = (col(srcCol).cast("long"), col(dstCol).cast("long"))
+    val pre = edges.select(least(s, d).as("src"), greatest(s, d).as("dst"))
       .filter(col("src") =!= col("dst"))
-    // edgesDistinct: the caller already guarantees one row per pair
-    // (the co-order pair frames end in .distinct()) — skip a redundant
-    // full shuffle of the edge set (r18, the connectedComponents knob).
+    // edgesDistinct skips a redundant full shuffle of the edge set (r18,
+    // the connectedComponents knob)
     val base = (if (edgesDistinct) pre else pre.distinct()).truncated
     val both = base.union(base.select(col("dst").as("src"), col("src").as("dst")))
     if (iters < 1)

@@ -25,27 +25,37 @@ object Merge {
     * `store` must carry the key columns plus an `id` column (the
     * store-assigned resource id, carried into updates — reference
     * lines 608/696/788). Result: all source columns + `merge_action`
-    * ("insert" | "update" | "delete") + `store_id` (null for inserts).
+    * ("insert" | "update" | "delete" | "error") + `store_id` (null for
+    * inserts).
+    *
+    * E5 — a key the store holds more than once classifies `error`,
+    * whether or not the source has it: the reference aborts that row
+    * ("Multiple patient resources", cnics_to_fhir.py:359, 906-908), so
+    * it is neither written nor deleted, only counted. The store side is
+    * one `groupBy(keys)` keeping the smallest id and the row count; the
+    * join reuses that aggregate's key partitioning, so the check costs
+    * no exchange or job of its own.
     *
     * Contracts (property-tested):
-    *  - insert ∪ update rows ≡ source rows
+    *  - insert ∪ update rows ≡ source rows (store keys held once)
     *  - delete rows ≡ store ∖ source (by key)
+    *  - one row per source row plus one per store-only key
     *  - re-running with store' = apply(actions) yields 0 inserts and
     *    0 deletes (idempotent re-run, the reference's steady state)
     */
   def classify(source: DataFrame, store: DataFrame, keys: Seq[String]): DataFrame = {
     val srcFlag = "__graft_src"
-    val tgtFlag = "__graft_tgt"
+    val nCol = "__graft_n"
     val s = source.withColumn(srcFlag, lit(true))
-    val t = store
-      .withColumnRenamed("id", StoreIdCol)
-      .select((keys.map(col) :+ col(StoreIdCol) :+ lit(true).as(tgtFlag)): _*)
+    val t = store.groupBy(keys.map(col): _*)
+      .agg(min(col("id")).as(StoreIdCol), count(lit(1)).as(nCol))
     s.join(t, keys, "full_outer")
       .withColumn(ActionCol,
-        when(col(srcFlag).isNotNull && col(tgtFlag).isNotNull, "update")
-          .when(col(tgtFlag).isNotNull, "delete")
+        when(col(nCol) > 1, "error")
+          .when(col(srcFlag).isNotNull && col(nCol).isNotNull, "update")
+          .when(col(nCol).isNotNull, "delete")
           .otherwise("insert"))
-      .drop(srcFlag, tgtFlag)
+      .drop(srcFlag, nCol)
   }
 
   /** Split a classified actions frame. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.FhirResources
-import graft.operators.{Lakehouse, Merge}
+import graft.operators.{Checkpoints, Lakehouse, Merge}
 import graft.sinks.FhirStore
 
 /** The reference's job, re-expressed as one declarative DAG per
@@ -183,76 +183,29 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
         col("Race"), col("Hispanic"), col("Sex"))).as("json"))
   }
 
-  /** Reconcile + write of one resource type: classify `source0`
-    * against the store `snapshot` with a full-outer merge on `key`,
-    * hand the actions to `write`, and return its counts plus the E5
-    * dup-key values (error-channel-sized; [[manifestPass]] must keep
-    * those keys OUT of its manifest or the error would be masked
-    * forever). With a `keyScope` the source is semi-joined to it too,
-    * so keys outside the scope are neither writable nor deletable;
-    * semi joins keep the scope frame un-duplicated, and Catalyst
-    * broadcasts it when dimension-sized. The persisted snapshot joins
-    * `held`, which the caller unpersists once every write is done (a
-    * deferring `write` still reads it). */
-  private def reconcile(resourceType: String, source0: DataFrame,
-      keyScope: Option[DataFrame], snapshot: => DataFrame,
-      write: (String, DataFrame) => Map[String, Long],
-      held: scala.collection.mutable.Buffer[DataFrame]): (Map[String, Long], Seq[String]) = {
+  /** The action frame of one resource type: `source0` classified
+    * against the store `snapshot` with a full-outer merge on `key`, as
+    * (key, id, json, merge_action). A key the store holds more than
+    * once classifies `error` (E5, see [[Merge.classify]]): the store
+    * counts it and never applies it. With a `keyScope` the source is
+    * semi-joined to it too, so keys outside the scope are neither
+    * writable nor deletable; semi joins keep the scope frame
+    * un-duplicated, and Catalyst broadcasts it when dimension-sized. */
+  private def reconcile(source0: DataFrame, keyScope: Option[DataFrame],
+      snapshot: DataFrame): DataFrame = {
     val source = keyScope
       .map(ks => source0.join(ks, Seq("key"), "left_semi"))
       .getOrElse(source0)
-    // persisted: the dup-key scan below and the merge both read it, and
-    // for HTTP stores recomputing means re-fetching the whole snapshot
-    val snapAll = snapshot.filter(col("key").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    held += snapAll
-    // E5 — multiple store resources sharing one business key: the
-    // reference aborts that row ("Multiple patient resources",
-    // cnics_to_fhir.py:359, 906-908). Route the key out of the merge
-    // entirely (no write, no delete) and surface an `error` counter.
-    val dupKeys = snapAll.groupBy("key").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1).select("key")
-    // error-channel-sized by construction (only keys the store holds
-    // twice); one aggregate job returns their count and at most
-    // MaxDupKeys of them, so the manifest can exclude them and
-    // callers can count them without a second job. CAPPED, per
-    // partition and in the driver-side merge: a misconfigured store
-    // that duplicates a large fraction of its keys would otherwise
-    // turn this into an unbounded driver collect feeding a huge
-    // isin() literal tree — past the cap the run fails loudly (the
-    // store needs repair, not a bigger merge).
-    val cap = CnicsPipeline.MaxDupKeys
-    val (nDup, dupKeyValues) = dupKeys.rdd.map(_.getString(0))
-      .aggregate((0L, Vector.empty[String]))(
-        { case ((n, ks), k) => (n + 1, if (ks.size < cap) ks :+ k else ks) },
-        { case ((n1, a), (n2, b)) => (n1 + n2, (a ++ b).take(cap)) })
-    require(nDup <= cap,
-      s"$resourceType store holds > $cap duplicated business keys — " +
-        "this is store corruption at scale, not an error channel; repair " +
-        "the store before syncing")
-    val (snap, src) =
-      if (nDup == 0) (snapAll, source)
-      else (snapAll.join(broadcast(dupKeys), Seq("key"), "left_anti"),
-        source.join(broadcast(dupKeys), Seq("key"), "left_anti"))
-    val classified = Merge.classify(src, snap, Seq("key"))
+    Merge.classify(source, snapshot.filter(col("key").isNotNull), Seq("key"))
       .withColumn("id", coalesce(col(Merge.StoreIdCol), col("id")))
-      .withColumnRenamed(Merge.ActionCol, "merge_action")
-    // B-side debug channel (reference parity, see class doc): the
-    // exact frame handed to the sink, persisted for inspection.
-    // When the dump runs, the classify join is materialized ONCE
-    // (localCheckpoint) so the sink pass doesn't recompute the
-    // source scan + snapshot join a second time.
-    val actions = debugDir match {
-      case None => classified
-      case Some(dir) =>
-        val pinned = classified.localCheckpoint(true)
-        pinned.select("key", "id", "merge_action", "json")
-          .write.mode("overwrite").parquet(s"$dir/$resourceType")
-        pinned
-    }
-    val counts = write(resourceType, actions.select("key", "id", "json", "merge_action"))
-    (if (nDup > 0) counts + ("error" -> nDup) else counts, dupKeyValues)
+      .select("key", "id", "json", "merge_action")
   }
+
+  /** B-side debug channel (reference parity, see class doc): the exact
+    * action frame handed to the sink, dumped for inspection. */
+  private def dump(resourceType: String, actions: DataFrame): Unit =
+    debugDir.foreach(dir => actions.select("key", "id", "merge_action", "json")
+      .write.mode("overwrite").parquet(s"$dir/$resourceType"))
 
   /** Subject resource ids of the cohort (the `Patient/<id>` targets). */
   private def cohortSubjects(ids: DataFrame): DataFrame =
@@ -281,7 +234,8 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     * and returns the reference's zero-filled 12-counter audit (E1:
     * {Patient, Condition, MedicationRequest, Observation} × {insert,
     * update, delete}), plus a (type, `error`) counter when the store
-    * holds duplicated business keys (E5). `limit` caps the cohort.
+    * holds duplicated business keys (E5: such a key classifies `error`
+    * and is never applied). `limit` caps the cohort.
     *
     * `scope` picks the store read and the write:
     *  - [[Scope.Full]] — the site's cohort. Patient reads the
@@ -340,44 +294,49 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       ("Observation", "observations", recordIdSystem("lab"),
         () => pipe.observationResources(ids)))
     val deferred = scala.collection.mutable.ListBuffer.empty[(String, DataFrame)]
-    // every reconcile's persisted snapshot, unpersisted when the sync
-    // returns: the deferred actions are not materialized here (the
-    // store's write materializes their union once) and still read them
-    val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val write: (String, DataFrame) => Map[String, Long] = scope match {
-      case Scope.Full(Scope.OneJob) => (rt, df) => { deferred += ((rt, df)); Map.empty }
-      case _ => store.applyActions
+    // One type's write. Under OneJob the actions join the mixed write,
+    // which materializes their union once. Otherwise they are pinned
+    // (a lazy local checkpoint the first reader fills), so the dump,
+    // the write and `andThen` (the manifest swing) read the same rows
+    // and the snapshot is fetched once; released when `andThen` returns.
+    def write(rt: String, actions: DataFrame)(
+        andThen: (Map[String, Long], DataFrame) => Unit = (_, _) => ()): Map[String, Long] =
+      if (scope == Scope.Full(Scope.OneJob)) {
+        dump(rt, actions); deferred += ((rt, actions)); Map.empty
+      } else Checkpoints.pinned(actions) { pinned =>
+        dump(rt, pinned)
+        val counts = store.applyActions(rt, pinned)
+        andThen(counts, pinned)
+        counts
+      }
+    val counts = table.filter(t => types(t._2)).map { case (rt, _, system, source) =>
+      def systemRead(keys: Option[DataFrame]): DataFrame =
+        keys.fold(store.snapshot(spark, rt, Some(system)))(
+          store.snapshotForKeys(spark, rt, _, Some(system)))
+      rt -> (scope match {
+        case Scope.Manifest(root) =>
+          manifestPass(s"$root/$rt", source()) { (cur, dirty, swing) =>
+            write(rt, reconcile(cur, Some(dirty), systemRead(Some(dirty))))(swing)
+          }
+        case _ if rt == "Patient" =>
+          write(rt, reconcile(source(), patientKeys, systemRead(patientKeys)))()
+        case _ =>
+          write(rt, reconcile(source(), None,
+            store.snapshotForSubjects(spark, rt, cohortSubjects(ids))))()
+      })
     }
-    try {
-      val counts = table.filter(t => types(t._2)).map { case (rt, _, system, source) =>
-        def systemRead(keys: Option[DataFrame]): DataFrame =
-          keys.fold(store.snapshot(spark, rt, Some(system)))(
-            store.snapshotForKeys(spark, rt, _, Some(system)))
-        rt -> (scope match {
-          case Scope.Manifest(root) =>
-            manifestPass(s"$root/$rt", source()) { (cur, dirty) =>
-              reconcile(rt, cur, Some(dirty), systemRead(Some(dirty)), write, held)
-            }
-          case _ if rt == "Patient" =>
-            reconcile(rt, source(), patientKeys, systemRead(patientKeys), write, held)._1
-          case _ =>
-            reconcile(rt, source(), None,
-              store.snapshotForSubjects(spark, rt, cohortSubjects(ids)), write, held)._1
-        })
-      }
-      val written =
-        if (deferred.isEmpty) Map.empty[(String, String), Long]
-        else store.applyActionsMixed(deferred.map { case (rt, df) =>
-          df.select(lit(rt).as("resource_type"),
-            col("key"), col("id"), col("json"), col("merge_action"))
-        }.reduce(_.unionByName(_)))
-      counts.foldLeft(Map.empty[(String, String), Long]) { case (audit, (rt, c)) =>
-        val all = c ++ written.collect { case ((`rt`, a), n) => a -> n }
-        val filled = Seq("insert", "update", "delete")
-          .foldLeft(audit)((m, a) => m + ((rt, a) -> all.getOrElse(a, 0L)))
-        all.get("error").fold(filled)(n => filled + ((rt, "error") -> n))
-      }
-    } finally { held.foreach(_.unpersist()); () }
+    val written =
+      if (deferred.isEmpty) Map.empty[(String, String), Long]
+      else store.applyActionsMixed(deferred.map { case (rt, df) =>
+        df.select(lit(rt).as("resource_type"),
+          col("key"), col("id"), col("json"), col("merge_action"))
+      }.reduce(_.unionByName(_)))
+    counts.foldLeft(Map.empty[(String, String), Long]) { case (audit, (rt, c)) =>
+      val all = c ++ written.collect { case ((`rt`, a), n) => a -> n }
+      val filled = Seq("insert", "update", "delete")
+        .foldLeft(audit)((m, a) => m + ((rt, a) -> all.getOrElse(a, 0L)))
+      all.get("error").fold(filled)(n => filled + ((rt, "error") -> n))
+    }
   }
 
   /** A pipeline whose INPUTS are semi-join-scoped to the dirty keys —
@@ -406,10 +365,12 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     * swing the manifest (tmp write + bak swap) only after the store
     * apply returns — a crash mid-apply leaves the previous manifest
     * and the next run re-finds the same dirty keys (PUT-with-id
-    * upserts and DELETEs replay idempotently). */
+    * upserts and DELETEs replay idempotently). `reconcileDirty` gets
+    * the assembled source, the dirty keys and the swing, which it runs
+    * with the write's counts and the action frame it wrote. */
   private def manifestPass(dir: String, cur0: DataFrame)(
-      reconcileDirty: (DataFrame, DataFrame) => (Map[String, Long], Seq[String]))
-      : Map[String, Long] = {
+      reconcileDirty: (DataFrame, DataFrame, (Map[String, Long], DataFrame) => Unit) =>
+        Map[String, Long]): Map[String, Long] = {
     val cur = cur0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val live = s"$dir/manifest"
@@ -424,20 +385,21 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
         else spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], CnicsPipeline.manifestSchema)
       val (dirty, manifest0) = Merge.manifestDiff(cur, "key", "json", prev)
-      val (counts, dupKeys) = reconcileDirty(cur, dirty)
-      // E5 dup keys were routed OUT of the merge unapplied: advancing
-      // their manifest hash would mask the error forever (the key would
-      // read clean next run while the store keeps the duplicate data).
-      // Keep them out of the manifest so they stay dirty and the error
-      // re-surfaces every run until fixed — same steady-state behavior
-      // as the full PUT-always run.
-      val manifest = if (dupKeys.isEmpty) manifest0
-        else manifest0.filter(!col("key").isin(dupKeys: _*))
-      // apply succeeded -> swing the manifest (write fully, then swap)
-      val tmp = s"$dir/.manifest.tmp"
-      manifest.write.mode("overwrite").parquet(tmp)
-      Lakehouse.bakSwapInto(spark, live, tmp, "manifestPass", bak)
-      counts
+      reconcileDirty(cur, dirty, { (counts, actions) =>
+        // E5 `error` keys were never applied: advancing their manifest
+        // hash would mask the error forever (the key would read clean
+        // next run while the store keeps the duplicate data). Keep them
+        // out of the manifest so they stay dirty and the error
+        // re-surfaces every run until fixed — same steady-state
+        // behavior as the full PUT-always run.
+        val manifest = if (!counts.contains("error")) manifest0
+          else manifest0.join(actions.filter(col("merge_action") === "error").select("key"),
+            Seq("key"), "left_anti")
+        // apply succeeded -> swing the manifest (write fully, then swap)
+        val tmp = s"$dir/.manifest.tmp"
+        manifest.write.mode("overwrite").parquet(tmp)
+        Lakehouse.bakSwapInto(spark, live, tmp, "manifestPass", bak)
+      })
     } finally { cur.unpersist(); () }
   }
 
@@ -500,10 +462,6 @@ object CnicsPipeline {
     * reference's `resource_list` names (cnics_to_fhir.py:249-257). */
   val AllTypes: Set[String] =
     Set("patients", "conditions", "medicationrequests", "observations")
-
-  /** E5 dup-key error-channel bound: above this the duplicate set is
-    * store corruption, not an error channel (see reconcile). */
-  val MaxDupKeys: Int = 10000
 
   /** A [[CnicsPipeline.sync]] manifest row: (key, xxhash64 of the json). */
   private val manifestSchema = org.apache.spark.sql.types.StructType(Seq(

@@ -12,7 +12,11 @@ import org.apache.spark.sql.types._
   *
   * Contract for `actions`: columns `key` (business identifier value),
   * `id` (target resource id), `json` (serialized resource, null for
-  * deletes), `merge_action` in {insert, update, delete}.
+  * deletes), `merge_action` in {insert, update, delete, error}. An
+  * `error` row is a key the store holds more than once (E5, the
+  * reference's "Multiple patient resources" abort): every store counts
+  * it in the returned map and never applies it, so the key's stored
+  * resources stay as they are.
   */
 trait FhirStore {
   /** Store snapshot, optionally scoped to resources carrying an
@@ -129,6 +133,7 @@ class InMemoryFhirStore extends FhirStore with Serializable {
       val (key, id, json, act) = (r.getString(0), r.getString(1), r.getString(2), r.getString(3))
       act match {
         case "delete" => data.remove((resourceType, key)); ()
+        case "error" => ()
         case _ => data((resourceType, key)) = (id, json)
       }
     }
@@ -243,8 +248,9 @@ class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
     * minus (HAPI cascade parity with the HTTP sink's
     * `?_cascade=delete`, cnics_to_fhir.py:333) the rows whose
     * `subject.reference` names a Patient deleted in this call, plus
-    * its upserts. A Patient delete rewrites every child dir on disk;
-    * otherwise only the types with actions are rewritten.
+    * its upserts. An `error` key is counted and keeps its stored rows.
+    * A Patient delete rewrites every child dir on disk; otherwise only
+    * the types with applied actions are rewritten.
     *
     * The checkpoint is released when the write returns, and a lost
     * executor during the rewrites fails the write (checkpoint blocks
@@ -263,18 +269,18 @@ class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
     heal(spark)
     // a checkpoint, not a persist: every rewrite below then plans over
     // a leaf instead of re-analyzing the whole classify lineage
-    val acts = actions.select("resource_type", "key", "id", "json", "merge_action")
-      .localCheckpoint(eager = false)
-    try {
+    graft.operators.Checkpoints.pinned(
+        actions.select("resource_type", "key", "id", "json", "merge_action")) { acts =>
       val counts = acts.groupBy("resource_type", "merge_action").count().collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      val acted = counts.keySet.map(_._1)
+      val acted = counts.keySet.collect { case (rt, a) if a != "error" => rt }
       val cascade = counts.contains(("Patient", "delete"))
       val deletedRefs = acts
         .filter(col("resource_type") === "Patient" && col("merge_action") === "delete")
         .select(concat(lit("Patient/"), col("id")).as("__subj"))
       def rewrite(rt: String): Unit = {
-        val mine = acts.filter(col("resource_type") === rt)
+        // an `error` key keeps its stored rows: it is neither touched nor upserted
+        val mine = acts.filter(col("resource_type") === rt && col("merge_action") =!= "error")
         val upserts = mine.filter(col("merge_action") =!= "delete").select("key", "id", "json")
         val cur = stored(spark, rt)
         val live = if (!cascade || rt == "Patient") cur else cur
@@ -288,9 +294,6 @@ class ParquetFhirStore(baseDir: String) extends FhirStore with Serializable {
       children.toSeq.sorted.foreach(rewrite)
       if (acted("Patient")) rewrite("Patient")
       counts
-    } finally acts.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
     }
   }
 
@@ -716,7 +719,8 @@ object HttpFhirStore {
   /** The bundle writer behind both write paths: `rows` is
     * (resource_type, id, json, merge_action), and each partition POSTs
     * its rows in order as transaction Bundles of `bundleSize` entries
-    * through [[send]]. Returns counts keyed (resource_type, action).
+    * through [[send]]; `error` rows are counted and never posted.
+    * Returns counts keyed (resource_type, action).
     * Lives in the companion so the write closure ships no store. */
   private def writeBundles(rows: DataFrame, url: String,
       auth: Option[ClientCredentialsAuth], retries: Int,
@@ -727,7 +731,9 @@ object HttpFhirStore {
         val c = HttpClient.newHttpClient()
         val byAction = scala.collection.mutable
           .Map[(String, String), Long]().withDefaultValue(0L)
-        it.grouped(bsz).foreach { batch =>
+        def tally(r: Row): Unit = byAction((r.getString(0), r.getString(3))) += 1L
+        it.filter(r => r.getString(3) != "error" || { tally(r); false })
+          .grouped(bsz).foreach { batch =>
           val body = batch.map { r =>
             val (rt, id, json, act) =
               (r.getString(0), r.getString(1), r.getString(2), r.getString(3))
@@ -744,7 +750,7 @@ object HttpFhirStore {
           send(c, auth, retries, () => HttpRequest.newBuilder(URI.create(url))
             .header("Content-Type", "application/fhir+json;charset=utf-8")
             .POST(HttpRequest.BodyPublishers.ofString(body)))
-          batch.foreach(r => byAction((r.getString(0), r.getString(3))) += 1L)
+          batch.foreach(tally)
         }
         byAction.iterator.map { case ((rt, a), n) => (rt, a, n) }
       }(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong))

@@ -431,8 +431,8 @@ object VectorStreams {
     *     already materialized;
     *   - the exact rescore scans the full embedding of ONLY the
     *     survivor set: the ≤ |probes|·nCand distinct survivor ids (a
-    *     probe-batch-bounded list, the MaxDupKeys-style documented
-    *     collect) push into the second scan as an IN filter, so
+    *     probe-batch-bounded list, a documented bounded collect)
+    *     push into the second scan as an IN filter, so
     *     parquet row-group stats skip everything else.
     *
     * Arithmetic is [[graft.operators.Knn.mrlTopK]]'s verbatim (same

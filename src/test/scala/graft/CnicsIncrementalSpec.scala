@@ -163,6 +163,71 @@ class CnicsIncrementalSpec extends AnyFunSuite {
       s"errored key was masked by the manifest: $r3")
   }
 
+  test("E5 over HTTP: a key the server holds twice is never posted and stays dirty") {
+    val srv = new graft.sinks.FhirFixtureServer()
+    val port = srv.start()
+    try {
+      val store = new graft.sinks.HttpFhirStore(s"http://localhost:$port", maxRetries = 2)
+      val dir = mdir()
+      def patients(in: CnicsInputs): Map[String, Long] =
+        new CnicsPipeline(spark, in, store, "uw").sync(Set("patients"), Scope.Manifest(dir))
+          .collect { case (("Patient", a), n) => a -> n }
+      val base = CnicsFixtures.demo(spark)
+      assert(patients(base)("insert") === 2L)
+      // a second server resource carrying uw-001's identifier
+      srv.data.put("/Patient/dup-uw-001", srv.data.get("/Patient/cnics-uw-uw-001"))
+      val before = new java.util.HashMap[String, String](srv.data)
+      val posts = srv.posts.get()
+
+      // uw-001's body changes: it is the one dirty key, and it errors
+      val changed = base.copy(demographic = base.demographic
+        .withColumn("Sex", when(col("PatientId") === 1L, lit("Male")).otherwise(col("Sex"))))
+      val r2 = patients(changed)
+      assert(r2 === Map("insert" -> 0L, "update" -> 0L, "delete" -> 0L, "error" -> 1L))
+      assert(srv.posts.get() === posts) // no bundle names the key: none was sent
+      assert(srv.data === before)
+      // the manifest kept the key dirty, so the error re-surfaces
+      assert(patients(changed)("error") === 1L)
+      assert(srv.posts.get() === posts)
+    } finally srv.stop()
+  }
+
+  test("a Manifest delta over HTTP costs one GET per synced type at any shuffle width") {
+    // the key lookups must coalesce with the delta, not fan out per
+    // shuffle partition: at most idBatch dirty keys per type is one
+    // token-OR GET per type
+    val width = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(width)
+    spark.conf.set(width, "16")
+    val srv = new graft.sinks.FhirFixtureServer()
+    val port = srv.start()
+    try {
+      val store = new graft.sinks.HttpFhirStore(s"http://localhost:$port", maxRetries = 2)
+      val dir = mdir()
+      def synced(in: CnicsInputs): (Map[(String, String), Long], Int) = {
+        val gets = srv.gets.get()
+        val audit = new CnicsPipeline(spark, in, store, "uw").sync(scope = Scope.Manifest(dir))
+        (audit, srv.gets.get() - gets)
+      }
+      // first run: every key is dirty, and each type has a few
+      val (first, firstGets) = synced(CnicsFixtures.demo(spark))
+      assert(first(("Patient", "insert")) === 2L && first(("Observation", "insert")) === 3L)
+      assert(firstGets === 4)
+      // a nightly delta touching every type, no cascade: both Patients
+      // change, and one record of uw-001 leaves each child table
+      val demo = CnicsFixtures.demo(spark)
+      val (second, secondGets) = synced(demo.copy(
+        demographic = demo.demographic.withColumn("Sex", lit("Male")),
+        diagnosis = demo.diagnosis.filter("CAST(DiagnosisId AS STRING) <> 'dx-1'"),
+        medication = demo.medication.filter("CAST(MedicationId AS STRING) <> 'med-1'"),
+        lab = demo.lab.filter("LabId <> 'lab-1'")))
+      assert(second(("Patient", "update")) === 2L)
+      Seq("Condition", "MedicationRequest", "Observation")
+        .foreach(rt => assert(second((rt, "delete")) === 1L, rt))
+      assert(secondGets === 4)
+    } finally { srv.stop(); spark.conf.set(width, saved) }
+  }
+
   test("JobRunner.runIncremental: two-site shared store, second pass is all-zero") {
     val store = new InMemoryFhirStore
     val roots = scala.collection.mutable.Map[String, String]()

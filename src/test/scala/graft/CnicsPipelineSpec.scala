@@ -231,6 +231,46 @@ class CnicsPipelineSpec extends AnyFunSuite {
     assert(!store.data.contains(("Patient", "uw-001"))) // aborted key never written
   }
 
+  test("E5 on the parquet store: a key stored twice is counted, both its rows survive") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_pqdup").toString
+    val pq = new graft.sinks.ParquetFhirStore(base)
+    new CnicsPipeline(spark, inputs, pq, "uw").sync()
+    def rows(rt: String): Set[(String, String, String)] =
+      spark.read.parquet(s"$base/$rt").select("key", "id", "json")
+        .as[(String, String, String)].collect().toSet
+    // a second stored resource for uw-001: the same body under another id
+    val dupDir = java.nio.file.Files.createTempDirectory("graft_pqdupsrc").toString
+    spark.read.parquet(s"$base/Patient").filter(col("key") === "uw-001")
+      .withColumn("id", lit("dup-uw-001")).coalesce(1)
+      .write.mode("overwrite").parquet(dupDir)
+    val part = new java.io.File(dupDir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath, new java.io.File(s"$base/Patient/part-dup.parquet").toPath)
+    val dup = rows("Patient").filter(_._1 == "uw-001")
+    assert(dup.map(_._2) === Set("cnics-uw-uw-001", "dup-uw-001"))
+
+    // uw-001 changes too, but only the other keys may move: uw-002's
+    // body changes and dx-1 leaves the source
+    val changed = inputs.copy(
+      demographic = inputs.demographic.withColumn("Sex", lit("Male")),
+      diagnosis = inputs.diagnosis
+        .filter("PatientId <> 1 OR CAST(DiagnosisId AS STRING) <> 'dx-1'"))
+    val audit = new CnicsPipeline(spark, changed, pq, "uw").sync()
+    assert(audit(("Patient", "error")) === 1L)
+    assert(audit(("Patient", "update")) === 1L)
+    assert(audit(("Patient", "insert")) === 0L && audit(("Patient", "delete")) === 0L)
+    assert(audit(("Condition", "delete")) === 1L)
+    assert(rows("Patient").filter(_._1 == "uw-001") === dup) // both rows, bodies unchanged
+    // every other key ends where a clean store's sync of the same input ends
+    val mem = new InMemoryFhirStore
+    new CnicsPipeline(spark, changed, mem, "uw").sync()
+    Seq("Patient", "Condition", "MedicationRequest", "Observation").foreach { rt =>
+      val want = mem.data.collect { case ((`rt`, k), (id, json)) if k != "uw-001" => (k, id, json) }
+      assert(rows(rt).filter(_._1 != "uw-001") === want.toSet, rt)
+    }
+  }
+
   test("no-total snapshot: sharded id-cursor fallback fans the fetch out") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)

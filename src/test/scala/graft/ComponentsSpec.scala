@@ -88,6 +88,15 @@ class ComponentsSpec extends AnyFunSuite {
     assert(comp.values.toSet.size == 1)
   }
 
+  test("LPA: an edge given in both orientations labels as that edge given once") {
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L),
+      (10L, 11L), (11L, 12L), (10L, 12L), (3L, 10L))
+    // the bridge also arrives reversed: still one undirected edge, so
+    // neither endpoint gets a second vote from the other side
+    assert(lpa(edges :+ ((10L, 3L))) == lpa(edges))
+    assert(lpa(edges ++ edges.map(_.swap)) == lpa(edges))
+  }
+
   test("jaccardNeighbors matches hand-computed similarities and respects the hub cap") {
     import spark.implicits._
     // square with one diagonal: N(1)={2,3}, N(2)={1,3,4}, N(3)={1,2,4}, N(4)={2,3}

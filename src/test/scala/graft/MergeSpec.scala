@@ -66,6 +66,16 @@ class MergeSpec extends AnyFunSuite {
     assert(Merge.updates(again).count() === src.size)
   }
 
+  test("E5: a store key held twice classifies error once, in the source or not") {
+    val source = Seq("a", "b").toDF("k").withColumn("payload", concat(lit("p-"), col("k")))
+    val store = Seq(("a", "id-a2"), ("a", "id-a1"), ("b", "id-b"), ("c", "id-c1"), ("c", "id-c2"))
+      .toDF("k", "id")
+    val rows = Merge.classify(source, store, Seq("k")).collect()
+      .map(r => r.getAs[String]("k") -> r.getAs[String](Merge.ActionCol))
+    assert(rows.toMap === Map("a" -> "error", "b" -> "update", "c" -> "error"))
+    assert(rows.length === 3) // one row per key, not one per stored copy
+  }
+
   test("audit summary counts per action (E1)") {
     val acts = run(Seq("a", "b", "c"), Seq("c", "d"))
     val m = Merge.auditSummary(acts, lit("Patient")).collect()

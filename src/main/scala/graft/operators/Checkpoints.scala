@@ -65,12 +65,17 @@ object Checkpoints {
     * ContextCleaner. Local mode only: checkpoint blocks cannot be
     * recomputed, so an executor lost inside `use` fails it. */
   def pinned[A](df: DataFrame)(use: DataFrame => A): A = {
-    val p = df.localCheckpoint(eager = false)
-    try use(p)
-    finally p.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+    val p = pin(df)
+    try use(p) finally unpin(p)
+  }
+
+  /** [[pinned]]'s two halves, for pins that outlive one call: `pin`
+    * returns the lazy checkpoint, `unpin` releases its blocks. */
+  def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
+
+  def unpin(p: DataFrame): Unit = p.queryExecution.analyzed.foreach {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
   }
 
   /** `.truncated` — drop-in for the eager `.localCheckpoint(true)`

@@ -75,31 +75,36 @@ object Merge {
     * `(key, content-hash)` manifest, so a re-sync touches the store
     * wire only for keys whose content actually changed.
     *
-    * Returns `(dirty, manifest)`:
-    *  - `dirty` — one `key` column: keys new in `cur`, keys whose hash
-    *    changed, and keys present only in `prev` (they left the source
-    *    and must DELETE). Unchanged keys are absent, which is the
-    *    whole point: downstream scopes both the source and the store
-    *    snapshot to `dirty`, and O(changed) rows — not O(cohort) —
-    *    reach the store.
-    *  - `manifest` — the next run's `(key, __h)` frame (write it only
-    *    AFTER the store apply succeeds: a crash before the swing
-    *    leaves the old manifest, and the next run re-finds the same
-    *    dirty keys — PUT/DELETE are idempotent, so replay is safe).
+    * `carry` names further columns of `cur` that the manifest keeps
+    * beside the hash (the CNICS sync keeps each resource's subject), so
+    * a key that left the source is still known by them next run.
     *
-    * One hash join on `key`; the manifest is 16 bytes/row, so at a
-    * 10⁸-patient site this is a dimension-sized shuffle, not a data
-    * one. */
+    * Returns `(dirty, manifest)`:
+    *  - `dirty` — `key` plus the `carry` columns: keys new in `cur`,
+    *    keys whose hash changed, and keys present only in `prev` (they
+    *    left the source and must DELETE). A key that left the source
+    *    carries its `prev` values; every other key carries nulls.
+    *    Unchanged keys are absent, which is the whole point: downstream
+    *    scopes both the source and the store snapshot to `dirty`, and
+    *    O(changed) rows — not O(cohort) — reach the store.
+    *  - `manifest` — the next run's `(key, __h, carry…)` frame (write
+    *    it only AFTER the store apply succeeds: a crash before the
+    *    swing leaves the old manifest, and the next run re-finds the
+    *    same dirty keys — PUT/DELETE are idempotent, so replay is safe).
+    *
+    * One hash join on `key`; the manifest is 16 bytes/row plus the
+    * carried columns, so at a 10⁸-patient site this is a
+    * dimension-sized shuffle, not a data one. */
   def manifestDiff(cur: DataFrame, keyCol: String, contentCol: String,
-      prev: DataFrame): (DataFrame, DataFrame) = {
-    val manifest = cur.select(col(keyCol).as("key"),
-      xxhash64(col(contentCol)).as("__h"))
-    val dirty = manifest.withColumnRenamed("__h", "__h_cur")
-      .join(prev.select(col("key"), col("__h").as("__h_prev")),
+      prev: DataFrame, carry: Seq[String]): (DataFrame, DataFrame) = {
+    val manifest = cur.select(Seq(col(keyCol).as("key"),
+      xxhash64(col(contentCol)).as("__h")) ++ carry.map(col): _*)
+    val dirty = manifest.select(col("key"), col("__h").as("__h_cur"))
+      .join(prev.select(Seq(col("key"), col("__h").as("__h_prev")) ++ carry.map(col): _*),
         Seq("key"), "full_outer")
       .filter(col("__h_cur").isNull || col("__h_prev").isNull ||
         col("__h_cur") =!= col("__h_prev"))
-      .select("key")
+      .select(col("key") +: carry.map(c => when(col("__h_cur").isNull, col(c)).as(c)): _*)
     (dirty, manifest)
   }
 }

@@ -48,7 +48,7 @@ object Scope {
   /** Each type's actions go to its own `applyActions` call. */
   case object PerType extends Write
   /** Every type's actions go to one `applyActionsMixed` call (the
-    * default). */
+    * default, and the one write of `Keys` and `Manifest`). */
   case object OneJob extends Write
 
   /** The site's whole cohort. */
@@ -157,7 +157,8 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     * combinable aggregation (max_by ignores null ordering keys). */
   def crosswalkLastWins: DataFrame = CnicsPipeline.crosswalkLastWins(in.crosswalk)
 
-  /** Assembled patient resources: (PatientId, key, id, json). */
+  /** Assembled patient resources: (PatientId, key, id, subject, json),
+    * where `subject` is the patient's own key (see [[sync]]). */
   def patientResources(limit: Int = Int.MaxValue): DataFrame = patientsOf(cohort(limit))
 
   /** The Patient resources of a (PatientId, site_pat_id) cohort frame. */
@@ -176,6 +177,7 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       col("PatientId"),
       col("site_pat_id").as("key"),
       concat(lit(s"cnics-$siteLower-"), col("site_pat_id")).as("id"),
+      col("site_pat_id").as("subject"),
       to_json(FhirResources.patient(
         lit(siteLower), col("site_pat_id"), col("session_ids"),
         col("in_crosswalk"), col("hmrn"), col("umrn"),
@@ -237,39 +239,47 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     * holds duplicated business keys (E5: such a key classifies `error`
     * and is never applied). `limit` caps the cohort.
     *
-    * `scope` picks the store read and the write:
+    * One write rule: every scope but `Full(PerType)` defers all types'
+    * actions into one [[graft.sinks.FhirStore.applyActionsMixed]] call
+    * — on [[graft.sinks.HttpFhirStore]] one job of mixed-type Bundles,
+    * with no parent→child stage barrier; on
+    * [[graft.sinks.ParquetFhirStore]] one rewrite per type directory,
+    * the Patient-delete cascade included. Legal because ids are
+    * client-assigned; the end state equals `PerType`'s (pinned by
+    * `cnics_http_tx_audit` against a strict-reference server).
+    * `PerType` gives each type its own `applyActions` call. Children
+    * of a deleted Patient go with the Patient DELETE's
+    * `?_cascade=delete` (cnics_to_fhir.py:333), so no scope reads or
+    * deletes them itself.
+    *
+    * `scope` picks the store read:
     *  - [[Scope.Full]] — the site's cohort. Patient reads the
     *    site-scoped snapshot; children read the distributed
     *    per-subject snapshot of the cohort (A7), so store∖source
-    *    deletes stay within this cohort's subjects. `OneJob` (the
-    *    default) runs the same reads and classifies but defers every
-    *    write into one [[graft.sinks.FhirStore.applyActionsMixed]]
-    *    call — on [[graft.sinks.HttpFhirStore]] one job of mixed-type
-    *    Bundles, with no parent→child stage barrier; on
-    *    [[graft.sinks.ParquetFhirStore]] one rewrite per type
-    *    directory, the Patient-delete cascade included. Legal because
-    *    ids are client-assigned; the end state equals `PerType`'s
-    *    (pinned by `cnics_http_tx_audit` against a strict-reference
-    *    server). When a child type is requested, Patient and every
-    *    child type sync one cohort, the [[cohortIds]] frame, so a
-    *    `limit` cuts them alike.
+    *    deletes stay within this cohort's subjects. When a child type
+    *    is requested, Patient and every child type sync one cohort,
+    *    the [[cohortIds]] frame, so a `limit` cuts them alike.
     *  - [[Scope.Keys]] — a caller-known dirty set of site-patient ids
     *    (a CDC feed, [[graft.streaming.CnicsStreams.sync]]). The
     *    inputs are semi-join-scoped first, so assembly and wire are
     *    both O(batch). Patient reads `snapshotForKeys` and is
     *    key-scoped: a key whose cohort row vanished still DELETEs.
-    *    Children read the scoped cohort's subject snapshot; children of
-    *    a departed patient go with the Patient DELETE's
-    *    `?_cascade=delete` (cnics_to_fhir.py:333).
-    *  - [[Scope.Manifest]] — every type through its own (key, hash)
-    *    manifest at `<root>/<Type>/manifest` ([[manifestPass]]). The
+    *    Children read the scoped cohort's subject snapshot, which a
+    *    departed patient is no longer in.
+    *  - [[Scope.Manifest]] — every type through its own (key, hash,
+    *    subject) manifest at `<root>/<Type>/manifest` ([[manifestPass]]),
+    *    `subject` being the site patient key a resource belongs to. The
     *    source is assembled in full, but only keys whose JSON changed
     *    reach the merge, and the store read is the key-targeted
     *    `snapshotForKeys` under the type's site-scoped identifier
-    *    system: a K-row delta costs O(K) reads and writes. A key that
-    *    left the source is remembered and deletes explicitly, which
-    *    converges to the same end state as the Patient cascade. This
-    *    replaces the reference's PUT-always steady state
+    *    system: a K-row delta costs O(K) reads and writes. A child key
+    *    that left the source under a Patient this sync deletes is
+    *    dropped before its lookup (the cascade removes it); any other
+    *    key that left the source deletes explicitly. A manifest written
+    *    without `subject` keeps every departed key, which costs one
+    *    sync explicit child deletes and ends in the same store. Each
+    *    manifest swings only after the one write returns. This replaces
+    *    the reference's PUT-always steady state
     *    (cnics_to_fhir.py:548-584); clean keys are never read, so run a
     *    `Full` sync periodically as the integrity sweep. */
   def sync(types: Set[String] = CnicsPipeline.AllTypes, scope: Scope = Scope.Full(),
@@ -293,50 +303,64 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
         () => pipe.medicationResources(ids)),
       ("Observation", "observations", recordIdSystem("lab"),
         () => pipe.observationResources(ids)))
-    val deferred = scala.collection.mutable.ListBuffer.empty[(String, DataFrame)]
-    // One type's write. Under OneJob the actions join the mixed write,
-    // which materializes their union once. Otherwise they are pinned
-    // (a lazy local checkpoint the first reader fills), so the dump,
-    // the write and `andThen` (the manifest swing) read the same rows
-    // and the snapshot is fetched once; released when `andThen` returns.
-    def write(rt: String, actions: DataFrame)(
-        andThen: (Map[String, Long], DataFrame) => Unit = (_, _) => ()): Map[String, Long] =
-      if (scope == Scope.Full(Scope.OneJob)) {
-        dump(rt, actions); deferred += ((rt, actions)); Map.empty
-      } else Checkpoints.pinned(actions) { pinned =>
-        dump(rt, pinned)
-        val counts = store.applyActions(rt, pinned)
-        andThen(counts, pinned)
-        counts
-      }
-    val counts = table.filter(t => types(t._2)).map { case (rt, _, system, source) =>
-      def systemRead(keys: Option[DataFrame]): DataFrame =
-        keys.fold(store.snapshot(spark, rt, Some(system)))(
-          store.snapshotForKeys(spark, rt, _, Some(system)))
-      rt -> (scope match {
-        case Scope.Manifest(root) =>
-          manifestPass(s"$root/$rt", source()) { (cur, dirty, swing) =>
-            write(rt, reconcile(cur, Some(dirty), systemRead(Some(dirty))))(swing)
+    // persisted sources and pinned action frames, released on return
+    val release = scala.collection.mutable.ListBuffer.empty[() => Unit]
+    try {
+      val synced = table.filter(t => types(t._2))
+      val written = scala.collection.mutable.Map.empty[(String, String), Long]
+      val deferred = scala.collection.mutable.ListBuffer.empty[(String, DataFrame)]
+      val swings = scala.collection.mutable.ListBuffer.empty[(String, Map[String, Long] => Unit)]
+      synced.foreach { case (rt, _, system, source) =>
+        def systemRead(keys: Option[DataFrame]): DataFrame =
+          keys.fold(store.snapshot(spark, rt, Some(system)))(
+            store.snapshotForKeys(spark, rt, _, Some(system)))
+        val actions = scope match {
+          case Scope.Manifest(root) =>
+            val cur = source().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            release += (() => { cur.unpersist(); () })
+            val (dirty0, swing) = manifestPass(s"$root/$rt", cur)
+            // a child that left the source under a Patient this sync
+            // deletes goes with that delete's cascade: never looked up
+            val dirty = deferred.collectFirst { case ("Patient", pa) =>
+              dirty0.join(pa.filter(col("merge_action") === "delete")
+                .select(col("key").as("subject")), Seq("subject"), "left_anti")
+            }.getOrElse(dirty0).select("key")
+            // pinned: the Patient frame feeds the children's cascade
+            // filter, the write and the swing, and its lookup is sent once
+            val pinned = Checkpoints.pin(reconcile(cur, Some(dirty), systemRead(Some(dirty))))
+            release += (() => Checkpoints.unpin(pinned))
+            swings += rt -> (swing(_, pinned))
+            pinned
+          case _ if rt == "Patient" =>
+            reconcile(source(), patientKeys, systemRead(patientKeys))
+          case _ =>
+            reconcile(source(), None, store.snapshotForSubjects(spark, rt, cohortSubjects(ids)))
+        }
+        scope match {
+          // written before the next type reads the store; pinned so the
+          // dump and the write read the store once
+          case Scope.Full(Scope.PerType) => Checkpoints.pinned(actions) { pinned =>
+            dump(rt, pinned)
+            written ++= store.applyActions(rt, pinned).map { case (a, n) => (rt, a) -> n }
           }
-        case _ if rt == "Patient" =>
-          write(rt, reconcile(source(), patientKeys, systemRead(patientKeys)))()
-        case _ =>
-          write(rt, reconcile(source(), None,
-            store.snapshotForSubjects(spark, rt, cohortSubjects(ids))))()
-      })
-    }
-    val written =
-      if (deferred.isEmpty) Map.empty[(String, String), Long]
-      else store.applyActionsMixed(deferred.map { case (rt, df) =>
-        df.select(lit(rt).as("resource_type"),
-          col("key"), col("id"), col("json"), col("merge_action"))
-      }.reduce(_.unionByName(_)))
-    counts.foldLeft(Map.empty[(String, String), Long]) { case (audit, (rt, c)) =>
-      val all = c ++ written.collect { case ((`rt`, a), n) => a -> n }
-      val filled = Seq("insert", "update", "delete")
-        .foldLeft(audit)((m, a) => m + ((rt, a) -> all.getOrElse(a, 0L)))
-      all.get("error").fold(filled)(n => filled + ((rt, "error") -> n))
-    }
+          case _ => dump(rt, actions); deferred += rt -> actions
+        }
+      }
+      if (deferred.nonEmpty)
+        written ++= store.applyActionsMixed(deferred.map { case (rt, df) =>
+          df.select(lit(rt).as("resource_type"),
+            col("key"), col("id"), col("json"), col("merge_action"))
+        }.reduce(_.unionByName(_)))
+      def countsOf(rt: String): Map[String, Long] =
+        written.toMap.collect { case ((`rt`, a), n) => a -> n }
+      swings.foreach { case (rt, swing) => swing(countsOf(rt)) }
+      synced.foldLeft(Map.empty[(String, String), Long]) { case (audit, (rt, _, _, _)) =>
+        val all = countsOf(rt)
+        val filled = Seq("insert", "update", "delete")
+          .foldLeft(audit)((m, a) => m + ((rt, a) -> all.getOrElse(a, 0L)))
+        all.get("error").fold(filled)(n => filled + ((rt, "error") -> n))
+      }
+    } finally release.foreach(_())
   }
 
   /** A pipeline whose INPUTS are semi-join-scoped to the dirty keys —
@@ -359,48 +383,44 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       store, site, debugDir)
   }
 
-  /** One manifest-diffed reconcile (extension; see
-    * [[Merge.manifestDiff]]): diff `cur0` against the previous run's
-    * `(key, hash)` manifest under `dir`, reconcile the dirty keys, and
-    * swing the manifest (tmp write + bak swap) only after the store
-    * apply returns — a crash mid-apply leaves the previous manifest
-    * and the next run re-finds the same dirty keys (PUT-with-id
-    * upserts and DELETEs replay idempotently). `reconcileDirty` gets
-    * the assembled source, the dirty keys and the swing, which it runs
-    * with the write's counts and the action frame it wrote. */
-  private def manifestPass(dir: String, cur0: DataFrame)(
-      reconcileDirty: (DataFrame, DataFrame, (Map[String, Long], DataFrame) => Unit) =>
-        Map[String, Long]): Map[String, Long] = {
-    val cur = cur0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val live = s"$dir/manifest"
-      val bak = Some(s"$dir/.manifest.bak")
-      // heal a swap crashed between its two renames (live gone, bak
-      // holds the previous manifest): restore bak rather than letting
-      // an empty prev force a full re-sync
-      Lakehouse.recoverBakSwap(spark, live, bak)
-      val prev =
-        if (Lakehouse.fs(spark, live).exists(new org.apache.hadoop.fs.Path(live)))
-          spark.read.schema(CnicsPipeline.manifestSchema).parquet(live)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], CnicsPipeline.manifestSchema)
-      val (dirty, manifest0) = Merge.manifestDiff(cur, "key", "json", prev)
-      reconcileDirty(cur, dirty, { (counts, actions) =>
-        // E5 `error` keys were never applied: advancing their manifest
-        // hash would mask the error forever (the key would read clean
-        // next run while the store keeps the duplicate data). Keep them
-        // out of the manifest so they stay dirty and the error
-        // re-surfaces every run until fixed — same steady-state
-        // behavior as the full PUT-always run.
-        val manifest = if (!counts.contains("error")) manifest0
-          else manifest0.join(actions.filter(col("merge_action") === "error").select("key"),
-            Seq("key"), "left_anti")
-        // apply succeeded -> swing the manifest (write fully, then swap)
-        val tmp = s"$dir/.manifest.tmp"
-        manifest.write.mode("overwrite").parquet(tmp)
-        Lakehouse.bakSwapInto(spark, live, tmp, "manifestPass", bak)
-      })
-    } finally { cur.unpersist(); () }
+  /** The manifest half of a [[Scope.Manifest]] sync for one type
+    * (extension; see [[Merge.manifestDiff]]): diffs the assembled
+    * `cur` against the previous run's (key, hash, subject) manifest
+    * under `dir`. Returns the dirty keys, each with its previous
+    * subject when it left the source, and the swing (tmp write + bak
+    * swap), which [[sync]] runs with the type's counts and action frame
+    * only after the store write returns — a crash mid-write leaves the
+    * previous manifest and the next run re-finds the same dirty keys
+    * (PUT-with-id upserts and DELETEs replay idempotently). */
+  private def manifestPass(dir: String, cur: DataFrame)
+      : (DataFrame, (Map[String, Long], DataFrame) => Unit) = {
+    val live = s"$dir/manifest"
+    val bak = Some(s"$dir/.manifest.bak")
+    // heal a swap crashed between its two renames (live gone, bak
+    // holds the previous manifest): restore bak rather than letting
+    // an empty prev force a full re-sync
+    Lakehouse.recoverBakSwap(spark, live, bak)
+    val prev =
+      if (Lakehouse.fs(spark, live).exists(new org.apache.hadoop.fs.Path(live)))
+        spark.read.schema(CnicsPipeline.manifestSchema).parquet(live)
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], CnicsPipeline.manifestSchema)
+    val (dirty, manifest0) = Merge.manifestDiff(cur, "key", "json", prev, Seq("subject"))
+    (dirty, { (counts, actions) =>
+      // E5 `error` keys were never applied: advancing their manifest
+      // hash would mask the error forever (the key would read clean
+      // next run while the store keeps the duplicate data). Keep them
+      // out of the manifest so they stay dirty and the error
+      // re-surfaces every run until fixed — same steady-state
+      // behavior as the full PUT-always run.
+      val manifest = if (!counts.contains("error")) manifest0
+        else manifest0.join(actions.filter(col("merge_action") === "error").select("key"),
+          Seq("key"), "left_anti")
+      // apply succeeded -> swing the manifest (write fully, then swap)
+      val tmp = s"$dir/.manifest.tmp"
+      manifest.write.mode("overwrite").parquet(tmp)
+      Lakehouse.bakSwapInto(spark, live, tmp, "manifestPass", bak)
+    })
   }
 
   /** The cohort-id frame Patient assembly and every child type join
@@ -427,6 +447,7 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       .withColumn("key", col("DiagnosisId").cast("string"))
       .select(col("key"),
         concat(lit(s"cnics-dx-$siteLower-"), col("key")).as("id"),
+        col("site_pat_id").as("subject"),
         to_json(FhirResources.condition(
           lit(siteLower),
           concat(lit(s"cnics-$siteLower-"), col("site_pat_id")),
@@ -439,6 +460,7 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       .withColumn("key", col("MedicationId").cast("string"))
       .select(col("key"),
         concat(lit(s"cnics-med-$siteLower-"), col("key")).as("id"),
+        col("site_pat_id").as("subject"),
         to_json(FhirResources.medicationRequest(
           lit(siteLower),
           concat(lit(s"cnics-$siteLower-"), col("site_pat_id")),
@@ -450,6 +472,7 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       .withColumn("key", col("LabId")) // LabId is already a string (§1.4)
       .select(col("key"),
         concat(lit(s"cnics-lab-$siteLower-"), col("key")).as("id"),
+        col("site_pat_id").as("subject"),
         to_json(FhirResources.observation(
           lit(siteLower),
           concat(lit(s"cnics-$siteLower-"), col("site_pat_id")),
@@ -463,10 +486,13 @@ object CnicsPipeline {
   val AllTypes: Set[String] =
     Set("patients", "conditions", "medicationrequests", "observations")
 
-  /** A [[CnicsPipeline.sync]] manifest row: (key, xxhash64 of the json). */
+  /** A [[CnicsPipeline.sync]] manifest row: (key, xxhash64 of the
+    * json, subject — the site patient key the resource belongs to). A
+    * manifest written without `subject` reads it as null. */
   private val manifestSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("key", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("__h", org.apache.spark.sql.types.LongType)))
+    org.apache.spark.sql.types.StructField("__h", org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("subject", org.apache.spark.sql.types.StringType)))
 
   /** A6 — the per-field last-wins crosswalk merge on SitePatientId
     * (cnics_to_fhir.py:296-304): hmrn is overwritten by every

@@ -294,8 +294,8 @@ object CnicsQueries {
     //    and identifier-scoped snapshots never alias each other on the
     //    shared store); run 3 drops uw-002 from uw's cohort — exactly
     //    one uw Patient delete whose cascade takes dx-3 + lab-3, zero
-    //    uw child actions (the cascade beat the child passes to the
-    //    store), zero sea actions, and sea's stored bytes are
+    //    uw child actions (the child diff leaves a deleted patient's
+    //    children to the cascade), zero sea actions, and sea's stored bytes are
     //    IDENTICAL before and after (the bytes_unchanged row). ──
     QueryDef(
       "cnics_multisite_incremental_audit",

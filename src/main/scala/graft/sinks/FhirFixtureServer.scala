@@ -73,8 +73,7 @@ final class FhirFixtureServer(failFirstPost: Boolean = false,
   def revokeToken(): Unit = tokenGeneration += 1
   // subject.reference -> stored paths, maintained on every PUT/DELETE so
   // a cascade delete touches only the deleted patient's children (a full
-  // store re-parse per DELETE turns a 12.5k-delete delta into minutes —
-  // HttpStoreSoak evidence)
+  // store re-parse per DELETE made a 12.5k-delete delta take minutes)
   private val bySubject =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[String]]()
   private val subjectOf =

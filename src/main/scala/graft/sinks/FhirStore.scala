@@ -640,9 +640,14 @@ object HttpFhirStore {
   // readTree is thread-safe: one per JVM serves every pager
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
+  /** The longest `Retry-After` wait [[send]] honours. */
+  val MaxRetryAfterMs = 30000L
+
   /** The one bounded-retry send every request goes through. It returns
     * only replies below 400. A 5xx, a 429 or a connection error retries
-    * (linear 200 ms × attempt backoff, `retries` attempts in all).
+    * (linear 200 ms × attempt backoff, `retries` attempts in all); a
+    * 429 or 503 carrying `Retry-After` in delta-seconds waits that long
+    * instead, capped at [[MaxRetryAfterMs]].
     * A 401 with `auth` configured triggers ONE token refresh; after
     * that, and without auth, 401/403 fail loudly. Any other 4xx is
     * terminal and throws at once, naming the status and the URL — an
@@ -656,6 +661,7 @@ object HttpFhirStore {
     var refreshed = false
     var last: Throwable = null
     while (attempt < retries) {
+      var backoffMs = 200L * (attempt + 1)
       val b = mk()
       auth.foreach(a => b.header("Authorization", "Bearer " + a.token(c)))
       val req = b.build()
@@ -672,16 +678,19 @@ object HttpFhirStore {
             s"unauthorized (HTTP $status) from ${req.uri()} — " +
               (if (auth.isDefined) "token refresh did not help"
                else "store requires auth but none is configured"))
-        else if (status == 429 || status >= 500)
+        else if (status == 429 || status >= 500) {
           last = new RuntimeException(s"HTTP $status from ${req.method()} ${req.uri()}")
-        else throw new IllegalStateException(
+          val retryAfter = r.headers().firstValue("Retry-After").orElse("").trim
+          if ((status == 429 || status == 503) && retryAfter.matches("\\d{1,9}"))
+            backoffMs = math.min(retryAfter.toLong * 1000L, MaxRetryAfterMs)
+        } else throw new IllegalStateException(
           s"HTTP $status from ${req.method()} ${req.uri()}")
       } catch {
         case e: IllegalStateException => throw e
         case e: Throwable => last = e
       }
       attempt += 1
-      Thread.sleep(200L * attempt)
+      if (attempt < retries) Thread.sleep(backoffMs)
     }
     throw last
   }

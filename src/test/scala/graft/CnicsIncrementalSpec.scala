@@ -213,6 +213,7 @@ class CnicsIncrementalSpec extends AnyFunSuite {
       val (first, firstGets) = synced(CnicsFixtures.demo(spark))
       assert(first(("Patient", "insert")) === 2L && first(("Observation", "insert")) === 3L)
       assert(firstGets === 4)
+      val posts = srv.posts.get()
       // a nightly delta touching every type, no cascade: both Patients
       // change, and one record of uw-001 leaves each child table
       val demo = CnicsFixtures.demo(spark)
@@ -225,7 +226,93 @@ class CnicsIncrementalSpec extends AnyFunSuite {
       Seq("Condition", "MedicationRequest", "Observation")
         .foreach(rt => assert(second((rt, "delete")) === 1L, rt))
       assert(secondGets === 4)
+      // every type's actions go out in one mixed bundle
+      assert(srv.posts.get() - posts === 1)
     } finally { srv.stop(); spark.conf.set(width, saved) }
+  }
+
+  test("a departure-only Manifest delta sends one GET and one POST: the cascade takes the children") {
+    val srv = new graft.sinks.FhirFixtureServer()
+    val port = srv.start()
+    try {
+      val store = new graft.sinks.HttpFhirStore(s"http://localhost:$port", maxRetries = 2)
+      val dir = mdir()
+      val demo = CnicsFixtures.demo(spark)
+      new CnicsPipeline(spark, demo, store, "uw").sync(scope = Scope.Manifest(dir))
+      val (gets, posts) = (srv.gets.get(), srv.posts.get())
+      // uw-002 leaves the cohort: its dx-3 and lab-3 leave the source
+      // with it, and are neither looked up nor deleted on their own
+      val audit = new CnicsPipeline(spark,
+        demo.copy(patient = demo.patient.filter(col("PatientId") =!= 2L)), store, "uw")
+        .sync(scope = Scope.Manifest(dir))
+      assert(srv.gets.get() - gets === 1) // the Patient lookup only
+      assert(srv.posts.get() - posts === 1)
+      assert(audit(("Patient", "delete")) === 1L)
+      Seq("Condition", "MedicationRequest", "Observation")
+        .foreach(rt => assert(audit((rt, "delete")) === 0L, rt))
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val subjects = srv.data.values.toArray.map(j =>
+        mapper.readTree(j.toString).path("subject").path("reference").asText(""))
+      assert(!subjects.contains("Patient/cnics-uw-uw-002"))
+      assert(srv.count("Patient") === 1L && srv.count("Condition") === 1L &&
+        srv.count("Observation") === 2L)
+    } finally srv.stop()
+  }
+
+  test("a mixed write that throws swings no manifest, and the next sync finds the same dirty keys") {
+    var down = false
+    val store = new InMemoryFhirStore {
+      override def applyActionsMixed(
+          actions: org.apache.spark.sql.DataFrame): Map[(String, String), Long] =
+        if (down) throw new IllegalStateException("store down")
+        else super.applyActionsMixed(actions)
+    }
+    val dir = mdir()
+    def inc(in: CnicsInputs) =
+      new CnicsPipeline(spark, in, store, "uw").sync(scope = Scope.Manifest(dir))
+    inc(CnicsFixtures.demo(spark))
+    def manifests = Seq("Patient", "Condition", "MedicationRequest", "Observation")
+      .map(rt => rt -> spark.read.parquet(s"$dir/$rt/manifest").collect().toSet).toMap
+    val (before, stored) = (manifests, store.data.toMap)
+    down = true
+    intercept[IllegalStateException](inc(changedInputs))
+    assert(manifests === before)
+    assert(store.data.toMap === stored)
+
+    // the same two syncs on a store that never failed
+    val okDir = mdir()
+    val okStore = new InMemoryFhirStore
+    def ok(in: CnicsInputs) =
+      new CnicsPipeline(spark, in, okStore, "uw").sync(scope = Scope.Manifest(okDir))
+    ok(CnicsFixtures.demo(spark))
+    val expected = ok(changedInputs)
+    down = false
+    assert(inc(changedInputs) === expected)
+    assert(store.data.toMap === okStore.data.toMap)
+  }
+
+  test("a child manifest without the subject column still converges to the Full end state") {
+    val dir = mdir()
+    val incStore = new InMemoryFhirStore
+    new CnicsPipeline(spark, CnicsFixtures.demo(spark), incStore, "uw")
+      .sync(scope = Scope.Manifest(dir))
+    // rewrite every child manifest in the (key, __h) layout that had no subject
+    Seq("Condition", "MedicationRequest", "Observation").foreach { rt =>
+      val live = s"$dir/$rt/manifest"
+      val old = spark.read.parquet(live).select("key", "__h").localCheckpoint(true)
+      old.write.mode("overwrite").parquet(live)
+      assert(spark.read.parquet(live).columns.toSeq === Seq("key", "__h"))
+    }
+    val audit = new CnicsPipeline(spark, changedInputs, incStore, "uw")
+      .sync(scope = Scope.Manifest(dir))
+    // the departed uw-002's dx-3 and lab-3 carry no subject, so they are
+    // looked up and deleted explicitly beside the Patient's cascade
+    assert(audit(("Patient", "delete")) === 1L)
+    assert(audit(("Condition", "delete")) === 1L && audit(("Observation", "delete")) === 1L)
+
+    val fullStore = new InMemoryFhirStore
+    new CnicsPipeline(spark, changedInputs, fullStore, "uw").sync()
+    assert(incStore.data.toMap === fullStore.data.toMap) // every type, every body
   }
 
   test("JobRunner.runIncremental: two-site shared store, second pass is all-zero") {

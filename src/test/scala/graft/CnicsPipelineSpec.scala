@@ -715,6 +715,46 @@ class CnicsPipelineSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("HttpFhirStore waits out a 429's Retry-After before it re-posts") {
+    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+    val served = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    // arrival times (ms) of every bundle POST; the first is refused
+    val arrivals = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/", new HttpHandler {
+      def handle(ex: HttpExchange): Unit = {
+        val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+        arrivals.add(System.currentTimeMillis())
+        val (code, reply) =
+          if (arrivals.size == 1) {
+            ex.getResponseHeaders.add("Retry-After", "1")
+            (429, """{"resourceType":"OperationOutcome"}""")
+          } else {
+            new ObjectMapper().readTree(body).path("entry").forEach { e =>
+              served.put(e.path("request").path("url").asText(), e.path("resource").toString)
+            }
+            (200, """{"resourceType":"Bundle","type":"transaction-response"}""")
+          }
+        val bytes = reply.getBytes("UTF-8")
+        ex.sendResponseHeaders(code, bytes.length)
+        ex.getResponseBody.write(bytes); ex.close()
+      }
+    })
+    server.start()
+    try {
+      val store = new graft.sinks.HttpFhirStore(
+        s"http://localhost:${server.getAddress.getPort}", maxRetries = 3)
+      val rows = (1 to 3).map(i =>
+        (s"k$i", s"id-$i", s"""{"identifier":[{"value":"k$i"}]}""", "insert"))
+        .toDF("key", "id", "json", "merge_action").coalesce(1)
+      assert(store.applyActions("Patient", rows) === Map("insert" -> 3L))
+      val times = arrivals.toArray.map(_.asInstanceOf[Long])
+      assert(times.length === 2)
+      assert(times(1) - times(0) >= 1000L, s"re-posted after ${times(1) - times(0)} ms")
+      assert(served.keySet.toArray.toSet === Set("Patient/id-1", "Patient/id-2", "Patient/id-3"))
+    } finally server.stop(0)
+  }
+
   test("debug channel: reconcile action frames land as queryable parquet (py:527 parity)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_debug").toString
     val store = new InMemoryFhirStore

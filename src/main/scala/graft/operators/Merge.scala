@@ -82,8 +82,9 @@ object Merge {
     * Returns `(dirty, manifest)`:
     *  - `dirty` — `key` plus the `carry` columns: keys new in `cur`,
     *    keys whose hash changed, and keys present only in `prev` (they
-    *    left the source and must DELETE). A key that left the source
-    *    carries its `prev` values; every other key carries nulls.
+    *    left the source and must DELETE). A key present in `cur`
+    *    carries its `cur` values; a key that left the source carries
+    *    its `prev` values (null when `prev` lacks the column).
     *    Unchanged keys are absent, which is the whole point: downstream
     *    scopes both the source and the store snapshot to `dirty`, and
     *    O(changed) rows — not O(cohort) — reach the store.
@@ -99,12 +100,13 @@ object Merge {
       prev: DataFrame, carry: Seq[String]): (DataFrame, DataFrame) = {
     val manifest = cur.select(Seq(col(keyCol).as("key"),
       xxhash64(col(contentCol)).as("__h")) ++ carry.map(col): _*)
-    val dirty = manifest.select(col("key"), col("__h").as("__h_cur"))
-      .join(prev.select(Seq(col("key"), col("__h").as("__h_prev")) ++ carry.map(col): _*),
-        Seq("key"), "full_outer")
+    def side(df: DataFrame, tag: String) = df.select(Seq(col("key"), col("__h").as(s"__h_$tag")) ++
+      carry.map(c => col(c).as(s"__${tag}_$c")): _*)
+    val dirty = side(manifest, "cur").join(side(prev, "prev"), Seq("key"), "full_outer")
       .filter(col("__h_cur").isNull || col("__h_prev").isNull ||
         col("__h_cur") =!= col("__h_prev"))
-      .select(col("key") +: carry.map(c => when(col("__h_cur").isNull, col(c)).as(c)): _*)
+      .select(col("key") +: carry.map(c => when(col("__h_cur").isNull, col(s"__prev_$c"))
+        .otherwise(col(s"__cur_$c")).as(c)): _*)
     (dirty, manifest)
   }
 }

@@ -272,13 +272,28 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     *    source is assembled in full, but only keys whose JSON changed
     *    reach the merge, and the store read is the key-targeted
     *    `snapshotForKeys` under the type's site-scoped identifier
-    *    system: a K-row delta costs O(K) reads and writes. A child key
-    *    that left the source under a Patient this sync deletes is
-    *    dropped before its lookup (the cascade removes it); any other
-    *    key that left the source deletes explicitly. A manifest written
-    *    without `subject` keeps every departed key, which costs one
-    *    sync explicit child deletes and ends in the same store. Each
-    *    manifest swings only after the one write returns. This replaces
+    *    system: a K-row delta costs O(K) reads and writes. Each dirty
+    *    child key carries a subject — its current one, or its previous
+    *    one when it left the source — and the pinned Patient action
+    *    frame decides whether it is looked up:
+    *     - under a Patient this sync deletes, it is dropped before its
+    *       lookup (the cascade removes it); any other key that left the
+    *       source deletes explicitly;
+    *     - under a Patient this sync inserts, it is not looked up and
+    *       classifies `insert`: the Patient's site-identifier lookup
+    *       found no such patient, and parent-first bundles plus the
+    *       cascade mean a store with referential integrity holds no
+    *       child of it. So an arriving patient's history, and all of a
+    *       Manifest sync into an empty store, costs only the Patient
+    *       lookup. A record that moved to an arriving patient from a
+    *       stored one counts as an insert, and its PUT-with-id
+    *       overwrites the copy under its old subject;
+    *     - under an `update` or E5 `error` Patient, or a Patient that is
+    *       not dirty, it is looked up.
+    *    A manifest written without `subject` keeps every departed key,
+    *    which costs one sync explicit child deletes and ends in the
+    *    same store. Each manifest swings only after the one write
+    *    returns. This replaces
     *    the reference's PUT-always steady state
     *    (cnics_to_fhir.py:548-584); clean keys are never read, so run a
     *    `Full` sync periodically as the integrity sweep. */
@@ -318,16 +333,19 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
           case Scope.Manifest(root) =>
             val cur = source().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             release += (() => { cur.unpersist(); () })
-            val (dirty0, swing) = manifestPass(s"$root/$rt", cur)
-            // a child that left the source under a Patient this sync
-            // deletes goes with that delete's cascade: never looked up
-            val dirty = deferred.collectFirst { case ("Patient", pa) =>
-              dirty0.join(pa.filter(col("merge_action") === "delete")
+            val (dirty, swing) = manifestPass(s"$root/$rt", cur)
+            // never looked up: a child that left the source under a
+            // Patient this sync deletes (the cascade takes it), and a
+            // child of a Patient this sync inserts (the store cannot
+            // hold it, so it classifies insert)
+            val lookup = deferred.collectFirst { case ("Patient", pa) =>
+              dirty.join(pa.filter(col("merge_action").isin("delete", "insert"))
                 .select(col("key").as("subject")), Seq("subject"), "left_anti")
-            }.getOrElse(dirty0).select("key")
-            // pinned: the Patient frame feeds the children's cascade
+            }.getOrElse(dirty)
+            // pinned: the Patient frame feeds the children's lookup
             // filter, the write and the swing, and its lookup is sent once
-            val pinned = Checkpoints.pin(reconcile(cur, Some(dirty), systemRead(Some(dirty))))
+            val pinned = Checkpoints.pin(reconcile(cur, Some(dirty.select("key")),
+              systemRead(Some(lookup.select("key")))))
             release += (() => Checkpoints.unpin(pinned))
             swings += rt -> (swing(_, pinned))
             pinned
@@ -386,8 +404,10 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
   /** The manifest half of a [[Scope.Manifest]] sync for one type
     * (extension; see [[Merge.manifestDiff]]): diffs the assembled
     * `cur` against the previous run's (key, hash, subject) manifest
-    * under `dir`. Returns the dirty keys, each with its previous
-    * subject when it left the source, and the swing (tmp write + bak
+    * under `dir`. Returns the dirty keys, each with its subject (the
+    * current one, or the previous one when the key left the source),
+    * which [[sync]] matches against the Patient actions to pick the
+    * keys it looks up, and the swing (tmp write + bak
     * swap), which [[sync]] runs with the type's counts and action frame
     * only after the store write returns — a crash mid-write leaves the
     * previous manifest and the next run re-finds the same dirty keys

@@ -729,8 +729,14 @@ object HttpFhirStore {
     * (resource_type, id, json, merge_action), and each partition POSTs
     * its rows in order as transaction Bundles of `bundleSize` entries
     * through [[send]]; `error` rows are counted and never posted.
-    * Returns counts keyed (resource_type, action).
-    * Lives in the companion so the write closure ships no store. */
+    * Returns counts keyed (resource_type, action): each partition
+    * returns its own tallies and the driver sums them, so the count is
+    * part of the write job (no aggregate exchange, no second job) and
+    * the driver reads at most partitions × types × 4 actions rows.
+    * A bundle whose POST fails for good throws naming its size and its
+    * first and last `type/id` beside the reply status and URL, never a
+    * resource body. Lives in the companion so the write closure ships
+    * no store. */
   private def writeBundles(rows: DataFrame, url: String,
       auth: Option[ClientCredentialsAuth], retries: Int,
       bundleSize: Int): Map[(String, String), Long] = {
@@ -741,6 +747,7 @@ object HttpFhirStore {
         val byAction = scala.collection.mutable
           .Map[(String, String), Long]().withDefaultValue(0L)
         def tally(r: Row): Unit = byAction((r.getString(0), r.getString(3))) += 1L
+        def ref(r: Row): String = s"${r.getString(0)}/${r.getString(1)}"
         it.filter(r => r.getString(3) != "error" || { tally(r); false })
           .grouped(bsz).foreach { batch =>
           val body = batch.map { r =>
@@ -756,15 +763,17 @@ object HttpFhirStore {
               s"""{"request":{"method":"DELETE","url":"$rt/$id$cascade"}}"""
             else s"""{"resource":$json,"request":{"method":"PUT","url":"$rt/$id"}}"""
           }.mkString("""{"resourceType":"Bundle","type":"transaction","entry":[""", ",", "]}")
-          send(c, auth, retries, () => HttpRequest.newBuilder(URI.create(url))
+          try send(c, auth, retries, () => HttpRequest.newBuilder(URI.create(url))
             .header("Content-Type", "application/fhir+json;charset=utf-8")
             .POST(HttpRequest.BodyPublishers.ofString(body)))
+          catch { case scala.util.control.NonFatal(e) => throw new IllegalStateException(
+            s"bundle of ${batch.size} entries (${ref(batch.head)} .. ${ref(batch.last)})" +
+              s" failed: ${e.getMessage}", e) }
           batch.foreach(tally)
         }
         byAction.iterator.map { case ((rt, a), n) => (rt, a, n) }
       }(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong))
-      .groupBy("_1", "_2").agg(sum("_3").as("n")).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      .collect().groupMapReduce(t => (t._1, t._2))(_._3)(_ + _)
   }
 
   /** The reference's store-flavor dispatch (cnics_to_fhir.py:195-213):

@@ -212,7 +212,9 @@ class CnicsIncrementalSpec extends AnyFunSuite {
       // first run: every key is dirty, and each type has a few
       val (first, firstGets) = synced(CnicsFixtures.demo(spark))
       assert(first(("Patient", "insert")) === 2L && first(("Observation", "insert")) === 3L)
-      assert(firstGets === 4)
+      // the server starts empty, so both Patients insert and their
+      // children are not looked up: the Patient lookup is the one GET
+      assert(firstGets === 1)
       val posts = srv.posts.get()
       // a nightly delta touching every type, no cascade: both Patients
       // change, and one record of uw-001 leaves each child table
@@ -257,6 +259,89 @@ class CnicsIncrementalSpec extends AnyFunSuite {
       assert(srv.count("Patient") === 1L && srv.count("Condition") === 1L &&
         srv.count("Observation") === 2L)
     } finally srv.stop()
+  }
+
+  /** Runs `f` against a fresh fixture server and an HTTP store on it. */
+  private def overHttp[A](strict: Boolean = false)(
+      f: (graft.sinks.FhirFixtureServer, graft.sinks.HttpFhirStore) => A): A = {
+    val srv = new graft.sinks.FhirFixtureServer(strictReferences = strict)
+    val port = srv.start()
+    try f(srv, new graft.sinks.HttpFhirStore(s"http://localhost:$port", maxRetries = 2))
+    finally srv.stop()
+  }
+
+  /** The zero-filled audit of a sync whose only counts are `nonZero`. */
+  private def auditOf(nonZero: ((String, String), Long)*): Map[(String, String), Long] =
+    (for (rt <- Seq("Patient", "Condition", "MedicationRequest", "Observation");
+          a <- Seq("insert", "update", "delete")) yield (rt, a) -> 0L).toMap ++ nonZero
+
+  /** uw-001 arrives, with dx-1, med-1, lab-1 and lab-2, in a Manifest
+    * sync after one without it; returns the delta's audit and the
+    * server's state, both checked against a `Full` sync of the demo. */
+  private def arrival(strict: Boolean) = {
+    val demo = CnicsFixtures.demo(spark)
+    val full = overHttp(strict) { (srv, store) =>
+      new CnicsPipeline(spark, demo, store, "uw").sync()
+      new java.util.HashMap[String, String](srv.data)
+    }
+    overHttp(strict) { (srv, store) =>
+      val dir = mdir()
+      new CnicsPipeline(spark, demo.copy(patient = demo.patient.filter(col("PatientId") =!= 1L)),
+        store, "uw").sync(scope = Scope.Manifest(dir))
+      val (gets, posts) = (srv.gets.get(), srv.posts.get())
+      val audit = new CnicsPipeline(spark, demo, store, "uw").sync(scope = Scope.Manifest(dir))
+      assert(srv.gets.get() - gets === 1) // the Patient lookup only
+      assert(srv.posts.get() - posts === 1)
+      assert(audit === auditOf(("Patient", "insert") -> 1L, ("Condition", "insert") -> 1L,
+        ("MedicationRequest", "insert") -> 1L, ("Observation", "insert") -> 2L))
+      assert(srv.data === full)
+      srv.refRejects.get()
+    }
+  }
+
+  test("an arriving patient's children insert unlooked-up: one GET and one POST") {
+    arrival(strict = false)
+  }
+
+  test("an arriving patient's unlooked-up children still post after it on a strict-reference server") {
+    assert(arrival(strict = true) === 0)
+  }
+
+  test("a first Manifest sync after a Full seed looks up children of stored and E5 patients") {
+    // uw-001 is held twice once stored (E5), so it classifies `error`;
+    // uw-002 updates. Neither is an insert, so every child is looked up
+    // and updates, exactly as a Full sync of the same store classifies it
+    val demo = CnicsFixtures.demo(spark)
+    val expected = auditOf(("Patient", "update") -> 1L, ("Patient", "error") -> 1L,
+      ("Condition", "update") -> 2L, ("MedicationRequest", "update") -> 1L,
+      ("Observation", "update") -> 3L)
+    def inMemory(scope: Scope) = {
+      val store = new InMemoryFhirStore {
+        override def snapshot(spark: org.apache.spark.sql.SparkSession, resourceType: String,
+            identifierSystem: Option[String] = None): org.apache.spark.sql.DataFrame = {
+          val s = super.snapshot(spark, resourceType, identifierSystem)
+          if (resourceType == "Patient") s.union(s.filter(col("key") === "uw-001")) else s
+        }
+      }
+      new CnicsPipeline(spark, demo, store, "uw").sync()
+      (new CnicsPipeline(spark, demo, store, "uw").sync(scope = scope), store.data.toMap)
+    }
+    val (mAudit, mData) = inMemory(Scope.Manifest(mdir()))
+    assert(mAudit === expected)
+    assert((mAudit, mData) === inMemory(Scope.Full()))
+
+    def http(scope: Scope) = overHttp() { (srv, store) =>
+      new CnicsPipeline(spark, demo, store, "uw").sync()
+      srv.data.put("/Patient/dup-uw-001", srv.data.get("/Patient/cnics-uw-uw-001"))
+      val gets = srv.gets.get()
+      val audit = new CnicsPipeline(spark, demo, store, "uw").sync(scope = scope)
+      (audit, new java.util.HashMap[String, String](srv.data), srv.gets.get() - gets)
+    }
+    val (hAudit, hData, hGets) = http(Scope.Manifest(mdir()))
+    assert(hAudit === expected)
+    assert(hGets === 4) // Patient, then every child type's lookup
+    val (fAudit, fData, _) = http(Scope.Full())
+    assert(hAudit === fAudit && hData === fData)
   }
 
   test("a mixed write that throws swings no manifest, and the next sync finds the same dirty keys") {

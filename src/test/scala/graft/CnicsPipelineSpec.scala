@@ -755,6 +755,36 @@ class CnicsPipelineSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("a bundle POST refused with 400 throws naming the bundle's size and first and last type/id") {
+    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+    val posts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/", new HttpHandler {
+      def handle(ex: HttpExchange): Unit = {
+        ex.getRequestBody.readAllBytes()
+        posts.incrementAndGet()
+        val bytes = """{"resourceType":"OperationOutcome"}""".getBytes("UTF-8")
+        ex.sendResponseHeaders(400, bytes.length)
+        ex.getResponseBody.write(bytes); ex.close()
+      }
+    })
+    server.start()
+    try {
+      val store = new graft.sinks.HttpFhirStore(
+        s"http://localhost:${server.getAddress.getPort}", maxRetries = 3)
+      val rows = (1 to 3).map(i =>
+        (s"k$i", s"id-$i", s"""{"identifier":[{"value":"body-of-k$i"}]}""", "insert"))
+        .toDF("key", "id", "json", "merge_action").coalesce(1)
+      val e = intercept[Exception](store.applyActions("Patient", rows))
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(messages.exists(m => m.contains("bundle of 3 entries (Patient/id-1 .. Patient/id-3)") &&
+        m.contains("HTTP 400")), messages)
+      assert(!messages.exists(_.contains("body-of-")), messages) // never a resource body
+      assert(posts.get() === 1) // a 400 is terminal: no retry
+    } finally server.stop(0)
+  }
+
   test("debug channel: reconcile action frames land as queryable parquet (py:527 parity)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_debug").toString
     val store = new InMemoryFhirStore

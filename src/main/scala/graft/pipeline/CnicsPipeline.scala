@@ -292,11 +292,26 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     *       not dirty, it is looked up.
     *    A manifest written without `subject` keeps every departed key,
     *    which costs one sync explicit child deletes and ends in the
-    *    same store. Each manifest swings only after the one write
-    *    returns. This replaces
-    *    the reference's PUT-always steady state
-    *    (cnics_to_fhir.py:548-584); clean keys are never read, so run a
-    *    `Full` sync periodically as the integrity sweep. */
+    *    same store. This replaces the reference's PUT-always steady
+    *    state (cnics_to_fhir.py:548-584); clean keys are never read, so
+    *    run a `Full` sync periodically as the integrity sweep.
+    *
+    *    A `Manifest` sync runs in three phases. First every synced
+    *    type is *prepared* at once, one driver thread per type
+    *    ([[CnicsPipeline.concurrently]], after the [[cohortIds]]
+    *    checkpoint is taken on the calling thread): its source is
+    *    assembled and pinned, [[manifestPass]] diffs it, and the dirty
+    *    frame is pinned. A pin runs its plan's shuffle stages when it
+    *    is taken, so each type's assembly and diff are concurrent Spark
+    *    queries, and only the children's lookup waits for the Patient
+    *    actions. Then, on the calling thread, Patient first, each type
+    *    is looked up, classified and pinned, and all types go out in
+    *    the one mixed write: no store call leaves the calling thread.
+    *    Last, each type's manifest swings, concurrently, since each
+    *    writes its own directory. If any prepare fails, `sync` waits
+    *    for the others, releases every pin and rethrows the first
+    *    failed type's error: no request is sent and no manifest swings,
+    *    as when the write throws. */
   def sync(types: Set[String] = CnicsPipeline.AllTypes, scope: Scope = Scope.Full(),
       limit: Int = Int.MaxValue): Map[(String, String), Long] = {
     val (pipe, patientKeys) = scope match {
@@ -306,22 +321,37 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
         (scopedTo(ks), Some(ks.select(col("site_pat_id").as("key"))))
       case _ => (this, None)
     }
+    // a patients-only sync skips the cohortIds checkpoint job
+    val withChildren = (CnicsPipeline.AllTypes - "patients").exists(types)
     lazy val ids = pipe.cohortIds(limit)
     val table = Seq(
-      // a patients-only sync skips the cohortIds checkpoint job
       ("Patient", "patients", sitePatientIdSystem, () =>
-        if ((CnicsPipeline.AllTypes - "patients").exists(types)) pipe.patientsOf(ids)
-        else pipe.patientResources(limit)),
+        if (withChildren) pipe.patientsOf(ids) else pipe.patientResources(limit)),
       ("Condition", "conditions", recordIdSystem("diagnosis"),
         () => pipe.conditionResources(ids)),
       ("MedicationRequest", "medicationrequests", recordIdSystem("medication"),
         () => pipe.medicationResources(ids)),
       ("Observation", "observations", recordIdSystem("lab"),
         () => pipe.observationResources(ids)))
-    // persisted sources and pinned action frames, released on return
-    val release = scala.collection.mutable.ListBuffer.empty[() => Unit]
+    // pinned frames, released on return; prepare threads pin too
+    val release = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def held(df: DataFrame): DataFrame = {
+      val p = Checkpoints.pin(df)
+      release.synchronized(release += p)
+      p
+    }
     try {
       val synced = table.filter(t => types(t._2))
+      val prepared = scope match {
+        case Scope.Manifest(root) =>
+          if (withChildren) ids // checkpointed once, before the threads share it
+          CnicsPipeline.concurrently(synced.map { case (rt, _, _, source) => () =>
+            val cur = held(source())
+            val (dirty, swing) = manifestPass(s"$root/$rt", cur)
+            rt -> ((cur, held(dirty), swing))
+          }).toMap
+        case _ => Map.empty[String, Nothing]
+      }
       val written = scala.collection.mutable.Map.empty[(String, String), Long]
       val deferred = scala.collection.mutable.ListBuffer.empty[(String, DataFrame)]
       val swings = scala.collection.mutable.ListBuffer.empty[(String, Map[String, Long] => Unit)]
@@ -329,11 +359,8 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
         def systemRead(keys: Option[DataFrame]): DataFrame =
           keys.fold(store.snapshot(spark, rt, Some(system)))(
             store.snapshotForKeys(spark, rt, _, Some(system)))
-        val actions = scope match {
-          case Scope.Manifest(root) =>
-            val cur = source().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            release += (() => { cur.unpersist(); () })
-            val (dirty, swing) = manifestPass(s"$root/$rt", cur)
+        val actions = prepared.get(rt) match {
+          case Some((cur, dirty, swing)) =>
             // never looked up: a child that left the source under a
             // Patient this sync deletes (the cascade takes it), and a
             // child of a Patient this sync inserts (the store cannot
@@ -344,14 +371,13 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
             }.getOrElse(dirty)
             // pinned: the Patient frame feeds the children's lookup
             // filter, the write and the swing, and its lookup is sent once
-            val pinned = Checkpoints.pin(reconcile(cur, Some(dirty.select("key")),
+            val pinned = held(reconcile(cur, Some(dirty.select("key")),
               systemRead(Some(lookup.select("key")))))
-            release += (() => Checkpoints.unpin(pinned))
             swings += rt -> (swing(_, pinned))
             pinned
-          case _ if rt == "Patient" =>
+          case None if rt == "Patient" =>
             reconcile(source(), patientKeys, systemRead(patientKeys))
-          case _ =>
+          case None =>
             reconcile(source(), None, store.snapshotForSubjects(spark, rt, cohortSubjects(ids)))
         }
         scope match {
@@ -371,14 +397,15 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
         }.reduce(_.unionByName(_)))
       def countsOf(rt: String): Map[String, Long] =
         written.toMap.collect { case ((`rt`, a), n) => a -> n }
-      swings.foreach { case (rt, swing) => swing(countsOf(rt)) }
+      // each swing writes its own type's directory
+      CnicsPipeline.concurrently(swings.toSeq.map { case (rt, swing) => () => swing(countsOf(rt)) })
       synced.foldLeft(Map.empty[(String, String), Long]) { case (audit, (rt, _, _, _)) =>
         val all = countsOf(rt)
         val filled = Seq("insert", "update", "delete")
           .foldLeft(audit)((m, a) => m + ((rt, a) -> all.getOrElse(a, 0L)))
         all.get("error").fold(filled)(n => filled + ((rt, "error") -> n))
       }
-    } finally release.foreach(_())
+    } finally release.foreach(Checkpoints.unpin)
   }
 
   /** A pipeline whose INPUTS are semi-join-scoped to the dirty keys —
@@ -404,7 +431,10 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
   /** The manifest half of a [[Scope.Manifest]] sync for one type
     * (extension; see [[Merge.manifestDiff]]): diffs the assembled
     * `cur` against the previous run's (key, hash, subject) manifest
-    * under `dir`. Returns the dirty keys, each with its subject (the
+    * under `dir`. It is the middle of a type's prepare step, which
+    * [[sync]] runs for every synced type at once on threads of its own,
+    * so it reads only the file system and never the store. Returns the
+    * dirty keys, each with its subject (the
     * current one, or the previous one when the key left the source),
     * which [[sync]] matches against the Patient actions to pick the
     * keys it looks up, and the swing (tmp write + bak
@@ -513,6 +543,35 @@ object CnicsPipeline {
     org.apache.spark.sql.types.StructField("key", org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("__h", org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("subject", org.apache.spark.sql.types.StringType)))
+
+  /** The name prefix of [[concurrently]]'s threads. */
+  private[graft] val SyncThread = "cnics-sync"
+
+  /** Runs each task on a driver thread of its own and, once every
+    * thread has ended, returns the results in task order or rethrows
+    * the first failed task's error (in task order). The threads are
+    * started here, so they inherit the caller's Spark local properties
+    * (job group, scheduler pool, description) and active session; the
+    * pooled threads of `ExecutionContext.global` keep those of
+    * whichever thread first created them. An interrupt of the caller
+    * is passed on to every thread and rethrown once all have ended. */
+  private def concurrently[A](tasks: Seq[() => A]): Seq[A] = {
+    val out = Array.fill[Either[Throwable, A]](tasks.size)(null)
+    val threads = tasks.zipWithIndex.map { case (task, i) =>
+      new Thread(() => out(i) = try Right(task()) catch { case e: Throwable => Left(e) },
+        s"$SyncThread-$i")
+    }
+    threads.foreach(_.start())
+    var interrupt: Option[InterruptedException] = None
+    threads.foreach { t =>
+      while (t.isAlive) try t.join() catch { case e: InterruptedException =>
+        if (interrupt.isEmpty) threads.foreach(_.interrupt())
+        interrupt = interrupt.orElse(Some(e))
+      }
+    }
+    interrupt.foreach { e => Thread.currentThread.interrupt(); throw e }
+    out.toSeq.map(_.fold(e => throw e, identity))
+  }
 
   /** A6 — the per-field last-wins crosswalk merge on SitePatientId
     * (cnics_to_fhir.py:296-304): hmrn is overwritten by every

@@ -148,9 +148,11 @@ class InMemoryFhirStore extends FhirStore with Serializable {
       }.toSet
       if (deletedRefs.nonEmpty) {
         val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val doomed = data.collect { case (k, (_, j))
+        // keys, not a Map built from them: a Map keyed on the type
+        // would keep one doomed child per type
+        val doomed = data.toSeq.collect { case (k, (_, j))
             if deletedRefs.contains(mapper.readTree(j).path("subject")
-              .path("reference").asText("")) => k }.toSeq
+              .path("reference").asText("")) => k }
         doomed.foreach(data.remove)
       }
     }
@@ -643,11 +645,26 @@ object HttpFhirStore {
   /** The longest `Retry-After` wait [[send]] honours. */
   val MaxRetryAfterMs = 30000L
 
+  /** The wait a `Retry-After` value asks for, capped at
+    * [[MaxRetryAfterMs]]: delta-seconds, or an HTTP-date (RFC 9110,
+    * IMF-fixdate) waited until, or none when the value is neither. */
+  private def retryAfterMs(value: String): Option[Long] = {
+    val v = value.trim
+    val ms =
+      if (v.matches("\\d{1,9}")) Some(v.toLong * 1000L)
+      else scala.util.Try(java.time.ZonedDateTime.parse(v,
+        java.time.format.DateTimeFormatter.RFC_1123_DATE_TIME)).toOption
+        .map(_.toInstant.toEpochMilli - System.currentTimeMillis())
+    ms.map(m => math.min(math.max(m, 0L), MaxRetryAfterMs))
+  }
+
   /** The one bounded-retry send every request goes through. It returns
-    * only replies below 400. A 5xx, a 429 or a connection error retries
-    * (linear 200 ms × attempt backoff, `retries` attempts in all); a
-    * 429 or 503 carrying `Retry-After` in delta-seconds waits that long
-    * instead, capped at [[MaxRetryAfterMs]].
+    * only replies below 400. A 5xx, a 429 or a non-fatal connection
+    * error retries (linear 200 ms × attempt backoff, `retries` attempts
+    * in all); a 429 or 503 carrying `Retry-After` waits what
+    * [[retryAfterMs]] reads from it instead. An interrupt is never
+    * retried: it keeps the thread's interrupt flag and is rethrown, so
+    * a cancelled task sends nothing more.
     * A 401 with `auth` configured triggers ONE token refresh; after
     * that, and without auth, 401/403 fail loudly. Any other 4xx is
     * terminal and throws at once, naming the status and the URL — an
@@ -680,17 +697,20 @@ object HttpFhirStore {
                else "store requires auth but none is configured"))
         else if (status == 429 || status >= 500) {
           last = new RuntimeException(s"HTTP $status from ${req.method()} ${req.uri()}")
-          val retryAfter = r.headers().firstValue("Retry-After").orElse("").trim
-          if ((status == 429 || status == 503) && retryAfter.matches("\\d{1,9}"))
-            backoffMs = math.min(retryAfter.toLong * 1000L, MaxRetryAfterMs)
+          if (status == 429 || status == 503)
+            retryAfterMs(r.headers().firstValue("Retry-After").orElse(""))
+              .foreach(ms => backoffMs = ms)
         } else throw new IllegalStateException(
           s"HTTP $status from ${req.method()} ${req.uri()}")
       } catch {
         case e: IllegalStateException => throw e
-        case e: Throwable => last = e
+        case e: InterruptedException => Thread.currentThread.interrupt(); throw e
+        case scala.util.control.NonFatal(e) => last = e
       }
       attempt += 1
-      if (attempt < retries) Thread.sleep(backoffMs)
+      if (attempt < retries)
+        try Thread.sleep(backoffMs)
+        catch { case e: InterruptedException => Thread.currentThread.interrupt(); throw e }
     }
     throw last
   }

@@ -376,6 +376,47 @@ class CnicsIncrementalSpec extends AnyFunSuite {
     assert(store.data.toMap === okStore.data.toMap)
   }
 
+  test("a failing prepare costs nothing on the wire, swings no manifest and leaves nothing running") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val demo = CnicsFixtures.demo(spark)
+    val changed = demo.copy(demographic = demo.demographic
+      .withColumn("Sex", when(col("PatientId") === 1L, lit("Male")).otherwise(col("Sex"))))
+    def files(dir: String): Map[String, Seq[Byte]] = {
+      val root = Paths.get(dir)
+      Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+        .map((f: Path) => root.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+    }
+    def syncs(fail: Boolean) = overHttp() { (srv, store) =>
+      val dir = mdir()
+      def inc(in: CnicsInputs) =
+        new CnicsPipeline(spark, in, store, "uw").sync(scope = Scope.Manifest(dir))
+      inc(demo)
+      if (fail) {
+        val obs = Paths.get(s"$dir/Observation/manifest")
+        val saved = Paths.get(mdir(), "manifest")
+        Files.move(obs, saved)
+        Files.write(obs, "not parquet".getBytes("UTF-8"))
+        val patient = files(s"$dir/Patient/manifest")
+        val (gets, posts) = (srv.gets.get(), srv.posts.get())
+        intercept[Exception](inc(changed))
+        assert(srv.gets.get() === gets && srv.posts.get() === posts)
+        assert(files(s"$dir/Patient/manifest") === patient)
+        assert(!Thread.getAllStackTraces.keySet.asScala
+          .exists(_.getName.startsWith(CnicsPipeline.SyncThread)))
+        // job ends reach the status tracker through the async listener bus
+        val deadline = System.nanoTime() + 10000000000L
+        while (spark.sparkContext.statusTracker.getActiveJobIds.nonEmpty &&
+            System.nanoTime() < deadline) Thread.sleep(50)
+        assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+        Files.delete(obs)
+        Files.move(saved, obs)
+      }
+      (inc(changed), new java.util.HashMap[String, String](srv.data))
+    }
+    assert(syncs(fail = true) === syncs(fail = false))
+  }
+
   test("a child manifest without the subject column still converges to the Full end state") {
     val dir = mdir()
     val incStore = new InMemoryFhirStore
@@ -432,4 +473,85 @@ class CnicsIncrementalSpec extends AnyFunSuite {
     assert(r.values.sum === 0L)
     assert(live.exists() && !bak.exists())
   }
+
+  import CnicsIncrementalSpec.Extract
+
+  /** One generated extract of the demo's site `uw`: uw-001 is always in
+    * the cohort, uw-002 and the arriving uw-004 when `present`; each
+    * patient's demographics are generated, and each child record goes
+    * to its generated owner, so records move between patients and
+    * leave the source with a departed owner. */
+
+  private val extractGen: org.scalacheck.Gen[Extract] = {
+    import org.scalacheck.Gen
+    val uw = Seq(1L, 2L, 4L)
+    val records = Seq("dx-1", "dx-2", "dx-3", "dx-4", "med-1", "lab-1", "lab-2", "lab-3")
+    for {
+      present <- Gen.someOf(Seq(2L, 4L))
+      sex <- Gen.sequence[Seq[String], String](uw.map(_ => Gen.oneOf("Female", "Male")))
+      race <- Gen.sequence[Seq[String], String](uw.map(_ => Gen.oneOf("Asian", "White")))
+      owner <- Gen.sequence[Seq[Long], Long](records.map(_ => Gen.oneOf(uw)))
+      a1c <- Gen.oneOf("5.4", "6.1")
+    } yield Extract(present.toSet + 1L, uw.zip(sex).toMap, uw.zip(race).toMap,
+      records.zip(owner).toMap, a1c)
+  }
+
+  private def inputsOf(e: Extract): CnicsInputs = {
+    import spark.implicits._
+    val demo = CnicsFixtures.demo(spark)
+    val uw = e.present.toSeq.sorted
+    def moved(df: org.apache.spark.sql.DataFrame, idCol: String) =
+      df.withColumn("PatientId", element_at(typedLit(e.owner), col(idCol).cast("string")))
+    demo.copy(
+      patient = demo.patient.filter(col("Site") =!= "uw")
+        .unionByName(uw.map(p => (p, f"uw-$p%03d".getBytes("UTF-8"), "uw"))
+          .toDF("PatientId", "SitePatientId", "Site")),
+      demographic = demo.demographic.filter(col("PatientId") === 3L)
+        .unionByName(uw.map(p => (10L * p, p, Option(e.sex(p)), Option(e.race(p)), Option("No")))
+          .toDF("DemographicId", "PatientId", "Sex", "Race", "Hispanic")),
+      diagnosis = moved(demo.diagnosis, "DiagnosisId"),
+      medication = moved(demo.medication, "MedicationId"),
+      lab = moved(demo.lab.withColumn("Result",
+        when(col("LabId") === "lab-1", lit(e.a1c)).otherwise(col("Result"))), "LabId"))
+  }
+
+  test("property: a Manifest chain ends where a Full sync of its last extract does") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    // the store holds uw-001 twice (E5) before the chain starts: a stray
+    // copy stays as it is, and uw-001 classifies `error` on every sync
+    def planted(): InMemoryFhirStore = {
+      val store = new InMemoryFhirStore {
+        override def snapshot(spark: org.apache.spark.sql.SparkSession, resourceType: String,
+            identifierSystem: Option[String] = None): org.apache.spark.sql.DataFrame = {
+          val s = super.snapshot(spark, resourceType, identifierSystem)
+          if (resourceType == "Patient") s.union(s.filter(col("key") === "uw-001")) else s
+        }
+      }
+      store.data(("Patient", "uw-001")) = ("stray-uw-001",
+        """{"resourceType":"Patient","id":"stray-uw-001","identifier":[{"system":""" +
+          """"https://cnics.cirg.washington.edu/site-patient-id/uw","value":"uw-001"}]}""")
+      store
+    }
+    def errors(audit: Map[(String, String), Long]) =
+      audit.collect { case ((rt, "error"), n) => rt -> n }
+    val prop = Prop.forAllNoShrink(Gen.choose(1, 3).flatMap(Gen.listOfN(_, extractGen))) {
+      chain =>
+        val (inc, dir) = (planted(), mdir())
+        val audits = chain.map(e =>
+          new CnicsPipeline(spark, inputsOf(e), inc, "uw").sync(scope = Scope.Manifest(dir)))
+        val full = planted()
+        val fullAudit = new CnicsPipeline(spark, inputsOf(chain.last), full, "uw").sync()
+        assert(inc.data.toMap === full.data.toMap, chain) // every type, every body
+        assert(errors(audits.last) === errors(fullAudit), chain)
+        true
+    }
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(8)
+      .withWorkers(1).withInitialSeed(20261020L), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+  }
+}
+
+object CnicsIncrementalSpec {
+  final case class Extract(present: Set[Long], sex: Map[Long, String],
+      race: Map[Long, String], owner: Map[String, Long], a1c: String)
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * `emb_centroid_by_label` / `emb_dispersion_by_label`).
   *
   * Scale: shuffles carry only (label, dim)-keyed partial sums; output
-  * is K×D (centroid) / K (dispersion) rows. EmbSoak proves the
+  * is K×D (centroid) / K (dispersion) rows. `Soak emb_stats` proves the
   * one-pass dispersion identity against an independent join-back
   * computation at 2M vectors, exact to the last integer. */
 object EmbStats {

@@ -40,19 +40,12 @@ final case class CnicsInputs(
     observationsFilter: String,
     standardDiagnoses: Seq[String])
 
-/** What one [[CnicsPipeline.sync]] reconciles against, and how it
-  * writes (see `sync` for each case's store read). */
+/** What one [[CnicsPipeline.sync]] reconciles against (see `sync`
+  * for each case's store read). */
 sealed trait Scope
 object Scope {
-  sealed trait Write
-  /** Each type's actions go to its own `applyActions` call. */
-  case object PerType extends Write
-  /** Every type's actions go to one `applyActionsMixed` call (the
-    * default, and the one write of `Keys` and `Manifest`). */
-  case object OneJob extends Write
-
   /** The site's whole cohort. */
-  final case class Full(write: Write = OneJob) extends Scope
+  case object Full extends Scope
   /** A dirty set of site-patient ids: a one-column frame. */
   final case class Keys(keys: DataFrame) extends Scope
   /** Manifest-diffed: per-type manifests at `<root>/<Type>/manifest`. */
@@ -239,15 +232,16 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     * holds duplicated business keys (E5: such a key classifies `error`
     * and is never applied). `limit` caps the cohort.
     *
-    * One write rule: every scope but `Full(PerType)` defers all types'
-    * actions into one [[graft.sinks.FhirStore.applyActionsMixed]] call
-    * — on [[graft.sinks.HttpFhirStore]] one job of mixed-type Bundles,
-    * with no parent→child stage barrier; on
-    * [[graft.sinks.ParquetFhirStore]] one rewrite per type directory,
-    * the Patient-delete cascade included. Legal because ids are
-    * client-assigned; the end state equals `PerType`'s (pinned by
-    * `cnics_http_tx_audit` against a strict-reference server).
-    * `PerType` gives each type its own `applyActions` call. Children
+    * One write rule: every scope defers all types' actions into one
+    * [[graft.sinks.FhirStore.applyActionsMixed]] call — on
+    * [[graft.sinks.HttpFhirStore]] one job of mixed-type Bundles, with
+    * no parent→child stage barrier; on [[graft.sinks.ParquetFhirStore]]
+    * one rewrite per type directory, the Patient-delete cascade
+    * included. Legal because ids are client-assigned; the end state
+    * equals the reference's per-type, parent-first writes (pinned by
+    * `cnics_http_tx_audit`: a strict-reference server against the
+    * [[graft.sinks.InMemoryFhirStore]] double, whose default
+    * `applyActionsMixed` writes that way). Children
     * of a deleted Patient go with the Patient DELETE's
     * `?_cascade=delete` (cnics_to_fhir.py:333), so no scope reads or
     * deletes them itself.
@@ -312,7 +306,7 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     *    for the others, releases every pin and rethrows the first
     *    failed type's error: no request is sent and no manifest swings,
     *    as when the write throws. */
-  def sync(types: Set[String] = CnicsPipeline.AllTypes, scope: Scope = Scope.Full(),
+  def sync(types: Set[String] = CnicsPipeline.AllTypes, scope: Scope = Scope.Full,
       limit: Int = Int.MaxValue): Map[(String, String), Long] = {
     val (pipe, patientKeys) = scope match {
       case Scope.Keys(keys) =>
@@ -352,7 +346,6 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
           }).toMap
         case _ => Map.empty[String, Nothing]
       }
-      val written = scala.collection.mutable.Map.empty[(String, String), Long]
       val deferred = scala.collection.mutable.ListBuffer.empty[(String, DataFrame)]
       val swings = scala.collection.mutable.ListBuffer.empty[(String, Map[String, Long] => Unit)]
       synced.foreach { case (rt, _, system, source) =>
@@ -380,23 +373,17 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
           case None =>
             reconcile(source(), None, store.snapshotForSubjects(spark, rt, cohortSubjects(ids)))
         }
-        scope match {
-          // written before the next type reads the store; pinned so the
-          // dump and the write read the store once
-          case Scope.Full(Scope.PerType) => Checkpoints.pinned(actions) { pinned =>
-            dump(rt, pinned)
-            written ++= store.applyActions(rt, pinned).map { case (a, n) => (rt, a) -> n }
-          }
-          case _ => dump(rt, actions); deferred += rt -> actions
-        }
+        dump(rt, actions)
+        deferred += rt -> actions
       }
-      if (deferred.nonEmpty)
-        written ++= store.applyActionsMixed(deferred.map { case (rt, df) =>
+      val written =
+        if (deferred.isEmpty) Map.empty[(String, String), Long]
+        else store.applyActionsMixed(deferred.map { case (rt, df) =>
           df.select(lit(rt).as("resource_type"),
             col("key"), col("id"), col("json"), col("merge_action"))
         }.reduce(_.unionByName(_)))
       def countsOf(rt: String): Map[String, Long] =
-        written.toMap.collect { case ((`rt`, a), n) => a -> n }
+        written.collect { case ((`rt`, a), n) => a -> n }
       // each swing writes its own type's directory
       CnicsPipeline.concurrently(swings.toSeq.map { case (rt, swing) => () => swing(countsOf(rt)) })
       synced.foldLeft(Map.empty[(String, String), Long]) { case (audit, (rt, _, _, _)) =>

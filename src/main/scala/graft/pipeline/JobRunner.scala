@@ -37,7 +37,7 @@ object JobRunner {
       inputsFor: (String, String) => CnicsInputs,
       storeFor: (String, String) => FhirStore,
       limit: Int = Int.MaxValue): Seq[JobResult] =
-    syncAll(spark, jobConfigText, inputsFor, storeFor, limit)((_, _) => Scope.Full())
+    syncAll(spark, jobConfigText, inputsFor, storeFor, limit)((_, _) => Scope.Full)
 
   /** Manifest-diffed sync of every (job, site) ([[Scope.Manifest]]), so
     * a nightly re-run whose sources barely changed touches the store

@@ -2087,34 +2087,6 @@ object SimilarityStreamQueries {
               |$dkSqIvfCtes
               |SELECT query_id, cand_id, adist_e6, rnk FROM sivf WHERE rnk <= 3""".stripMargin)),
 
-    // ── Runs the same code as `sq8ivf_store_serve`: the IVF×SQ8
-    //    store's one serve (row-local probe cells + row-local flat SQ8
-    //    LUT, coarse-pruned packed graft_sq8_adc scan, ONE
-    //    payload-distinct heap) accepts batch or streaming probes;
-    //    its MemoryStream run is in VectorStoreSpec. Kept until the
-    //    next registry re-anchor prunes it. ──
-    QueryDef(
-      "sq8ivf_serve_stream",
-      "IVF-SQ8 store streaming-serve plan (row-local cells+LUT, packed kernel) == one-shot IVF-SQ8",
-      (s, d) => {
-        val base = tempStoreDir("graft_sq8ivfstream")
-        val cent = ivfCentroids(s, d)
-        val bounds = sqBounds(s, d)
-        val emb = t(s, d, "embeddings")
-        Seq(0L, 1L).foreach(b =>
-          graft.streaming.VectorStreams.sq8IvfFoldBatch(
-            emb.filter(pmod(col("vec_id"), lit(2)) === b).select("vec_id", "embedding"),
-            base, b, cent, bounds, nAssign = IvfAssign))
-        graft.streaming.VectorStreams.sq8IvfServeFromStore(s, base,
-            emb.filter(col("vec_id") < 32).select("vec_id", "embedding"),
-            k = 3, nprobe = IvfProbe)
-          .select("query_id", "cand_id", "adist_e6", "rnk")
-      },
-      Some(s"""WITH $dkIvfCtes,
-              |$dkSqCtes,
-              |$dkSqIvfCtes
-              |SELECT query_id, cand_id, adist_e6, rnk FROM sivf WHERE rnk <= 3""".stripMargin)),
-
     // ── SQ8 serving off a STANDING store: bounds trained on the
     //    corpus and pinned by the first fold, two sqFoldBatch folds
     //    (odd/even vec_ids) append the 1-byte code index, then
@@ -2128,31 +2100,6 @@ object SimilarityStreamQueries {
       "2-batch SQ8 store fold + pinned-bounds ADC serve == batch sq8_adc_topk",
       (s, d) => {
         val base = tempStoreDir("graft_sq8store")
-        val emb = t(s, d, "embeddings")
-        val bounds = graft.operators.Sq.train(emb, "embedding")
-        graft.streaming.VectorStreams.sqFoldBatch(
-          emb.filter(pmod(col("vec_id"), lit(2)) === 0).select("vec_id", "embedding"),
-          base, 0L, bounds)
-        graft.streaming.VectorStreams.sqFoldBatch(
-          emb.filter(pmod(col("vec_id"), lit(2)) === 1).select("vec_id", "embedding"),
-          base, 1L, bounds)
-        graft.streaming.VectorStreams.sq8ServeFromStore(s, base,
-          emb.filter(col("vec_id") < 32).select("vec_id", "embedding"), 3)
-      },
-      Some(s"""WITH $dkSqCtes
-              |SELECT query_id, cand_id, adist_e6, rnk FROM sadc WHERE rnk <= 3""".stripMargin)),
-
-    // ── Runs the same code as `sq8_store_serve`: the SQ8 store's one
-    //    serve (row-local flat LUT off the broadcast reconstruction
-    //    row, packed graft_sq8_adc scan, ONE bounded heap) accepts
-    //    batch or streaming probes; its MemoryStream run is in
-    //    VectorStoreSpec. Kept until the next registry re-anchor
-    //    prunes it. ──
-    QueryDef(
-      "sq8_serve_stream",
-      "SQ8 store streaming-serve plan (row-local LUT, packed kernel, one heap) == batch ADC",
-      (s, d) => {
-        val base = tempStoreDir("graft_sq8stream")
         val emb = t(s, d, "embeddings")
         val bounds = graft.operators.Sq.train(emb, "embedding")
         graft.streaming.VectorStreams.sqFoldBatch(
@@ -2982,42 +2929,6 @@ object SimilarityStreamQueries {
               |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rnk
               |FROM scored QUALIFY rnk <= 3""".stripMargin)),
 
-    // ── Runs the same code as `ivf_store_serve`: the IVF store's one
-    //    serve (row-local probe-cell ranking over the one-row broadcast
-    //    quantizer, ONE distinct bounded heap) accepts batch or
-    //    streaming probes; its MemoryStream run is in VectorStoreSpec.
-    //    Kept until the next registry re-anchor prunes it. ──
-    QueryDef(
-      "ivf_serve_stream",
-      "IVF store streaming-serve plan (row-local probe cells, one heap) == one-shot IVF",
-      (s, d) => {
-        val base = tempStoreDir("graft_ivfstream")
-        val cent = ivfCentroids(s, d)
-        val emb = t(s, d, "embeddings")
-        graft.streaming.VectorStreams.ivfFoldBatch(
-          emb.filter(pmod(col("vec_id"), lit(2)) === 0), base, 0L, cent,
-          nAssign = IvfAssign)
-        graft.streaming.VectorStreams.ivfFoldBatch(
-          emb.filter(pmod(col("vec_id"), lit(2)) === 1), base, 1L, cent,
-          nAssign = IvfAssign)
-        graft.streaming.VectorStreams.ivfServeFromStore(
-            s, base, emb.filter(col("vec_id") < 32), k = 3, nprobe = IvfProbe)
-          .select("query_id", "cand_id", "cosine", "rnk")
-      },
-      Some(s"""WITH $dkIvfCtes,
-              |cells AS (SELECT vec_id, embedding, nrm, cell FROM rk WHERE rn = 1),
-              |probes AS (SELECT vec_id AS query_id, cell FROM rk WHERE vec_id < 32 AND rn <= $IvfProbe),
-              |posts AS (SELECT vec_id AS cand_id, cell FROM rk WHERE rn <= $IvfAssign),
-              |pairs AS (SELECT DISTINCT p.query_id, c.cand_id
-              |  FROM probes p JOIN posts c ON c.cell = p.cell AND c.cand_id <> p.query_id),
-              |scored AS (SELECT pr.query_id, pr.cand_id,
-              |  round(${dkDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm), 8) AS cosine
-              |  FROM pairs pr JOIN cells c ON c.vec_id = pr.cand_id
-              |  JOIN cells q ON q.vec_id = pr.query_id)
-              |SELECT query_id, cand_id, cosine,
-              |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rnk
-              |FROM scored QUALIFY rnk <= 3""".stripMargin)),
-
     // ── Product quantization (third ANN family): trained codebooks,
     //    the compressed code index, ADC search over codes only, and an
     //    exactly-measured recall row. See the PQ block comment above. ──
@@ -3229,35 +3140,6 @@ object SimilarityStreamQueries {
       "standing IVF-PQ store: 2-batch fold + pinned-model ADC serve == one-shot IVF-ADC",
       (s, d) => {
         val base = tempStoreDir("graft_ivfpqstore")
-        val cent = ivfCentroids(s, d)
-        val books = pqCentroids(s, d)
-        val emb = t(s, d, "embeddings")
-        graft.streaming.VectorStreams.ivfPqFoldBatch(
-          emb.filter(pmod(col("vec_id"), lit(2)) === 0), base, 0L, cent, books,
-          nAssign = IvfAssign, pqM = PqM, pqSub = PqSub)
-        graft.streaming.VectorStreams.ivfPqFoldBatch(
-          emb.filter(pmod(col("vec_id"), lit(2)) === 1), base, 1L, cent, books,
-          nAssign = IvfAssign, pqM = PqM, pqSub = PqSub)
-        graft.streaming.VectorStreams.ivfPqServeFromStore(
-            s, base, emb.filter(col("vec_id") < 32), k = 3, nprobe = IvfProbe)
-          .select("query_id", "cand_id", "adist_e6", "rnk")
-      },
-      Some(s"""WITH $dkIvfCtes,
-              |${dkPqCtes()},
-              |$dkIvfAdcCtes
-              |SELECT query_id, cand_id, adist_e6, rnk FROM ivfadc WHERE rnk <= 3""".stripMargin)),
-
-    // ── Runs the same code as `ivfpq_store_serve`: the IVF×PQ store's
-    //    one serve (row-local probe cells + row-local flat LUT off the
-    //    broadcast codeword grid, packed graft_adc_sum scan, ONE
-    //    payload-distinct heap) accepts batch or streaming probes; its
-    //    MemoryStream run is in VectorStoreSpec. Kept until the next
-    //    registry re-anchor prunes it. ──
-    QueryDef(
-      "ivfpq_serve_stream",
-      "IVF-PQ store streaming-serve plan (row-local cells+LUT, packed kernel) == one-shot IVF-ADC",
-      (s, d) => {
-        val base = tempStoreDir("graft_ivfpqstream")
         val cent = ivfCentroids(s, d)
         val books = pqCentroids(s, d)
         val emb = t(s, d, "embeddings")

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.model.CnicsFixtures
-import graft.pipeline.{CnicsPipeline, Scope}
+import graft.pipeline.CnicsPipeline
 import graft.sources.CnicsCsv
 
 /** Driver-visible rows for the source/sink operators that were
@@ -124,10 +124,12 @@ object SourceSinkQueries {
     //    server that ENFORCES referential integrity (a PUT whose
     //    subject resolves neither in store nor bundle 400s the whole
     //    bundle atomically). Pinned: tx run 1 inserts / run 2 updates
-    //    exactly like the two-stage run, end state byte-equal to a
-    //    control server written by the two-stage path, ZERO pipeline
-    //    bundles rejected, and a hand-built orphan-child probe bundle
-    //    IS rejected (the strict gate is real) without landing. ──
+    //    exactly like the two-stage run, end state equal to a control
+    //    sync into the InMemoryFhirStore double (whose default
+    //    applyActionsMixed writes per type, parent first: the
+    //    reference's order), ZERO pipeline bundles rejected, and a
+    //    hand-built orphan-child probe bundle IS rejected (the strict
+    //    gate is real) without landing. ──
     QueryDef(
       "cnics_http_tx_audit",
       "one-stage mixed-type transaction write == two-stage run on a strict-referential-integrity server",
@@ -135,19 +137,21 @@ object SourceSinkQueries {
         import s.implicits._
         val srvT = new graft.sinks.FhirFixtureServer(strictReferences = true)
         val portT = srvT.start()
-        val srvC = new graft.sinks.FhirFixtureServer()
-        val portC = srvC.start()
         try {
           val storeT = new graft.sinks.HttpFhirStore(s"http://localhost:$portT", maxRetries = 2)
-          def tx() = new CnicsPipeline(s, CnicsFixtures.demo(s), storeT, "uw")
-            .sync(scope = Scope.Full(Scope.OneJob))
+          def tx() = new CnicsPipeline(s, CnicsFixtures.demo(s), storeT, "uw").sync()
           val tx1 = tx()
           val tx2 = tx()
           val pipelineRejects = srvT.refRejects.get().toLong
-          val storeC = new graft.sinks.HttpFhirStore(s"http://localhost:$portC", maxRetries = 2)
-          new CnicsPipeline(s, CnicsFixtures.demo(s), storeC, "uw")
-            .sync(scope = Scope.Full(Scope.PerType))
-          val endStateEqual = if (srvT.data.equals(srvC.data)) 1L else 0L
+          val control = new graft.sinks.InMemoryFhirStore
+          new CnicsPipeline(s, CnicsFixtures.demo(s), control, "uw").sync()
+          // the server keeps bodies re-serialized: compare canonical JSON
+          import scala.jdk.CollectionConverters._
+          val served = srvT.data.asScala.toMap.map { case (path, body) =>
+            path -> graft.model.JsonCanon.canonical(body) }
+          val expected = control.data.map { case ((rt, _), (id, json)) =>
+            s"/$rt/$id" -> graft.model.JsonCanon.canonical(json) }.toMap
+          val endStateEqual = if (served == expected) 1L else 0L
           // negative probe: an orphan child PUT must 400 atomically
           val badBundle =
             """{"resourceType":"Bundle","type":"transaction","entry":[
@@ -174,7 +178,7 @@ object SourceSinkQueries {
             ("tx", "ref", "bad_probe_not_stored", probeNotStored),
             ("store", "Patient", "count", srvT.count("Patient")))
           rows.toDF("phase", "resource_type", "action", "n")
-        } finally { srvT.stop(); srvC.stop() }
+        } finally srvT.stop()
       },
       Some("""SELECT * FROM (VALUES
              | ('tx1', 'Patient', 'insert', CAST(2 AS BIGINT)), ('tx1', 'Patient', 'update', 0), ('tx1', 'Patient', 'delete', 0),

@@ -461,7 +461,12 @@ class HttpFhirStore(baseUrl: String, maxRetries: Int = 5, bundleSize: Int = 100,
           URI.create(s"$baseUrl/$resourceType?_summary=count&_format=json$idq")).GET())
         val t = HttpFhirStore.mapper.readTree(r.body()).path("total")
         if (t.isNumber) t.asLong() else -1L
-      } catch { case _: Throwable => -1L }
+      } catch {
+        // an interrupt stops the snapshot; only a failed count (a 400
+        // from a server without `_summary=count`) falls back
+        case e: InterruptedException => Thread.currentThread.interrupt(); throw e
+        case scala.util.control.NonFatal(_) => -1L
+      }
     if (total < 0L) return snapshotCursor(spark, resourceType, idq)
     if (total == 0L)
       return spark.createDataFrame(

@@ -302,7 +302,7 @@ object DocStreams {
     *
     * Cost per batch: model serving is model-table-sized; the dup
     * probe's joins are batch-keyed but its store-side inputs are one
-    * scan of the standing band/hash tables each (CurationSoak: 13.8 s
+    * scan of the standing band/hash tables each (`Soak curation_ingest`: 13.8 s
     * for a 5 000-doc batch at a 240 000-doc store) — the same
     * batch-vs-history lookup the fold itself performs; a cluster
     * deployment would bucket the band table to turn that scan into

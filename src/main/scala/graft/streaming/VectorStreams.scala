@@ -1034,7 +1034,7 @@ object VectorStreams {
     * carries one identical cosine and collapses in O(k) aggregation
     * state — the [[annServe]] discipline). Ties (cosine desc, cand_id)
     * match the batch `sim_ivf_topk` window row for row (oracle-pinned
-    * by `ivf_store_serve` / `ivf_serve_stream`). The pre-filter
+    * by `ivf_store_serve`). The pre-filter
     * `predicate` is stream-legal: it and the semi-prune sit on the
     * store side of the join.
     *
@@ -1522,7 +1522,7 @@ object VectorStreams {
     *     layout — m rows per vector of pure storage tax, and a serve
     *     join that materialized |cand|·m rows where the codegen'd
     *     `graft_adc_sum` kernel touches |cand| (the round-12 verdict's
-    *     one scale-weak finding; SqSoak's packed-vs-exploded ratio is
+    *     one scale-weak finding; `Soak sq8_packed_scan`'s packed-vs-exploded ratio is
     *     96× at 500k vectors);
     *   - `vectors/batch=N/` — (vec_id, embedding, nrm) once per
     *     vector: the exact-rerank side (read only for shortlists);
@@ -1619,7 +1619,7 @@ object VectorStreams {
     *     cells carries one identical integer sum.
     *
     * Exactly the batch `pq_ivf_adc_topk` total order (oracle-pinned by
-    * `ivfpq_store_serve` / `ivfpq_serve_stream`; integer ADC sums are
+    * `ivfpq_store_serve`; integer ADC sums are
     * order-insensitive, so the exploded-form oracle applies verbatim).
     *
     * Output: (query_id, cand_id, adist_e6, rnk); update mode on a stream. */
@@ -2057,7 +2057,7 @@ object VectorStreams {
     *     SQ8 index — one row per vector, 1 byte of information per
     *     dimension, ALL a serve scan reads beyond the LUT (4× smaller
     *     than float32; the packed layout is what the codegen'd
-    *     `graft_sq8_adc` kernel scans — SqSoak measures it 96× the
+    *     `graft_sq8_adc` kernel scans — `Soak sq8_packed_scan` measures it 96× the
     *     row-exploded join at 500k vectors);
     *   - `vectors/batch=N/` — (vec_id, embedding, nrm) once per
     *     vector: the exact-rerank side;
@@ -2114,8 +2114,8 @@ object VectorStreams {
     * pinned packed code row scores in one codegen'd `graft_sq8_adc`
     * kernel call (|Q|·N rows, never |Q|·N·dim), and ONE bounded heap
     * ranks by (adist_e6 asc, cand_id asc) — exactly the batch
-    * `sq8_adc_topk` total order (oracle-pinned by `sq8_store_serve` /
-    * `sq8_serve_stream`; integer ADC sums are order-insensitive so the
+    * `sq8_adc_topk` total order (oracle-pinned by `sq8_store_serve`;
+    * integer ADC sums are order-insensitive so the
     * exploded oracle applies verbatim). The scan is |codes| kernel
     * calls per probe (per micro-batch on a stream) — the flat store's
     * full-scan contract.
@@ -2234,7 +2234,7 @@ object VectorStreams {
     * ranks by (adist_e6 asc, cand_id asc) — a candidate reached
     * through several probed cells carries one identical integer sum.
     * Exactly the batch `sq8_ivf_adc_topk` total order (oracle-pinned
-    * by `sq8ivf_store_serve` / `sq8ivf_serve_stream`; integer ADC sums
+    * by `sq8ivf_store_serve`; integer ADC sums
     * are order-insensitive so the exploded-form oracle applies
     * verbatim).
     *

@@ -22,12 +22,12 @@ object SoakCorpus {
           CAST(((pmod(id * 2654435761L + d * 7919L, 2001L) - 1000L) / 1000.0D)
                / (1.0D + d / 8.0D) AS FLOAT))""")
           .as("embedding"))
-      .repartition(64)
+      .repartition(partitions(nVecs))
       .localCheckpoint(true)
 
   /** FLAT corpus: undamped components (near-isotropic — the
     * adversarial case for prefix/residual methods), with the label
-    * column EmbSoak's closed forms group by. (vec_id, label,
+    * column `emb_stats`'s closed forms group by. (vec_id, label,
     * embedding). */
   def flat(spark: SparkSession, nVecs: Long): DataFrame =
     spark.range(0, nVecs)
@@ -35,8 +35,13 @@ object SoakCorpus {
         expr("""transform(sequence(0, 63), d ->
           CAST((pmod(id * 2654435761L + d * 7919L, 2001L) - 1000L) / 1000.0D AS FLOAT))""")
           .as("embedding"))
-      .repartition(64)
+      .repartition(partitions(nVecs))
       .localCheckpoint(true)
+
+  /** 64 partitions from 256k vectors up (the recorded soak sizes),
+    * fewer below, one per 4096 vectors: a toy corpus is not spread
+    * over 64 near-empty tasks per stage. */
+  private def partitions(nVecs: Long): Int = math.min(64L, math.max(1L, nVecs / 4096)).toInt
 
   def timed[T](f: => T): (T, Double) = {
     val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
@@ -51,6 +56,43 @@ object SoakCorpus {
     * cosine-family serve output shape. */
   def rank4Double(df: DataFrame): Set[(Long, Long, Double, Int)] = df
     .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+
+  /** Exact top-`k` (query_id, cand_id) of a full scan of `cands`
+    * against `probes`, both (vec_id, embedding), largest `score`
+    * first: a SQL expression over the DOUBLE arrays `q` and `c`. A
+    * probe never ranks itself. The recall denominator of the vector
+    * soaks. */
+  def exactTopK(probes: DataFrame, cands: DataFrame, score: String, k: Int): Set[(Long, Long)] = {
+    val topk = udaf(graft.functions.TopKAgg.longs(k))
+    val dbl = expr("transform(embedding, v -> CAST(v AS DOUBLE))")
+    cands.select(col("vec_id").as("cand_id"), dbl.as("c"))
+      .crossJoin(broadcast(probes.select(col("vec_id").as("query_id"), dbl.as("q"))))
+      .filter(col("query_id") =!= col("cand_id"))
+      .groupBy("query_id")
+      .agg(topk(expr(score).cast("double"), col("cand_id")).as("tk"))
+      .select(col("query_id"), explode(expr("transform(tk, e -> e._2)")).as("cand_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  }
+
+  /** Per query, the `k` rows of (query_id, cand_id, `score`) with the
+    * smallest integer `score`, as (query_id, cand_id, score, rnk): the
+    * bounded-heap ranking of the ADC comparator plans. */
+  def smallestK(scored: DataFrame, score: String, k: Int): DataFrame = {
+    val topk = udaf(graft.functions.TopKAgg.longs(k))
+    scored.groupBy("query_id")
+      .agg(topk((-col(score)).cast("double"), col("cand_id")).as("tk"))
+      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+      .select(col("query_id"), col("e._2").as("cand_id"),
+        (-col("e._1")).cast("long").as(score), (col("pos") + 1).cast("int").as("rnk"))
+  }
+
+  /** Replica slices [from, until) of `base`: slice s shifts `idCol` by
+    * s·10⁶ (fixture ids are below 10⁶), the other columns as they are.
+    * A standing corpus is slices [0, n), its next crawl slice n. */
+  def replicas(base: DataFrame, idCol: String, from: Long, until: Long): DataFrame =
+    base.sparkSession.range(from, until).crossJoin(base)
+      .select((col(idCol) + col("id") * 1000000L).as(idCol) +:
+        base.columns.filterNot(_ == idCol).map(col).toSeq: _*)
 
   /** Recursive on-disk size of a store directory. */
   def dirBytes(p: String): Long = {

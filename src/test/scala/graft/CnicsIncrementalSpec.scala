@@ -328,7 +328,7 @@ class CnicsIncrementalSpec extends AnyFunSuite {
     }
     val (mAudit, mData) = inMemory(Scope.Manifest(mdir()))
     assert(mAudit === expected)
-    assert((mAudit, mData) === inMemory(Scope.Full()))
+    assert((mAudit, mData) === inMemory(Scope.Full))
 
     def http(scope: Scope) = overHttp() { (srv, store) =>
       new CnicsPipeline(spark, demo, store, "uw").sync()
@@ -340,7 +340,7 @@ class CnicsIncrementalSpec extends AnyFunSuite {
     val (hAudit, hData, hGets) = http(Scope.Manifest(mdir()))
     assert(hAudit === expected)
     assert(hGets === 4) // Patient, then every child type's lookup
-    val (fAudit, fData, _) = http(Scope.Full())
+    val (fAudit, fData, _) = http(Scope.Full)
     assert(hAudit === fAudit && hData === fData)
   }
 

@@ -468,8 +468,7 @@ class CnicsPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     def seeded(): String = {
       val base = java.nio.file.Files.createTempDirectory("graft_pqmixed").toString
-      new CnicsPipeline(spark, inputs, new graft.sinks.ParquetFhirStore(base), "uw")
-        .sync(scope = graft.pipeline.Scope.Full(graft.pipeline.Scope.PerType))
+      new CnicsPipeline(spark, inputs, new graft.sinks.ParquetFhirStore(base), "uw").sync()
       base
     }
     val (mixedBase, perTypeBase) = (seeded(), seeded())
@@ -502,26 +501,26 @@ class CnicsPipelineSpec extends AnyFunSuite {
     assert(contents(mixedBase, "Observation").map(_._1) === Set("lab-2"))
   }
 
-  test("parquet store: PerType and OneJob Full syncs end in the same store and audit") {
+  test("parquet store: a parquet Full sync ends where an InMemoryFhirStore Full sync does") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    import graft.pipeline.Scope
     val changed = inputs.copy(
       patient = inputs.patient.filter(col("PatientId") =!= 2L))
-    def run(write: Scope.Write) = {
-      val base = java.nio.file.Files.createTempDirectory("graft_pqwrite").toString
-      val pq = new graft.sinks.ParquetFhirStore(base)
-      new CnicsPipeline(spark, inputs, pq, "uw").sync(scope = Scope.Full(write))
-      val audit = new CnicsPipeline(spark, changed, pq, "uw").sync(scope = Scope.Full(write))
-      (audit, Seq("Patient", "Condition", "MedicationRequest", "Observation").map { rt =>
-        rt -> spark.read.parquet(s"$base/$rt").as[(String, String, String)].collect().toSet
-      }.toMap)
+    val types = Seq("Patient", "Condition", "MedicationRequest", "Observation")
+    val base = java.nio.file.Files.createTempDirectory("graft_pqwrite").toString
+    val pq = new graft.sinks.ParquetFhirStore(base)
+    new CnicsPipeline(spark, inputs, pq, "uw").sync()
+    val pqAudit = new CnicsPipeline(spark, changed, pq, "uw").sync()
+    val mem = new graft.sinks.InMemoryFhirStore
+    new CnicsPipeline(spark, inputs, mem, "uw").sync()
+    val memAudit = new CnicsPipeline(spark, changed, mem, "uw").sync()
+    assert(pqAudit(("Patient", "delete")) === 1L)
+    assert(pqAudit === memAudit)
+    types.foreach { rt =>
+      val pqRows = spark.read.parquet(s"$base/$rt").as[(String, String, String)].collect().toSet
+      val memRows = mem.data.collect { case ((`rt`, key), (id, json)) => (key, id, json) }.toSet
+      assert(pqRows === memRows, rt)
     }
-    val (perTypeAudit, perTypeStore) = run(Scope.PerType)
-    val (oneJobAudit, oneJobStore) = run(Scope.OneJob)
-    assert(perTypeAudit(("Patient", "delete")) === 1L)
-    assert(oneJobAudit === perTypeAudit)
-    assert(oneJobStore === perTypeStore)
   }
 
   test("parquet store: a Full sync with a departed patient writes each type dir once") {

@@ -61,6 +61,35 @@ class HttpSendSpec extends AnyFunSuite {
     }
   }
 
+  test("an interrupted snapshot count rethrows and starts no cursor walk") {
+    val urls = new ConcurrentLinkedQueue[String]()
+    val (arrived, answer) = (new CountDownLatch(1), new CountDownLatch(1))
+    stub { ex =>
+      urls.add(ex.getRequestURI.toString)
+      arrived.countDown()
+      answer.await(3, TimeUnit.SECONDS)
+      (200, Nil, """{"resourceType":"Bundle","total":1}""")
+    } { url =>
+      @volatile var outcome: (Throwable, Boolean) = null
+      val caller = new Thread(() =>
+        try new HttpFhirStore(url, maxRetries = 3).snapshot(spark, "Patient")
+        catch { case e: Throwable => outcome = (e, Thread.currentThread.isInterrupted) })
+      caller.start()
+      // interrupted while it waits for the count reply
+      assert(arrived.await(10, TimeUnit.SECONDS))
+      Thread.sleep(200)
+      caller.interrupt()
+      caller.join(2000)
+      try {
+        assert(!caller.isAlive, "the snapshot outlived its interrupt by 2 s")
+        assert(outcome._1.isInstanceOf[InterruptedException], outcome._1)
+        assert(outcome._2, "the interrupt flag was cleared")
+        Thread.sleep(300) // room for a stray follow-up request to land
+        assert(urls.toArray.toSeq.map(_.toString).forall(_.contains("_summary=count")), urls)
+      } finally answer.countDown()
+    }
+  }
+
   test("a 429's Retry-After HTTP-date is waited out before the re-post") {
     import spark.implicits._
     val served = new java.util.concurrent.ConcurrentHashMap[String, String]()
